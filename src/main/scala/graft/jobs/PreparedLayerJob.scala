@@ -2,7 +2,8 @@ package graft.jobs
 
 import graft.config.PipelineConfig
 import graft.ledger.{RunLedger, RunRecord, RunState}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Prepared-layer promotion: each un-promoted raw run is appended to the
   * stable prepared prefix the catalog table points at, then marked
@@ -22,8 +23,10 @@ import org.apache.spark.sql.SparkSession
   * idempotent (drain twice ≡ drain once).
   *
   * Scale notes: the per-run loop is control-plane iteration (runs are few);
-  * each iteration is one distributed Spark job. The count comes from the
-  * raw run being promoted — parquet footer metadata, no extra data scan.
+  * each iteration is one distributed Spark job — the append itself. The
+  * run's schema is one driver-side footer read ([[rawRunDf]]), and the
+  * promoted count is an Observation riding the append (the log commit's
+  * own, or the directory append's).
   */
 object PreparedLayerJob {
   val JobName = "prepared_layer_job"
@@ -39,31 +42,40 @@ object PreparedLayerJob {
     // schema explicitly — file schema from the run's own footers plus
     // `ETL_PART_KEY string` — bypasses inference entirely, so the run id
     // round-trips as the literal path string.
-    val df = rawRunDf(spark,
-      s"${rawRecord.rawBucket}/${rawRecord.rawFolder}", rawRecord.partition_key)
-    val rows = cfg.dedupColumn match {
-      case Some(key) => promoteDeduped(spark, cfg, df, key, rawRecord.partition_key)
-      case None if cfg.useLog =>
-        // log-backed prepared layer: the run commits atomically, keyed
-        // on its run id — a drain that crashed between this commit and
-        // the ledger append below cannot re-append the run on rerun
-        // (the txn watermark detects the replay); the bare directory
-        // only gets at-least-once from the ledger's pending scan.
-        // The committed snapshot already carries the exact staged row
-        // count (its Observation rode the write) — no counting job; a
-        // detected replay appended nothing and reports 0
-        val log = graft.table.PreparedTable.log(spark, cfg)
-        log.appendRun(df, runTxnKey(rawRecord.partition_key)) match {
-          case Some(s) =>
-            if (s.parent == 0) s.rows else s.rows - log.snapshot(s.parent).rows
-          case None => 0L
-        }
-      case None =>
-        df.write
-          .option("compression", "snappy")
-          .mode("append") // successive runs accumulate under the cataloged prefix
-          .parquet(cfg.preparedPath)
-        df.count() // footer-metadata count of the promoted run
+    // a run the ledger records with 0 rows landed no files: it promotes
+    // as a defined no-op (nothing read, nothing appended, PREPARED
+    // COMPLETED with 0), so an empty snapshot never blocks the runs
+    // pending behind it. Any other run must still have its files — a
+    // missing run directory throws and the run stays pending
+    val rows = if (rawRecord.rawEntryCount == "0") 0L else {
+      val df = rawRunDf(spark,
+        s"${rawRecord.rawBucket}/${rawRecord.rawFolder}", rawRecord.partition_key)
+      cfg.dedupColumn match {
+        case Some(key) => promoteDeduped(spark, cfg, df, key, rawRecord.partition_key)
+        case None if cfg.useLog =>
+          // log-backed prepared layer: the run commits atomically, keyed
+          // on its run id — a drain that crashed between this commit and
+          // the ledger append below cannot re-append the run on rerun
+          // (the txn watermark detects the replay); the bare directory
+          // only gets at-least-once from the ledger's pending scan.
+          // The committed snapshot already carries the exact staged row
+          // count (its Observation rode the write) — no counting job; a
+          // detected replay appended nothing and reports 0
+          val log = graft.table.PreparedTable.log(spark, cfg)
+          log.appendRun(df, runTxnKey(rawRecord.partition_key)) match {
+            case Some(s) =>
+              if (s.parent == 0) s.rows else s.rows - log.snapshot(s.parent).rows
+            case None => 0L
+          }
+        case None =>
+          // the count rides the append (as the raw write's does)
+          val obs = new Observation(s"graft_promote_${java.util.UUID.randomUUID()}")
+          df.observe(obs, count(lit(1)).as("rows")).write
+            .option("compression", "snappy")
+            .mode("append") // successive runs accumulate under the cataloged prefix
+            .parquet(cfg.preparedPath)
+          obs.get("rows").asInstanceOf[Long]
+      }
     }
     ledger.append(rawRecord.copy(
       state = RunState.PreparedCompleted,
@@ -100,14 +112,33 @@ object PreparedLayerJob {
 
   /** One raw run as the frame promotion appends: leaf-directory read
     * with the audit key re-materialized as a literal string column (see
-    * the partition-inference note on [[promote]]). */
+    * the partition-inference note on [[promote]]).
+    *
+    * The file schema comes from ONE part-file footer read on the driver,
+    * converted under the session's parquet conf — exactly what Spark's
+    * own inference does with `mergeSchema` off (one footer, same
+    * converter), minus the Spark job it launches to do it. The leaf
+    * directory holds data columns only, and every file of a run comes
+    * from one write, so any footer speaks for the run. A missing run
+    * directory or one with no data file throws, as inference did. */
   private[graft] def rawRunDf(spark: SparkSession, rawTable: String,
       runId: String): org.apache.spark.sql.DataFrame = {
-    val rawPath = s"$rawTable/ETL_PART_KEY=$runId"
-    val fileSchema = spark.read.parquet(rawPath).schema // leaf dir: data columns only
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val rawPath = new org.apache.hadoop.fs.Path(s"$rawTable/ETL_PART_KEY=$runId")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val f = RewriteSwap.dataFiles(rawPath.getFileSystem(conf), rawPath) // throws when missing
+      .sortBy(_.getPath.getName).headOption.getOrElse(
+        throw new java.io.FileNotFoundException(s"raw run $runId has no data file under $rawPath"))
+    val footer = new org.apache.parquet.hadoop.Footer(f.getPath,
+      ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    val fileSchema = ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     spark.read.option("basePath", rawTable)
-      .schema(fileSchema.add("ETL_PART_KEY", org.apache.spark.sql.types.StringType))
-      .parquet(rawPath)
+      .schema(org.apache.spark.sql.GraftBridge.asNullable(fileSchema)
+        .add("ETL_PART_KEY", org.apache.spark.sql.types.StringType))
+      .parquet(rawPath.toString)
   }
 
   private def promoteDeduped(spark: SparkSession, cfg: PipelineConfig,

@@ -3,8 +3,8 @@ package graft.jobs
 import graft.config.PipelineConfig
 import graft.ledger.{RunLedger, RunRecord, RunState}
 import graft.sources.SourceReader
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Metrics returned by a layer job run (the data the reference folds into
   * its audit item, reference: glue src/raw_layer_job.py:196-204). */
@@ -26,10 +26,15 @@ final case class JobMetrics(runId: String, rows: Long, path: String)
   * Scale/perf notes (100 TB design):
   *  - The reference scans the source twice — an uncached `count()` then the
   *    write re-executes the JDBC read (reference: glue src/raw_layer_job.py:158
-  *    vs :164-167). We scan ONCE: write first, then take the audit count
-  *    from the *written* parquet footers (a metadata-bounded job that reads
-  *    zero data columns). This also makes the audit count describe what
+  *    vs :164-167). We scan ONCE, and the audit count rides the write
+  *    itself: an `Observation` counts the rows the write job wrote, so no
+  *    read-back or footer job follows it. The count still describes what
   *    actually landed, which is the stronger audit semantics (SURVEY §7.5).
+  *  - An empty snapshot is a run like any other: it records
+  *    `RAW COMPLETED` with 0 rows and lands no files (a dynamic-partition
+  *    write of no rows creates no partition directory); promotion then
+  *    records it `PREPARED COMPLETED` with 0 (see
+  *    [[PreparedLayerJob.promote]]).
   *  - Failure policy matches the reference: any exception propagates before
   *    the ledger append, so a failed run is invisible downstream
   *    (reference: glue src/raw_layer_job.py:58-60).
@@ -46,15 +51,18 @@ object RawLayerJob {
     // reads of the stable raw prefix get partition pruning on
     // ETL_PART_KEY for free. Dynamic overwrite keeps re-running one
     // runId idempotent without clobbering sibling runs.
-    snapshot.write
+    // a per-write unique name: an Observation name is bound once per plan
+    val obs = new Observation(s"graft_raw_${java.util.UUID.randomUUID()}")
+    snapshot.observe(obs, count(lit(1)).as("rows")).write
       .option("compression", "snappy")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("ETL_PART_KEY")
       .mode("overwrite")
       .parquet(cfg.rawTablePath)
-    // Audit count from the written files: footer metadata only, no re-scan
-    // of the source (fixes the reference's double-scan, BASELINE.md).
-    val rows = spark.read.parquet(path).count()
+    // audit count of the rows written, collected by the write job itself:
+    // no re-scan of the source (fixes the reference's double-scan,
+    // BASELINE.md) and no read-back of the run
+    val rows = obs.get("rows").asInstanceOf[Long]
     ledger.append(RunRecord(
       partition_key = runId,
       job_src = cfg.jobSrc,

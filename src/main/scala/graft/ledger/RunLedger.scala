@@ -118,14 +118,37 @@ final class LocalJsonLedger(val dir: Path) extends RunLedger {
     Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** Every record file parsed on the driver with the ledger's own mapper,
+    * as a local Dataset: `pending`/`collect` over it run no Spark job.
+    * Reads what Spark's JSON reader over the directory would (the
+    * streaming [[graft.orchestrate.Orchestrator.watch]] still uses it):
+    * hidden `.`/`_` files (in-flight temp files) are skipped, a missing
+    * field reads null, an empty file holds no record and a malformed one
+    * reads as an all-null record (the reader's PERMISSIVE mode). */
   override def records(spark: SparkSession): Dataset[RunRecord] = {
     import spark.implicits._
     val listing = Files.list(dir)
-    val hasAny =
-      try listing.iterator().asScala.exists(_.toString.endsWith(".json"))
+    val files =
+      try listing.iterator().asScala.filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".json") && !n.startsWith(".") && !n.startsWith("_")
+      }.toVector
       finally listing.close() // Files.list holds an fd until closed
-    if (!hasAny) spark.emptyDataset[RunRecord]
-    else spark.read.schema(RunLedger.schema)
-      .json(dir.toString + "/*.json").as[RunRecord]
+    spark.createDataset(files.flatMap(parse))
+  }
+
+  private def parse(file: Path): Option[RunRecord] =
+    scala.util.Try(mapper.readTree(file.toFile)).toOption match {
+      case Some(n) if n.isMissingNode => None
+      case Some(n) if n.isObject => Some(record(n))
+      case _ => Some(record(mapper.createObjectNode()))
+    }
+
+  private def record(n: com.fasterxml.jackson.databind.JsonNode): RunRecord = {
+    def f(name: String): String = Option(n.get(name)).filterNot(_.isNull)
+      .map(v => if (v.isTextual) v.textValue else v.toString).orNull
+    RunRecord(f("partition_key"), f("job_src"), f("state"), f("rawBucket"),
+      f("rawFolder"), f("rawJobName"), f("rawEntryCount"), f("preparedBucket"),
+      f("preparedFolder"), f("preparedJobName"), f("preparedEntryCount"))
   }
 }

@@ -182,12 +182,17 @@ object Orchestrator {
   }
 
   /** Full medallion pass for one pipeline: ingest + drain + catalog.
-    * Exercises SURVEY §2.1 ops #1-9/#13-15 in one call (§7.2). */
+    * Exercises SURVEY §2.1 ops #1-9/#13-15 in one call (§7.2).
+    * Registers the catalog name exactly once: [[drain]] already
+    * registers when it promotes, so this registers only when the drain
+    * promoted nothing (a re-run of an already-promoted run id), keeping
+    * the returned name readable either way. Returns the fully-qualified
+    * name. */
   def runEndToEnd(spark: SparkSession, cfg: PipelineConfig, source: SourceReader,
       ledger: RunLedger, runId: String): String = {
     ingest(spark, cfg, source, ledger, runId)
-    drain(spark, cfg, ledger)
-    CatalogRegistrar.register(spark, cfg)
+    if (drain(spark, cfg, ledger).isEmpty) CatalogRegistrar.register(spark, cfg)
+    else CatalogRegistrar.name(cfg)
   }
 
   /** Event-driven promotion: watch the ledger directory as a stream; for

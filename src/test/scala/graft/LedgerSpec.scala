@@ -66,6 +66,40 @@ class LedgerSpec extends AnyFunSuite {
     }
   }
 
+  test("property: records equals Spark's JSON reader over the directory, for any history") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val field = Gen.oneOf(Gen.const(""), Gen.alphaNumStr.map(_.take(6)))
+    val rec = for {
+      k <- Gen.chooseNum(1, 6).map(i => s"run$i")
+      src <- Gen.oneOf("tableA", "tableB")
+      st <- Gen.oneOf(RunState.RawCompleted, RunState.PreparedCompleted)
+      n <- Gen.chooseNum(0L, 1000000L)
+      prep <- field
+    } yield raw(k, src).copy(state = st, rawEntryCount = n.toString,
+      preparedEntryCount = prep)
+    val hist = Gen.choose(0, 8).flatMap(Gen.listOfN(_, rec))
+    (1 to 25).foreach { i =>
+      val events = hist.pureApply(Gen.Parameters.default, Seed(i.toLong))
+      val l = freshLedger()
+      events.foreach(l.append)
+      // what the reader must skip or read as Spark does: an in-flight
+      // temp file, `_`-prefixed metadata, a record missing fields, a
+      // malformed file and an empty one
+      Files.writeString(l.dir.resolve(s".tmp-$i.json"), """{"partition_key":"ghost"}""")
+      Files.writeString(l.dir.resolve(s"_meta-$i.json"), """{"partition_key":"meta"}""")
+      if (i % 2 == 0) Files.writeString(l.dir.resolve(s"partial-$i.json"),
+        """{"partition_key":"runP","job_src":"tableA","state":"RAW COMPLETED"}""")
+      if (i % 3 == 0) Files.writeString(l.dir.resolve(s"bad-$i.json"), "{not json")
+      if (i % 5 == 0) Files.writeString(l.dir.resolve(s"empty-$i.json"), "")
+      val got = l.records(spark).collect().toSeq
+      val want = spark.read.schema(graft.ledger.RunLedger.schema)
+        .json(l.dir.toString).as[RunRecord].collect().toSeq
+      val order = (r: RunRecord) => r.productIterator.map(String.valueOf).mkString("|")
+      assert(got.sortBy(order) == want.sortBy(order), s"seed=$i events=$events")
+    }
+  }
+
   test("RunId formats the injected clock in US/Eastern (reference format)") {
     // 2026-01-01T05:00:00Z == 2026-01-01T00:00:00 EST
     val clock = Clock.fixed(Instant.parse("2026-01-01T05:00:00Z"), ZoneOffset.UTC)

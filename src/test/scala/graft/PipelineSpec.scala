@@ -568,4 +568,162 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(cfg.preparedPath).count() == fixtureRows(spark))
     assert(ledger.pending(spark, "lineitem").isEmpty)
   }
+
+  private def declaredColumns(cfg: PipelineConfig) =
+    cfg.schema.map(_.name) :+ "ETL_PART_KEY"
+
+  /** A source with the fixture's schema and no rows: one empty
+    * partition, or no partition at all. */
+  private def emptySource(zeroPartitions: Boolean) = new SourceReader {
+    override def read(s: SparkSession): DataFrame =
+      if (zeroPartitions)
+        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          src.read(s).schema)
+      else src.read(s).limit(0)
+  }
+
+  Seq(PipelineConfig.FormatDir, PipelineConfig.FormatLog).foreach { fmt =>
+    test(s"empty snapshots ($fmt): RAW and PREPARED COMPLETED with 0 rows; later runs still promote") {
+      val spark = TestSpark.spark
+      val tmp = Files.createTempDirectory(s"graft-empty-$fmt-")
+      val cfg = cfgFor(tmp).copy(tableFormat = fmt)
+      val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+      val runs = Seq("e1" -> emptySource(zeroPartitions = true), "r2" -> src,
+        "e3" -> emptySource(zeroPartitions = false), "r4" -> src)
+      runs.foreach { case (run, source) =>
+        val table = Orchestrator.runEndToEnd(spark, cfg, source, ledger, run)
+        // readable after every cycle, the empty first one included
+        assert(spark.table(table).schema.fieldNames.toSeq == declaredColumns(cfg))
+        assert(ledger.pending(spark, "lineitem").isEmpty, s"$run left pending runs")
+      }
+      val n = fixtureRows(spark)
+      val counts = ledger.records(spark).collect().toSeq
+        .map(r => (r.partition_key, r.state) -> (r.rawEntryCount, r.preparedEntryCount)).toMap
+      Seq("e1" -> 0L, "r2" -> n, "e3" -> 0L, "r4" -> n).foreach { case (run, rows) =>
+        assert(counts((run, "RAW COMPLETED"))._1 == rows.toString)
+        assert(counts((run, "PREPARED COMPLETED"))._2 == rows.toString)
+      }
+      // an empty run lands no raw files and appends nothing
+      assert(!Files.exists(Path.of(cfg.rawRunPath("e1"))))
+      val byRun = spark.sql(
+        s"SELECT ETL_PART_KEY, count(*) FROM ${graft.catalog.CatalogRegistrar.name(cfg)} GROUP BY 1").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(byRun == Map("r2" -> n, "r4" -> n))
+    }
+  }
+
+  Seq(PipelineConfig.FormatDir, PipelineConfig.FormatLog).foreach { fmt =>
+    test(s"a non-empty run whose raw files are gone fails the drain and stays pending ($fmt)") {
+      val spark = TestSpark.spark
+      val tmp = Files.createTempDirectory(s"graft-lost-raw-$fmt-")
+      val cfg = cfgFor(tmp).copy(tableFormat = fmt)
+      val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+      RawLayerJob.run(spark, cfg, src, ledger, "run1")
+      val runDir = new java.io.File(cfg.rawRunPath("run1"))
+      assert(runDir.isDirectory)
+      org.apache.commons.io.FileUtils.deleteDirectory(runDir)
+      // the ledger says the run has rows: a missing directory is an
+      // error, never a 0-row promotion
+      intercept[java.io.FileNotFoundException](Orchestrator.drain(spark, cfg, ledger))
+      assert(ledger.pending(spark, "lineitem").map(_.partition_key) == Seq("run1"))
+      assert(!ledger.records(spark).collect().exists(_.state == graft.ledger.RunState.PreparedCompleted))
+    }
+  }
+
+  test("a warm log-format runEndToEnd runs 4 Spark jobs (no read-back, inference or second registration)") {
+    // pins the cycle's job profile the way PlanSpec pins plan shapes: the
+    // source's schema inference, the raw write, the log append and the
+    // catalog view's analysis. A raw read-back, a promotion inference
+    // job, a Spark-read ledger or a second registration each add jobs
+    val spark = TestSpark.spark
+    val tmp = Files.createTempDirectory("graft-jobs-")
+    val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
+    val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+    Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run1") // warm-up
+    val tagKey = "graft.test.cycle"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))) match {
+          case Some("cycle") => jobs.add(e.stageInfos.map(_.name).mkString(", "))
+          case Some("marker") => marker.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tagKey, "cycle")
+      Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run2")
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job of the cycle has been counted
+      sc.setLocalProperty(tagKey, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(tagKey, null)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(jobs.size == 4, s"cycle jobs: ${jobs.asScala.mkString("; ")}")
+    assert(spark.table(graft.catalog.CatalogRegistrar.name(cfg)).count() == 2 * fixtureRows(spark))
+  }
+
+  test("re-registering a log view replaces it in place") {
+    val spark = TestSpark.spark
+    val tmp = Files.createTempDirectory("graft-reg-")
+    val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
+    val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+    val ident = org.apache.spark.sql.catalyst.TableIdentifier(cfg.tableName,
+      Some(graft.catalog.CatalogRegistrar.Database))
+    def created = spark.sessionState.catalog.getTableMetadata(ident).createTime
+    Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run1")
+    val first = created
+    Thread.sleep(5) // a dropped-and-recreated view would carry a later time
+    Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run2")
+    graft.catalog.CatalogRegistrar.register(spark, cfg)
+    assert(created == first, "the view was dropped and re-created, not replaced")
+    assert(spark.table(graft.catalog.CatalogRegistrar.name(cfg)).count() == 2 * fixtureRows(spark))
+  }
+
+  test("a table_format switch leaves one readable object with the declared columns") {
+    val spark = TestSpark.spark
+    val tmp = Files.createTempDirectory("graft-switch-")
+    // one catalog name, two prepared layers: the log one and a directory one
+    val logCfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog,
+      preparedRoot = s"$tmp/prepared_log")
+    val dirCfg = logCfg.copy(tableFormat = PipelineConfig.FormatDir,
+      preparedRoot = s"$tmp/prepared_dir")
+    val logLedger = new LocalJsonLedger(tmp.resolve("ledger_log"))
+    val dirLedger = new LocalJsonLedger(tmp.resolve("ledger_dir"))
+    val n = fixtureRows(spark)
+    def check(kind: String, rows: Long): Unit = {
+      val held = spark.catalog.listTables(graft.catalog.CatalogRegistrar.Database)
+        .collect().filter(_.name == logCfg.tableName)
+      assert(held.map(_.tableType).toSeq == Seq(kind))
+      val t = spark.table(graft.catalog.CatalogRegistrar.name(logCfg))
+      assert(t.schema.fieldNames.toSeq == declaredColumns(logCfg))
+      assert(t.count() == rows)
+    }
+    Orchestrator.runEndToEnd(spark, logCfg, src, logLedger, "run1")
+    check("VIEW", n)
+    Orchestrator.runEndToEnd(spark, dirCfg, src, dirLedger, "run1") // log → dir
+    check("EXTERNAL", n)
+    Orchestrator.runEndToEnd(spark, logCfg, src, logLedger, "run2") // dir → log
+    check("VIEW", 2 * n)
+  }
+
+  test("registration after a drain that promoted nothing still yields a readable name") {
+    val spark = TestSpark.spark
+    val tmp = Files.createTempDirectory("graft-rereg-")
+    val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
+    val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+    Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run1")
+    spark.sql(s"DROP VIEW ${graft.catalog.CatalogRegistrar.name(cfg)}")
+    // the same run id again: already promoted, so the drain promotes
+    // nothing and runEndToEnd registers on its own
+    val table = Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run1")
+    assert(spark.table(table).count() == fixtureRows(spark))
+  }
 }
