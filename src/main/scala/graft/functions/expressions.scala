@@ -132,6 +132,22 @@ case class TextFingerprint(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** `child`'s value, typed nullable and never constant-folded. A column
+  * written through it lands as an OPTIONAL parquet field even when its
+  * value is a literal: the parquet writer takes each field's repetition
+  * from the optimized plan, where Spark's own `KnownNullable` folds away
+  * together with its literal. Evaluation is the child's, in codegen too.
+  */
+case class OptionalValue(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = true
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = child.eval(input)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    child.genCode(ctx)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 /** Nearest-centroid assignment for IVF indexing: the cell index (row of
   * `centroids`) whose cosine similarity to the input vector is highest,
   * ties broken toward the lower index.

@@ -2,8 +2,10 @@ package graft.jobs
 
 import graft.config.PipelineConfig
 import graft.ledger.{RunLedger, RunRecord, RunState}
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 
 /** Prepared-layer promotion: each un-promoted raw run is appended to the
   * stable prepared prefix the catalog table points at, then marked
@@ -23,54 +25,81 @@ import org.apache.spark.sql.functions.{count, lit}
   * idempotent (drain twice ≡ drain once).
   *
   * Scale notes: the per-run loop is control-plane iteration (runs are few);
-  * each iteration is one distributed Spark job — the append itself. The
-  * run's schema is one driver-side footer read ([[rawRunDf]]), and the
-  * promoted count is an Observation riding the append (the log commit's
-  * own, or the directory append's).
+  * each iteration is one distributed Spark job — the copy of the run's
+  * files, or on the row path the append itself. The run's schema is one
+  * driver-side footer read ([[rawRun]]); the promoted count comes from
+  * the copies' footers, or on the row path from an Observation riding
+  * the append (the log commit's own, or the directory append's).
   */
 object PreparedLayerJob {
   val JobName = "prepared_layer_job"
 
-  /** Promote one raw run. Returns the prepared-entry metrics. */
+  /** Promote one raw run. Returns the prepared-entry metrics.
+    *
+    * A run whose rows join the prepared layer unchanged is promoted by
+    * copying its raw files byte for byte ([[graft.table.ParquetCopy]]:
+    * one Spark job, one task per file, no row decoded or re-encoded),
+    * then committing the copies — through the log's append-commit loop
+    * and run-id `txns` key for `table_format: log`
+    * ([[graft.table.SnapshotLog.appendRunFiles]]), as run-unique file
+    * names in the prepared prefix for `dir`. The copies' footer row count
+    * must equal the ledger's `rawEntryCount`; on a mismatch they are
+    * deleted and promotion throws before committing, so the run stays
+    * pending. Runs whose rows must change keep the row path — read
+    * ([[rawRunDf]]), then staged or written: a dedup column, a partition
+    * spec, sort order or CHECK constraint in force on the log table, or
+    * a run written before the audit column moved into the raw file. */
   def promote(spark: SparkSession, cfg: PipelineConfig, ledger: RunLedger,
       rawRecord: RunRecord): JobMetrics = {
-    // The raw layer is Hive-partitioned on ETL_PART_KEY; basePath keeps
-    // the partition column in the promoted rows. Partition discovery
-    // would type-infer the all-digit run id (decimal(20,0)), and casting
-    // back corrupts any non-canonical id (leading zeros: '00123'→'123',
-    // silently diverging from the ledger's partition_key). Supplying the
-    // schema explicitly — file schema from the run's own footers plus
-    // `ETL_PART_KEY string` — bypasses inference entirely, so the run id
-    // round-trips as the literal path string.
     // a run the ledger records with 0 rows landed no files: it promotes
     // as a defined no-op (nothing read, nothing appended, PREPARED
     // COMPLETED with 0), so an empty snapshot never blocks the runs
     // pending behind it. Any other run must still have its files — a
     // missing run directory throws and the run stays pending
+    val runId = rawRecord.partition_key
     val rows = if (rawRecord.rawEntryCount == "0") 0L else {
-      val df = rawRunDf(spark,
-        s"${rawRecord.rawBucket}/${rawRecord.rawFolder}", rawRecord.partition_key)
+      val run = rawRun(spark, s"${rawRecord.rawBucket}/${rawRecord.rawFolder}", runId)
+      val counted = rawRecord.rawEntryCount.toLong
       cfg.dedupColumn match {
-        case Some(key) => promoteDeduped(spark, cfg, df, key, rawRecord.partition_key)
+        case Some(key) => promoteDeduped(spark, cfg, run.df(spark), key, runId)
         case None if cfg.useLog =>
           // log-backed prepared layer: the run commits atomically, keyed
           // on its run id — a drain that crashed between this commit and
           // the ledger append below cannot re-append the run on rerun
-          // (the txn watermark detects the replay); the bare directory
-          // only gets at-least-once from the ledger's pending scan.
-          // The committed snapshot already carries the exact staged row
-          // count (its Observation rode the write) — no counting job; a
-          // detected replay appended nothing and reports 0
+          // (the txn watermark detects the replay and appends nothing);
+          // the bare directory's row path only gets at-least-once from the
+          // ledger's pending scan
           val log = graft.table.PreparedTable.log(spark, cfg)
-          log.appendRun(df, runTxnKey(rawRecord.partition_key)) match {
-            case Some(s) =>
-              if (s.parent == 0) s.rows else s.rows - log.snapshot(s.parent).rows
-            case None => 0L
+          if (run.carriesAuditKey && log.takesFilesAsIs())
+            log.appendRunFiles(run.files, run.schema, runTxnKey(runId), counted)
+              .fold(0L)(_ => counted) // the copies held exactly `counted`
+          else
+            // the committed snapshot carries the exact staged row count
+            // (its Observation rode the write) — no counting job
+            log.appendRun(run.df(spark), runTxnKey(runId)) match {
+              case Some(s) =>
+                if (s.parent == 0) s.rows else s.rows - log.snapshot(s.parent).rows
+              case None => 0L
+            }
+        case None if run.carriesAuditKey =>
+          // the copies land under hidden names (readers skip `.` files),
+          // pass the audit, then rename into place; a rerun after a crash
+          // replaces the same run-unique names instead of adding copies
+          val dir = new Path(cfg.preparedPath)
+          val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val names = run.files.map(f => s"run-$runId-${f.getName}")
+          graft.table.ParquetCopy.copy(spark,
+            run.files.zip(names.map(n => new Path(dir, s".$n.copying"))), counted)
+          names.foreach { n =>
+            fs.delete(new Path(dir, n), false)
+            if (!fs.rename(new Path(dir, s".$n.copying"), new Path(dir, n)))
+              throw new IllegalStateException(s"could not publish $n into $dir")
           }
+          counted
         case None =>
           // the count rides the append (as the raw write's does)
           val obs = new Observation(s"graft_promote_${java.util.UUID.randomUUID()}")
-          df.observe(obs, count(lit(1)).as("rows")).write
+          run.df(spark).observe(obs, count(lit(1)).as("rows")).write
             .option("compression", "snappy")
             .mode("append") // successive runs accumulate under the cataloged prefix
             .parquet(cfg.preparedPath)
@@ -83,8 +112,60 @@ object PreparedLayerJob {
       preparedFolder = cfg.rawFolder,
       preparedJobName = JobName,
       preparedEntryCount = rows.toString))
-    JobMetrics(rawRecord.partition_key, rows, cfg.preparedPath)
+    JobMetrics(runId, rows, cfg.preparedPath)
   }
+
+  /** The `txns` idempotence token for one promotion run in the
+    * log-backed prepared table. */
+  private[graft] def runTxnKey(runId: String): String = s"promote:$runId"
+
+  /** One raw run on disk: its data files and their schema. */
+  private[graft] final case class RawRun(runId: String, files: Seq[Path],
+      schema: StructType) {
+    /** Whether the files carry the audit column — every run this raw job
+      * writes. A run written when the column lived only in its directory
+      * name gains it on the row path. */
+    def carriesAuditKey: Boolean = schema.fieldNames.contains(RawLayerJob.AuditKey)
+
+    /** The run's rows: the files read under their own schema, with no
+      * partition inference, so the run id is the string in the file —
+      * leading zeros included. */
+    def df(spark: SparkSession): DataFrame = {
+      val d = spark.read.schema(schema).parquet(files.map(_.toString): _*)
+      if (carriesAuditKey) d
+      else d.withColumn(RawLayerJob.AuditKey, RawLayerJob.auditValue(runId))
+    }
+  }
+
+  /** Find one raw run: its directory's data files, and their schema from
+    * ONE part-file footer read on the driver, converted under the
+    * session's parquet conf — exactly what Spark's own inference does
+    * with `mergeSchema` off (one footer, same converter), minus the
+    * Spark job it launches to do it. Every file of a run comes from one
+    * write, so any footer speaks for the run. A missing run directory or
+    * one with no data file throws, as inference did. */
+  private[graft] def rawRun(spark: SparkSession, rawTable: String,
+      runId: String): RawRun = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val rawPath = new Path(s"$rawTable/${RawLayerJob.AuditKey}=$runId")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = RewriteSwap.dataFiles(rawPath.getFileSystem(conf), rawPath) // throws when missing
+      .sortBy(_.getPath.getName).toSeq
+    val f = files.headOption.getOrElse(
+      throw new java.io.FileNotFoundException(s"raw run $runId has no data file under $rawPath"))
+    val footer = new org.apache.parquet.hadoop.Footer(f.getPath,
+      ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    RawRun(runId, files.map(_.getPath),
+      org.apache.spark.sql.GraftBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+        footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))))
+  }
+
+  /** One raw run as the frame the row path promotes ([[RawRun.df]]). */
+  private[graft] def rawRunDf(spark: SparkSession, rawTable: String,
+      runId: String): DataFrame =
+    rawRun(spark, rawTable, runId).df(spark)
 
   /** Promote one run with cross-run incremental dedup (an extension —
     * the reference's prepared layer appends blindly, so a re-crawled or
@@ -106,43 +187,8 @@ object PreparedLayerJob {
     * share one computation. At 100 TB the index is bucketed on `fp` at
     * rest (exchange-free anti-join side) and the checkpoint becomes a
     * staging write under a table-format transactional commit. */
-  /** The `txns` idempotence token for one promotion run in the
-    * log-backed prepared table. */
-  private[graft] def runTxnKey(runId: String): String = s"promote:$runId"
-
-  /** One raw run as the frame promotion appends: leaf-directory read
-    * with the audit key re-materialized as a literal string column (see
-    * the partition-inference note on [[promote]]).
-    *
-    * The file schema comes from ONE part-file footer read on the driver,
-    * converted under the session's parquet conf — exactly what Spark's
-    * own inference does with `mergeSchema` off (one footer, same
-    * converter), minus the Spark job it launches to do it. The leaf
-    * directory holds data columns only, and every file of a run comes
-    * from one write, so any footer speaks for the run. A missing run
-    * directory or one with no data file throws, as inference did. */
-  private[graft] def rawRunDf(spark: SparkSession, rawTable: String,
-      runId: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-    val rawPath = new org.apache.hadoop.fs.Path(s"$rawTable/ETL_PART_KEY=$runId")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = RewriteSwap.dataFiles(rawPath.getFileSystem(conf), rawPath) // throws when missing
-      .sortBy(_.getPath.getName).headOption.getOrElse(
-        throw new java.io.FileNotFoundException(s"raw run $runId has no data file under $rawPath"))
-    val footer = new org.apache.parquet.hadoop.Footer(f.getPath,
-      ParquetFooterReader.readFooter(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf),
-        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS))
-    val fileSchema = ParquetFileFormat.readSchemaFromFooter(footer,
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    spark.read.option("basePath", rawTable)
-      .schema(org.apache.spark.sql.GraftBridge.asNullable(fileSchema)
-        .add("ETL_PART_KEY", org.apache.spark.sql.types.StringType))
-      .parquet(rawPath.toString)
-  }
-
   private def promoteDeduped(spark: SparkSession, cfg: PipelineConfig,
-      df: org.apache.spark.sql.DataFrame, key: String, runId: String): Long = {
+      df: DataFrame, key: String, runId: String): Long = {
     import org.apache.spark.sql.functions.col
     // Hadoop FS existence check, not java.io.File: preparedRoot may be
     // HDFS/S3 in production, where a local-File check is always false and

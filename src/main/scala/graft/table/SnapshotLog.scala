@@ -1,7 +1,7 @@
 package graft.table
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, when}
@@ -2314,6 +2314,49 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * at-least-once from the ledger's pending scan. */
   def appendRun(df: DataFrame, runKey: String): Option[Snapshot] =
     appendStream(df, runKey, 0L)
+
+  /** Whether rows can join this table in the files they already sit in:
+    * no partition spec or sort order in force and no CHECK constraint —
+    * nothing a staged write would route, arrange or validate row by row.
+    * [[appendRunFiles]]'s precondition. */
+  private[graft] def takesFilesAsIs(): Boolean =
+    liveWriteShape() == ((Nil, Nil)) && constraints().isEmpty
+
+  /** [[appendRun]] for a run that already sits in parquet files of this
+    * table's shape (a raw run, written through
+    * [[SnapshotLog.microsTimestamps]] like a staged write): the files are
+    * copied byte for byte into `data/` under commit-unique names — one
+    * Spark job, one task per file ([[ParquetCopy]]) — and committed
+    * through the same append-commit loop and `txns` watermark, so no row
+    * is decoded or re-encoded. `schema` is the files' schema, recorded as
+    * a staged write of the same rows would record it. The copies'
+    * footers must hold `expectRows` rows in total, or they are deleted
+    * and this throws before committing. Only for a table that
+    * [[takesFilesAsIs]]: a spec or constraint added meanwhile aborts the
+    * commit ([[specGuard]], [[policyGuard]]). Returns None, copying
+    * nothing, for a replayed run key. */
+  private[graft] def appendRunFiles(files: Seq[Path],
+      schema: org.apache.spark.sql.types.StructType, runKey: String,
+      expectRows: Long): Option[Snapshot] = {
+    val cur = currentVersion()
+    if (cur > 0 && snapshot(cur).txns.get(runKey).exists(_ >= 0L))
+      return None // replay detected before copying any data
+    val commitId = UUID.randomUUID().toString.take(8)
+    val names = files.map(f => s"$commitId-${f.getName}")
+    val copied = names.zip(ParquetCopy.copy(spark,
+      files.zip(names.map(new Path(dataDir, _))), expectRows))
+    val rows = copied.map(_._2._2).sum
+    val blooms =
+      if (bloomCols.isEmpty || names.isEmpty) Map.empty[String, Map[String, String]]
+      else FileBlooms.build(spark, names.map(new Path(dataDir, _).toString),
+        bloomCols, expectedItems = rows / names.size + 64)
+    commitStagedAppendTxn(Staged(names, rows, copied.map(_._2._1).sum,
+      names.map(n => n -> footerInfo(new Path(dataDir, n))._2)
+        .filter(_._2.nonEmpty).toMap,
+      schema.json, copied.map { case (n, (_, r)) => n -> r }.toMap, blooms,
+      copied.map { case (n, (b, _)) => n -> b }.toMap,
+      checkedNames = Some(Map.empty)), Some(runKey -> 0L))
+  }
 
   /** Row-preserving full rewrite (compaction, re-clustering): transform
     * the CURRENT snapshot, verify rows-written == rows-before from an
@@ -5227,21 +5270,7 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     val commitId = UUID.randomUUID().toString.take(8)
     val scratch = new Path(root, s"$StagePrefix$commitId")
     val obs = new Observation(s"graft_log_stage_$commitId")
-    // Time columns write as TIMESTAMP_MICROS: Spark's INT96 default
-    // (deprecated) carries no usable footer min/max, which would leave
-    // time columns permanently unprunable. There is no per-write option
-    // and mutating the shared session conf would race concurrent
-    // appends (a supported pattern) and leak the setting to non-log
-    // writes — so the write executes under a conf-isolated session
-    // CLONE (shared context, copied state) with the plan rebound.
-    val writeDf =
-      if (!hasTimestamp(df.schema)) df
-      else {
-        val iso = org.apache.spark.sql.GraftBridge.cloneSession(spark)
-        iso.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        org.apache.spark.sql.GraftBridge.ofRows(iso,
-          org.apache.spark.sql.GraftBridge.logicalPlan(df))
-      }
+    val writeDf = SnapshotLog.microsTimestamps(df)
     // hidden-partitioned staging: the transforms materialize as
     // SYNTHETIC `_gp<i>` columns that `partitionBy` routes into
     // directories and strips from the data — the SOURCE columns stay in
@@ -5313,10 +5342,12 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         unescapePathValue(seg.substring(eq + 1))
       }
     }
-    val it = fs.listFiles(scratch, true)
-    val found = Iterator.continually(it)
-      .takeWhile(_.hasNext).map(_.next()).toSeq
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+    // a listStatus walk, not listFiles: a LocatedFileStatus loads the
+    // file's permissions, which the local file system without the native
+    // Hadoop library does by spawning `ls -ld`
+    def walk(d: Path): Seq[FileStatus] = fs.listStatus(d).toSeq
+      .flatMap(f => if (f.isDirectory) walk(f.getPath) else Seq(f))
+    val found = walk(scratch).filter(_.getPath.getName.startsWith("part-"))
     // an EMPTY dynamic-partition write runs zero tasks, so the
     // Observation never collects — its absence is only legitimate when
     // no part file landed (rows provably 0); a populated write missing
@@ -5478,20 +5509,6 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         (fileRowCount, ranges)
       } finally r.close()
     }
-
-  /** True if a timestamp lurks anywhere in the type — including inside
-    * structs/arrays/maps, whose nested time columns are addressable in
-    * `statsColumns` via dotted paths. */
-  private def hasTimestamp(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case TimestampType => true
-      case s: StructType => s.fields.exists(f => hasTimestamp(f.dataType))
-      case a: ArrayType  => hasTimestamp(a.elementType)
-      case m: MapType    => hasTimestamp(m.keyType) || hasTimestamp(m.valueType)
-      case _             => false
-    }
-  }
 
   /** Drop staged files after a failed commit — they were never named by
     * a manifest, so this is cleanup, not rollback. */
@@ -5728,6 +5745,41 @@ object SnapshotLog {
   private[graft] val TagNameRe = "^[A-Za-z0-9][A-Za-z0-9._-]*$".r
   private val StagePrefix = "_staged-"
   private val MaxCommitAttempts = 20
+
+  /** `df` rebound so its parquet write stores `TimestampType` columns as
+    * TIMESTAMP_MICROS: Spark's INT96 default (deprecated) carries no
+    * usable footer min/max, which would leave time columns permanently
+    * unprunable. There is no per-write option, and mutating the shared
+    * session conf would race concurrent writes and leak the setting —
+    * so such a frame executes under a conf-isolated session CLONE
+    * (shared context, copied state) with its plan rebound. A frame with
+    * no `TimestampType` column (`timestamp_ntz` always writes as micros)
+    * returns as it is, so only such a write pays for a clone. Every staged
+    * write and the raw layer's write go through here, so a raw run's
+    * file is the file a staged append of its rows would land
+    * ([[SnapshotLog.appendRunFiles]]). */
+  private[graft] def microsTimestamps(df: DataFrame): DataFrame =
+    if (!hasTimestamp(df.schema)) df
+    else {
+      val iso = org.apache.spark.sql.GraftBridge.cloneSession(df.sparkSession)
+      iso.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      org.apache.spark.sql.GraftBridge.ofRows(iso,
+        org.apache.spark.sql.GraftBridge.logicalPlan(df))
+    }
+
+  /** True if a timestamp lurks anywhere in the type — including inside
+    * structs/arrays/maps, whose nested time columns are addressable in
+    * `statsColumns` via dotted paths. */
+  private def hasTimestamp(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case TimestampType => true
+      case s: StructType => s.fields.exists(f => hasTimestamp(f.dataType))
+      case a: ArrayType  => hasTimestamp(a.elementType)
+      case m: MapType    => hasTimestamp(m.keyType) || hasTimestamp(m.valueType)
+      case _             => false
+    }
+  }
 
   /** Distinct-key ceiling under which [[SnapshotLog.mergeByKey]] routes
     * the rewrite set per key (collecting the keys driver-side) instead

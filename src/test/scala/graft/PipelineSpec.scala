@@ -632,9 +632,10 @@ class PipelineSpec extends AnyFunSuite {
 
   test("a warm log-format runEndToEnd runs 4 Spark jobs (no read-back, inference or second registration)") {
     // pins the cycle's job profile the way PlanSpec pins plan shapes: the
-    // source's schema inference, the raw write, the log append and the
-    // catalog view's analysis. A raw read-back, a promotion inference
-    // job, a Spark-read ledger or a second registration each add jobs
+    // source's schema inference, the raw write, the copy of the raw file
+    // into the log and the catalog view's analysis. A raw read-back, a
+    // promotion inference job, a Spark-read ledger, a second registration
+    // or a re-encoding append each add jobs or written records
     val spark = TestSpark.spark
     val tmp = Files.createTempDirectory("graft-jobs-")
     val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
@@ -642,13 +643,26 @@ class PipelineSpec extends AnyFunSuite {
     Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run1") // warm-up
     val tagKey = "graft.test.cycle"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // stage id → the stage's job, and (records read, records written)
+    // per stage, summed over its tasks
+    val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val records = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
     val marker = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))) match {
-          case Some("cycle") => jobs.add(e.stageInfos.map(_.name).mkString(", "))
+          case Some("cycle") =>
+            val name = e.stageInfos.map(_.name).mkString(", ")
+            jobs.add(name)
+            e.stageIds.foreach(jobOfStage.put(_, name))
           case Some("marker") => marker.countDown()
           case _ =>
+        }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          records.merge(e.stageId,
+            (m.inputMetrics.recordsRead, m.outputMetrics.recordsWritten),
+            (a, b) => (a._1 + b._1, a._2 + b._2))
         }
     }
     val sc = spark.sparkContext
@@ -666,8 +680,104 @@ class PipelineSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
     import scala.jdk.CollectionConverters._
-    assert(jobs.size == 4, s"cycle jobs: ${jobs.asScala.mkString("; ")}")
+    val names = jobs.asScala.toSeq
+    // each job named by the code that launched it, in cycle order
+    val expected = Seq("SourceReader.scala", "RawLayerJob.scala",
+      "ParquetCopy.scala", "CatalogRegistrar.scala")
+    assert(names.size == 4 && names.zip(expected).forall { case (n, f) => n.contains(f) },
+      s"cycle jobs: ${names.mkString("; ")}")
+    // each source row is encoded once — by the raw write — and the copy
+    // decodes none
+    val perJob = records.asScala.toSeq.filter { case (st, _) => jobOfStage.containsKey(st) }
+      .groupMapReduce { case (st, _) => jobOfStage.get(st) } { case (_, rw) => rw } {
+        (a, b) => (a._1 + b._1, a._2 + b._2) }
+    assert(perJob.values.map(_._2).sum == fixtureRows(spark), s"records: $perJob")
+    assert(perJob.collect { case (n, (read, _)) if n.contains("ParquetCopy.scala") => read }
+      .toSeq == Seq(0L), s"records: $perJob")
     assert(spark.table(graft.catalog.CatalogRegistrar.name(cfg)).count() == 2 * fixtureRows(spark))
+  }
+
+  Seq(PipelineConfig.FormatDir, PipelineConfig.FormatLog).foreach { fmt =>
+    test(s"a promoted raw file is copied byte for byte, timestamps as micros and the audit key optional ($fmt)") {
+      import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Type}
+      val spark = TestSpark.spark
+      val tmp = Files.createTempDirectory(s"graft-copy-$fmt-")
+      val cfg = cfgFor(tmp).copy(tableFormat = fmt)
+      val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+      // a zoned timestamp column: the one type whose parquet encoding a
+      // session conf decides (INT96 unless written as micros)
+      val zoned = new SourceReader {
+        override def read(s: SparkSession): DataFrame =
+          src.read(s).withColumn("l_shipdate", col("l_shipdate").cast("timestamp"))
+      }
+      Orchestrator.runEndToEnd(spark, cfg, zoned, ledger, "run1")
+      def parquetIn(dir: String): Seq[Path] = Files.list(Path.of(dir)).toArray.toSeq
+        .map(_.asInstanceOf[Path]).filter(p => p.getFileName.toString.endsWith(".parquet"))
+      val Seq(raw) = parquetIn(cfg.rawRunPath("run1"))
+      val Seq(promoted) = parquetIn(
+        if (fmt == PipelineConfig.FormatLog) s"${cfg.preparedPath}/${graft.table.SnapshotLog.DataDirName}"
+        else cfg.preparedPath)
+      assert(java.util.Arrays.equals(Files.readAllBytes(raw), Files.readAllBytes(promoted)))
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(promoted.toString), spark.sparkContext.hadoopConfiguration))
+      val footer = try r.getFooter.getFileMetaData.getSchema finally r.close()
+      val ts = footer.getType(footer.getFieldIndex("l_shipdate")).asPrimitiveType
+      assert(ts.getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.INT64)
+      assert(ts.getLogicalTypeAnnotation == LogicalTypeAnnotation.timestampType(
+        true, LogicalTypeAnnotation.TimeUnit.MICROS))
+      val key = footer.getType(footer.getFieldIndex("ETL_PART_KEY"))
+      assert(key.isRepetition(Type.Repetition.OPTIONAL))
+      assert(key.getLogicalTypeAnnotation == LogicalTypeAnnotation.stringType())
+      // the cataloged object reads the declared types, the key as the string written
+      val t = spark.table(graft.catalog.CatalogRegistrar.name(cfg))
+      assert(t.schema("l_shipdate").dataType == org.apache.spark.sql.types.TimestampType)
+      assert(t.schema("ETL_PART_KEY").dataType == org.apache.spark.sql.types.StringType)
+      assert(t.where(col("ETL_PART_KEY") === "run1").count() == fixtureRows(spark))
+    }
+  }
+
+  Seq(PipelineConfig.FormatDir, PipelineConfig.FormatLog).foreach { fmt =>
+    test(s"a raw file holding fewer rows than the ledger counted fails the row-count audit ($fmt)") {
+      val spark = TestSpark.spark
+      val tmp = Files.createTempDirectory(s"graft-audit-$fmt-")
+      val cfg = cfgFor(tmp).copy(tableFormat = fmt)
+      val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+      RawLayerJob.run(spark, cfg, src, ledger, "run1")
+      // the run's file replaced with one holding 5 of its rows
+      src.read(spark).limit(5).withColumn("ETL_PART_KEY", RawLayerJob.auditValue("run1"))
+        .coalesce(1).write.mode("overwrite").parquet(cfg.rawRunPath("run1"))
+      val e = intercept[IllegalStateException](Orchestrator.drain(spark, cfg, ledger))
+      assert(e.getMessage.contains("row-count audit"), e.getMessage)
+      assert(ledger.pending(spark, "lineitem").map(_.partition_key) == Seq("run1"))
+      assert(!ledger.records(spark).collect().exists(_.state == graft.ledger.RunState.PreparedCompleted))
+      // nothing committed, and the copies are gone
+      val left = if (fmt == PipelineConfig.FormatLog) {
+        assert(graft.table.PreparedTable.log(spark, cfg).currentVersion() == 0)
+        s"${cfg.preparedPath}/${graft.table.SnapshotLog.DataDirName}"
+      } else cfg.preparedPath
+      val files = Option(new java.io.File(left).listFiles()).toSeq.flatten
+      assert(!files.exists(_.getName.contains(".parquet")), files.mkString(", "))
+    }
+  }
+
+  Seq(PipelineConfig.FormatDir, PipelineConfig.FormatLog).foreach { fmt =>
+    test(s"a raw run whose files lack the audit column promotes with the run id ($fmt)") {
+      // the layout of runs written when the audit column lived only in
+      // the ETL_PART_KEY=<runId> directory name
+      val spark = TestSpark.spark
+      val tmp = Files.createTempDirectory(s"graft-legacy-$fmt-")
+      val cfg = cfgFor(tmp).copy(tableFormat = fmt)
+      val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+      src.read(spark).write.parquet(cfg.rawRunPath("00123"))
+      ledger.append(graft.ledger.RunRecord("00123", cfg.jobSrc,
+        graft.ledger.RunState.RawCompleted, cfg.rawRoot, cfg.rawFolder,
+        RawLayerJob.JobName, fixtureRows(spark).toString))
+      val table = Orchestrator.runEndToEnd(spark, cfg, src, ledger, "r2")
+      val byRun = spark.sql(s"SELECT ETL_PART_KEY, count(*) FROM $table GROUP BY 1").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(byRun == Map("00123" -> fixtureRows(spark), "r2" -> fixtureRows(spark)))
+    }
   }
 
   test("re-registering a log view replaces it in place") {
