@@ -1,24 +1,27 @@
 #!/bin/bash
-# Interleaved A/B: scripts/ab.sh <query> <reps> <rounds>
-# Alternates the r16 classes snapshot (/tmp/classes_r16) with the current
-# build, same host window, printing min warm rep per arm per round.
+# Interleaved A/B of one query:
+#   scripts/ab.sh <baseline-classes-dir> <query> <sfDir> [reps] [rounds]
+# Alternates the baseline build (e.g. a parent commit's
+# target/scala-2.13/classes) with this checkout's build in the same host
+# window, flipping which arm runs first each round, and prints RunOne's
+# timing lines per arm per round. Both arms launch through runone.sh.
 set -e
-Q=$1; REPS=${2:-3}; ROUNDS=${3:-2}
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+BASE=$1; Q=$2; SF=$3; REPS=${4:-3}; ROUNDS=${5:-2}
+if [ -z "$Q" ] || [ -z "$SF" ]; then
+  echo "usage: $0 <baseline-classes-dir> <query> <sfDir> [reps] [rounds]" >&2; exit 2
+fi
+if [ ! -d "$BASE" ]; then
+  echo "baseline classes directory '$BASE' does not exist" >&2; exit 2
+fi
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 run() { # $1=classes dir $2=tag
-  java $OPENS -Xmx${SPARK_DRIVER_MEM:-48g} -Dspark.ui.enabled=false \
-    -Dspark.sql.session.timeZone=UTC \
-    -cp "$1:/opt/spark/jars/*" graft.RunOne "$Q" /root/testdata/sf0.1 "$REPS" 2>/dev/null \
+  GRAFT_CLASSES=$1 "$ROOT/scripts/runone.sh" "$Q" "$SF" "$REPS" 2>/dev/null \
     | grep '\[runone\]' | sed "s/^/[$2] /"
 }
-for i in $(seq 1 $ROUNDS); do
-  run /tmp/classes_r16 "old$i"
-  run /root/repo/target/scala-2.13/classes "new$i"
+for i in $(seq 1 "$ROUNDS"); do
+  if [ $((i % 2)) = 1 ]; then
+    run "$BASE" "old$i"; run "$ROOT/target/scala-2.13/classes" "new$i"
+  else
+    run "$ROOT/target/scala-2.13/classes" "new$i"; run "$BASE" "old$i"
+  fi
 done

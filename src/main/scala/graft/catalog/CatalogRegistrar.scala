@@ -2,31 +2,30 @@ package graft.catalog
 
 import graft.config.PipelineConfig
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 
-/** Exposes a pipeline's prepared layer as a named, schema-declared
-  * external table in the session catalog.
+/** Exposes a pipeline's prepared layer as a named, schema-declared object
+  * in the session catalog, in database `pipelines_db`.
   *
   * Spark-native equivalent of the reference's Glue Catalog table synthesis
-  * (reference: templates/cds_view_template.py:26-55): external parquet
-  * table (reference :45-54), columns from the config schema (reference
-  * :28-33), location = the stable prepared prefix (reference :46), all in
-  * database `pipelines_db` (reference :38). In a real AWS deployment the
-  * session catalog is Glue-backed and this is the same DDL; locally it is
-  * the in-memory/Hive catalog.
+  * (reference: templates/cds_view_template.py:26-55), which registers the
+  * prepared table once, at deploy time. [[GlueCatalog]] renders the same
+  * declaration on AWS.
   *
-  * Log-backed pipelines ([[PipelineConfig.useLog]]) register a VIEW over
-  * the CURRENT snapshot's exact file set instead of a location-scoped
-  * table: the data directory of a log table also holds files that are
-  * staged-but-uncommitted or already replaced (until vacuum), so a
-  * directory-location table would read phantom rows. The view pins the
-  * committed manifest's files; every drain that promotes re-registers,
-  * so the name tracks the log head. Re-registration replaces the view in
-  * place (`ALTER VIEW ... AS`, one catalog update): readers never see the
-  * name missing, and the one Spark job left is the view's own analysis
-  * (schema inference over its file glob). Production plugs the log in as a
-  * DataSource V2 catalog (one class, same manifest read) — the view is
-  * the session-catalog rendering of the same idea, view text O(live
-  * files) exactly like the manifest it mirrors.
+  * Directory-format pipelines get an external parquet table: columns
+  * from the config schema (reference :28-33), location = the stable
+  * prepared prefix (reference :45-54).
+  *
+  * Log-backed pipelines ([[PipelineConfig.useLog]]) get a persistent view
+  * over the log mounted through [[graft.table.GraftTableCatalog]]:
+  * `SELECT * FROM <catalog>.<rawFolder>`, created `WITH SCHEMA EVOLUTION`.
+  * A directory-location table would read the staged-but-uncommitted and
+  * replaced files a log's data directory also holds; the catalog plans
+  * every query from the manifest head instead, so a commit shows through
+  * the view at once and the view is created once per table, not per run.
+  * A session that reads the view needs the catalog mounted: see
+  * [[mountConfs]].
   */
 object CatalogRegistrar {
   val Database = "pipelines_db"
@@ -36,47 +35,71 @@ object CatalogRegistrar {
   /** The name [[register]] registers the pipeline's table under. */
   def name(cfg: PipelineConfig): String = s"$Database.${cfg.tableName}"
 
+  /** The catalog that serves `cfg.preparedRoot`. The name derives from
+    * the root because `CatalogManager` caches an initialized catalog per
+    * name for the session's lifetime. It stays outside the `graft_`
+    * names, which query functions mount only for the length of one
+    * query: this mount outlives every query by design. */
+  def catalogName(cfg: PipelineConfig): String =
+    s"prepared_${math.abs(cfg.preparedRoot.hashCode)}"
+
+  /** The two session confs that mount `cfg.preparedRoot` as a
+    * [[graft.table.GraftTableCatalog]]: what a log-backed pipeline's view
+    * resolves through. */
+  def mountConfs(cfg: PipelineConfig): Seq[(String, String)] = {
+    val key = s"spark.sql.catalog.${catalogName(cfg)}"
+    Seq(key -> classOf[graft.table.GraftTableCatalog].getName,
+      s"$key.root" -> cfg.preparedRoot)
+  }
+
+  /** Idempotently mounts `cfg.preparedRoot` on `spark`; refuses a
+    * catalog name already mounted at another root. */
+  private def mount(spark: SparkSession, cfg: PipelineConfig): Unit = {
+    val rootKey = s"spark.sql.catalog.${catalogName(cfg)}.root"
+    spark.conf.getOption(rootKey).filter(_ != cfg.preparedRoot).foreach { other =>
+      throw new IllegalStateException(s"catalog ${catalogName(cfg)} already " +
+        s"mounts $other; cannot mount ${cfg.preparedRoot} under the same name")
+    }
+    mountConfs(cfg).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   /** CREATE EXTERNAL TABLE pipelines_db.{name} (...) USING parquet
-    * LOCATION '{preparedPath}' — or, for log-backed pipelines, a view
-    * over the current snapshot's files, created or replaced in place (a
-    * log with no live file yet registers an empty view of the declared
-    * columns).
-    * Idempotent: the table/view is external, data is never touched. The
-    * session catalog has no in-place replace for a data-source table, so
-    * the directory table is dropped and re-created (a declared schema:
-    * no inference job). DROP otherwise runs only when the other object
-    * type holds the name — a table_format switch. Returns the
+    * LOCATION '{preparedPath}' — or, for log-backed pipelines, the view
+    * over the mounted log (a log with no commit yet holds an empty view
+    * of the declared columns). Idempotent: data is never touched. The
+    * directory table is dropped and re-created (a declared schema: no
+    * inference job). A log view issues DDL only when the held object
+    * differs from it — a missing name, a table (a table_format switch),
+    * or a view with other text (the empty view, another root); on a
+    * mounted pipeline it runs no DDL and no Spark job. Returns the
     * fully-qualified name.
     */
   def register(spark: SparkSession, cfg: PipelineConfig): String = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${quote(Database)}")
+    val ident = TableIdentifier(cfg.tableName, Some(Database))
     val fqn = s"${quote(Database)}.${quote(cfg.tableName)}"
     // Prepared rows carry the audit column on top of the declared schema
     // (reference: glue src/raw_layer_job.py:53).
     val declared = cfg.schema.map(c => (c.name, c.tpe, c.comment)) :+
       (("ETL_PART_KEY", "string", "ingestion run id"))
-    val held = heldType(spark, fqn)
+    val catalog = spark.sessionState.catalog
+    val held =
+      if (catalog.tableExists(ident)) Some(catalog.getTableMetadata(ident)) else None
     if (cfg.useLog) {
-      if (held.exists(_ != "VIEW")) spark.sql(s"DROP TABLE $fqn")
-      val log = graft.table.PreparedTable.log(spark, cfg)
-      val files =
-        if (log.currentVersion() == 0) Nil else log.snapshot().files
+      mount(spark, cfg)
       val body =
-        if (files.isEmpty)
+        if (graft.table.PreparedTable.log(spark, cfg).currentVersion() == 0)
           declared.map { case (n, t, _) => s"CAST(NULL AS $t) AS ${quote(n)}" }
             .mkString("SELECT ", ", ", " WHERE false")
-        else {
-          val glob = s"${cfg.preparedPath}/${graft.table.SnapshotLog.DataDirName}/" +
-            s"{${files.mkString(",")}}"
-          s"SELECT * FROM parquet.${quote(glob)}"
-        }
-      // ALTER VIEW rewrites the catalog entry in place; Spark's CREATE OR
-      // REPLACE VIEW drops and re-creates a persistent view inside the
-      // command, a window in which the name does not resolve
-      if (held.contains("VIEW")) spark.sql(s"ALTER VIEW $fqn AS $body")
-      else spark.sql(s"CREATE VIEW $fqn AS $body")
+        else s"SELECT * FROM ${quote(catalogName(cfg))}.${quote(cfg.rawFolder)}"
+      if (!held.exists(_.viewText.contains(body))) {
+        spark.sql(s"CREATE DATABASE IF NOT EXISTS ${quote(Database)}")
+        if (held.exists(_.tableType != CatalogTableType.VIEW)) spark.sql(s"DROP TABLE $fqn")
+        spark.sql(s"CREATE OR REPLACE VIEW $fqn WITH SCHEMA EVOLUTION AS $body")
+      }
     } else {
-      held.foreach(t => spark.sql(s"DROP ${if (t == "VIEW") "VIEW" else "TABLE"} $fqn"))
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${quote(Database)}")
+      held.foreach(t => spark.sql(
+        s"DROP ${if (t.tableType == CatalogTableType.VIEW) "VIEW" else "TABLE"} $fqn"))
       val cols = declared.map { case (n, t, c) =>
         s"${quote(n)} $t COMMENT '${c.replace("'", "''")}'"
       }.mkString(", ")
@@ -84,10 +107,4 @@ object CatalogRegistrar {
     }
     name(cfg)
   }
-
-  /** The type of the object holding the name, if any — DROP TABLE
-    * refuses a view and vice versa. */
-  private def heldType(spark: SparkSession, fqn: String): Option[String] =
-    if (spark.catalog.tableExists(fqn)) Some(spark.catalog.getTable(fqn).tableType)
-    else None
 }

@@ -24,7 +24,18 @@ import java.nio.charset.StandardCharsets.UTF_8
   * table/view ([[CatalogRegistrar.register]]); on AWS it becomes a Glue
   * external table every downstream engine (Athena, EMR, another Spark)
   * resolves by name. Registration is idempotent by design — a re-run
-  * drains into UpdateTable, matching the local drop-and-recreate.
+  * drains into UpdateTable, matching the local re-registration.
+  *
+  * A log-backed pipeline's session view reads through a
+  * [[graft.table.GraftTableCatalog]] mounted on the prepared root. Another
+  * Spark session reads that view only after it sets the two confs
+  * [[CatalogRegistrar.mountConfs]] returns:
+  * {{{
+  * spark.sql.catalog.<name>      = graft.table.GraftTableCatalog
+  * spark.sql.catalog.<name>.root = <preparedRoot>
+  * }}}
+  * with `<name>` = [[CatalogRegistrar.catalogName]] (derived from the
+  * prepared root).
   *
   * Scale: one CreateDatabase + one Create/UpdateTable round-trip per
   * pipeline registration — control-plane, O(1) in the data.

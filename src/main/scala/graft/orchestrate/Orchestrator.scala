@@ -45,13 +45,8 @@ object Orchestrator {
       compactAfterFiles: Int = DefaultCompactAfterFiles,
       advisor: Option[LayoutAdvisor] = None): Seq[JobMetrics] = {
     val promoted = PreparedLayerJob.promoteAll(spark, cfg, ledger)
-    if (promoted.nonEmpty) {
-      // maintenance BEFORE registration: a log-backed catalog view pins
-      // the current snapshot's file set, so it must be built after any
-      // rewrite commits (for the directory format the order is moot)
-      maybeCompact(spark, cfg, compactAfterFiles, advisor)
-      CatalogRegistrar.register(spark, cfg)
-    }
+    if (promoted.nonEmpty) maybeCompact(spark, cfg, compactAfterFiles, advisor)
+    CatalogRegistrar.register(spark, cfg)
     promoted
   }
 
@@ -181,24 +176,20 @@ object Orchestrator {
       .makeQualified(p).toString
   }
 
-  /** Full medallion pass for one pipeline: ingest + drain + catalog.
-    * Exercises SURVEY §2.1 ops #1-9/#13-15 in one call (§7.2).
-    * Registers the catalog name exactly once: [[drain]] already
-    * registers when it promotes, so this registers only when the drain
-    * promoted nothing (a re-run of an already-promoted run id), keeping
-    * the returned name readable either way. Returns the fully-qualified
-    * name. */
+  /** Full medallion pass for one pipeline: ingest + drain, which also
+    * registers the catalog name. Exercises SURVEY §2.1 ops #1-9/#13-15
+    * in one call (§7.2). Returns the fully-qualified name. */
   def runEndToEnd(spark: SparkSession, cfg: PipelineConfig, source: SourceReader,
       ledger: RunLedger, runId: String): String = {
     ingest(spark, cfg, source, ledger, runId)
-    if (drain(spark, cfg, ledger).isEmpty) CatalogRegistrar.register(spark, cfg)
-    else CatalogRegistrar.name(cfg)
+    drain(spark, cfg, ledger)
+    CatalogRegistrar.name(cfg)
   }
 
   /** Event-driven promotion: watch the ledger directory as a stream; for
-    * each batch containing new RAW COMPLETED inserts, run the prepared job.
+    * each batch containing new RAW COMPLETED inserts, [[drain]].
     * `foreachBatch` sees only *new* files (the stream's exactly-once file
-    * tracking), and `promoteAll` is itself idempotent, so replays are safe.
+    * tracking), and `drain` is itself idempotent, so replays are safe.
     */
   def watch(spark: SparkSession, cfg: PipelineConfig, ledger: LocalJsonLedger,
       checkpointDir: String,
@@ -212,12 +203,7 @@ object Orchestrator {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          PreparedLayerJob.promoteAll(spark, cfg, ledger)
-          // before register: the log view pins a snapshot
-          maybeCompact(spark, cfg, advisor = advisor)
-          CatalogRegistrar.register(spark, cfg)
-        }
+        if (!batch.isEmpty) drain(spark, cfg, ledger, advisor = advisor)
         ()
       }
       .start()

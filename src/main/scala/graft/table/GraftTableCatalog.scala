@@ -18,8 +18,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 catalog over a directory of [[SnapshotLog]] tables —
-  * the production SQL integration the session-catalog view rendering
-  * ([[graft.catalog.CatalogRegistrar]]) stands in for locally:
+  * the SQL integration of the log, and the read path of a log-backed
+  * pipeline's cataloged view ([[graft.catalog.CatalogRegistrar]] mounts
+  * the pipeline's prepared root as one of these and views its table):
   *
   * {{{
   * spark.conf.set("spark.sql.catalog.graft", classOf[GraftTableCatalog].getName)

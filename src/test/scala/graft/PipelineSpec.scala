@@ -569,6 +569,66 @@ class PipelineSpec extends AnyFunSuite {
     assert(ledger.pending(spark, "lineitem").isEmpty)
   }
 
+  test("event-driven watch on a log-format pipeline: promoted rows read through the cataloged name") {
+    val spark = TestSpark.spark
+    val tmp = Files.createTempDirectory("graft-watch-log-")
+    val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
+    val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+    RawLayerJob.run(spark, cfg, src, ledger, "run1")
+    Orchestrator.watch(spark, cfg, ledger, s"$tmp/ckpt").awaitTermination()
+    val byRun = spark.sql(
+      s"SELECT ETL_PART_KEY, count(*) FROM ${graft.catalog.CatalogRegistrar.name(cfg)} GROUP BY 1")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(byRun == Map("run1" -> fixtureRows(spark)))
+    assert(ledger.pending(spark, "lineitem").isEmpty)
+  }
+
+  /** Runs `body` and returns the Spark jobs it launched, each named by
+    * its stages' call sites, with the (records read, records written)
+    * summed over each job's tasks. Listener events arrive in order: once
+    * a marker job run after `body` is seen to start, every job of `body`
+    * has been counted. */
+  private def jobsOf(spark: SparkSession)(body: => Unit): Seq[(String, (Long, Long))] = {
+    import scala.jdk.CollectionConverters._
+    val tagKey = "graft.test.jobs"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val records = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))) match {
+          case Some("body") =>
+            jobs.add(e.jobId -> e.stageInfos.map(_.name).mkString(", "))
+            e.stageIds.foreach(jobOfStage.put(_, e.jobId))
+          case Some("marker") => marker.countDown()
+          case _ =>
+        }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          records.merge(e.stageId,
+            (m.inputMetrics.recordsRead, m.outputMetrics.recordsWritten),
+            (a, b) => (a._1 + b._1, a._2 + b._2))
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tagKey, "body")
+      body
+      sc.setLocalProperty(tagKey, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(tagKey, null)
+      sc.removeSparkListener(listener)
+    }
+    val perJob = records.asScala.toSeq.filter { case (st, _) => jobOfStage.containsKey(st) }
+      .groupMapReduce { case (st, _) => jobOfStage.get(st) } { case (_, rw) => rw } {
+        (a, b) => (a._1 + b._1, a._2 + b._2) }
+    jobs.asScala.toSeq.map { case (id, name) => name -> perJob.getOrElse(id, (0L, 0L)) }
+  }
+
   private def declaredColumns(cfg: PipelineConfig) =
     cfg.schema.map(_.name) :+ "ETL_PART_KEY"
 
@@ -630,71 +690,82 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("a warm log-format runEndToEnd runs 4 Spark jobs (no read-back, inference or second registration)") {
+  test("a warm log-format runEndToEnd runs 3 Spark jobs (no read-back, inference or registration job)") {
     // pins the cycle's job profile the way PlanSpec pins plan shapes: the
-    // source's schema inference, the raw write, the copy of the raw file
-    // into the log and the catalog view's analysis. A raw read-back, a
-    // promotion inference job, a Spark-read ledger, a second registration
-    // or a re-encoding append each add jobs or written records
+    // source's schema inference, the raw write and the copy of the raw
+    // file into the log. A raw read-back, a promotion inference job, a
+    // Spark-read ledger, a re-encoding append or any job launched by the
+    // catalog registration each add jobs or written records
     val spark = TestSpark.spark
     val tmp = Files.createTempDirectory("graft-jobs-")
     val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
     val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
     Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run1") // warm-up
-    val tagKey = "graft.test.cycle"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // stage id → the stage's job, and (records read, records written)
-    // per stage, summed over its tasks
-    val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val records = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))) match {
-          case Some("cycle") =>
-            val name = e.stageInfos.map(_.name).mkString(", ")
-            jobs.add(name)
-            e.stageIds.foreach(jobOfStage.put(_, name))
-          case Some("marker") => marker.countDown()
-          case _ =>
-        }
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach { m =>
-          records.merge(e.stageId,
-            (m.inputMetrics.recordsRead, m.outputMetrics.recordsWritten),
-            (a, b) => (a._1 + b._1, a._2 + b._2))
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tagKey, "cycle")
-      Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run2")
-      // listener events arrive in order: once the marker job's start is
-      // seen, every job of the cycle has been counted
-      sc.setLocalProperty(tagKey, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.setLocalProperty(tagKey, null)
-      sc.removeSparkListener(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    val names = jobs.asScala.toSeq
+    val jobs = jobsOf(spark)(Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run2"))
+    val names = jobs.map(_._1)
     // each job named by the code that launched it, in cycle order
-    val expected = Seq("SourceReader.scala", "RawLayerJob.scala",
-      "ParquetCopy.scala", "CatalogRegistrar.scala")
-    assert(names.size == 4 && names.zip(expected).forall { case (n, f) => n.contains(f) },
+    val expected = Seq("SourceReader.scala", "RawLayerJob.scala", "ParquetCopy.scala")
+    assert(names.size == 3 && names.zip(expected).forall { case (n, f) => n.contains(f) },
       s"cycle jobs: ${names.mkString("; ")}")
+    assert(!names.exists(_.contains("CatalogRegistrar.scala")), names.mkString("; "))
     // each source row is encoded once — by the raw write — and the copy
     // decodes none
-    val perJob = records.asScala.toSeq.filter { case (st, _) => jobOfStage.containsKey(st) }
-      .groupMapReduce { case (st, _) => jobOfStage.get(st) } { case (_, rw) => rw } {
-        (a, b) => (a._1 + b._1, a._2 + b._2) }
-    assert(perJob.values.map(_._2).sum == fixtureRows(spark), s"records: $perJob")
-    assert(perJob.collect { case (n, (read, _)) if n.contains("ParquetCopy.scala") => read }
-      .toSeq == Seq(0L), s"records: $perJob")
+    assert(jobs.map(_._2._2).sum == fixtureRows(spark), s"records: $jobs")
+    assert(jobs.collect { case (n, (read, _)) if n.contains("ParquetCopy.scala") => read }
+      == Seq(0L), s"records: $jobs")
     assert(spark.table(graft.catalog.CatalogRegistrar.name(cfg)).count() == 2 * fixtureRows(spark))
+  }
+
+  test("a commit made straight through the log shows through the cataloged name without register") {
+    val spark = TestSpark.spark
+    val tmp = Files.createTempDirectory("graft-direct-")
+    val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
+    val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+    val table = Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run1")
+    graft.table.PreparedTable.log(spark, cfg)
+      .append(src.read(spark).withColumn("ETL_PART_KEY", org.apache.spark.sql.functions.lit("direct")))
+    val byRun = spark.sql(s"SELECT ETL_PART_KEY, count(*) FROM $table GROUP BY 1").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(byRun == Map("run1" -> fixtureRows(spark), "direct" -> fixtureRows(spark)))
+  }
+
+  test("register refuses a catalog name already mounted at another root") {
+    val spark = TestSpark.spark
+    val tmp = Files.createTempDirectory("graft-mount-")
+    val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
+    val rootKey = s"spark.sql.catalog.${graft.catalog.CatalogRegistrar.catalogName(cfg)}.root"
+    spark.conf.set(rootKey, s"$tmp/elsewhere")
+    try {
+      val e = intercept[IllegalStateException](graft.catalog.CatalogRegistrar.register(spark, cfg))
+      assert(e.getMessage.contains(s"$tmp/elsewhere"), e.getMessage)
+    } finally spark.conf.unset(rootKey)
+    assert(!spark.catalog.tableExists(graft.catalog.CatalogRegistrar.name(cfg)))
+  }
+
+  test("the cataloged read over more than 32 live files runs as many jobs as over 1 file") {
+    // past spark.sql.sources.parallelPartitionDiscovery.threshold (32
+    // paths) a file listing becomes a Spark job of its own; the mounted
+    // log plans from the manifest and lists nothing
+    val spark = TestSpark.spark
+    val tmp = Files.createTempDirectory("graft-many-files-")
+    val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
+    val log = graft.table.PreparedTable.log(spark, cfg)
+    def rows(run: String) =
+      src.read(spark).withColumn("ETL_PART_KEY", org.apache.spark.sql.functions.lit(run))
+    log.append(rows("one").coalesce(1))
+    assert(log.snapshot().files.size == 1)
+    val table = graft.catalog.CatalogRegistrar.register(spark, cfg)
+    def read(): Seq[(String, (Long, Long))] = jobsOf(spark) {
+      spark.sql(s"SELECT ETL_PART_KEY, count(*) FROM $table GROUP BY 1").collect()
+    }
+    val oneFile = read()
+    // one direct append, so no drain and no compaction
+    log.append(rows("many").repartition(40))
+    assert(log.snapshot().files.size > 32, s"files: ${log.snapshot().files.size}")
+    val manyFiles = read()
+    assert(manyFiles.size == oneFile.size,
+      s"1 file: ${oneFile.map(_._1).mkString("; ")} | many: ${manyFiles.map(_._1).mkString("; ")}")
+    assert(spark.table(table).count() == 2 * fixtureRows(spark))
   }
 
   Seq(PipelineConfig.FormatDir, PipelineConfig.FormatLog).foreach { fmt =>
@@ -791,6 +862,7 @@ class PipelineSpec extends AnyFunSuite {
     Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run1")
     val first = created
     Thread.sleep(5) // a dropped-and-recreated view would carry a later time
+    // the view reads the mounted log, so later cycles leave it untouched
     Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run2")
     graft.catalog.CatalogRegistrar.register(spark, cfg)
     assert(created == first, "the view was dropped and re-created, not replaced")
@@ -832,7 +904,7 @@ class PipelineSpec extends AnyFunSuite {
     Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run1")
     spark.sql(s"DROP VIEW ${graft.catalog.CatalogRegistrar.name(cfg)}")
     // the same run id again: already promoted, so the drain promotes
-    // nothing and runEndToEnd registers on its own
+    // nothing, and the drain registers the name again
     val table = Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run1")
     assert(spark.table(table).count() == fixtureRows(spark))
   }
