@@ -4,6 +4,7 @@ import graft.config.PipelineConfig
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+import org.apache.spark.sql.types.StructType
 
 /** Exposes a pipeline's prepared layer as a named, schema-declared object
   * in the session catalog, in database `pipelines_db`.
@@ -66,12 +67,15 @@ object CatalogRegistrar {
   /** CREATE EXTERNAL TABLE pipelines_db.{name} (...) USING parquet
     * LOCATION '{preparedPath}' — or, for log-backed pipelines, the view
     * over the mounted log (a log with no commit yet holds an empty view
-    * of the declared columns). Idempotent: data is never touched. The
-    * directory table is dropped and re-created (a declared schema: no
-    * inference job). A log view issues DDL only when the held object
-    * differs from it — a missing name, a table (a table_format switch),
-    * or a view with other text (the empty view, another root); on a
-    * mounted pipeline it runs no DDL and no Spark job. Returns the
+    * of the declared columns). Idempotent: data is never touched. Both
+    * forms run DDL only when the held object differs — a missing name,
+    * the other form (a table_format switch), a view with other text (the
+    * empty view, another root), or a table with another location or
+    * other columns — so the name never stops resolving between drains.
+    * A held directory table is refreshed instead: the session caches a
+    * datasource table's file listing, and a new promotion must show.
+    * The directory table declares its schema (no inference job); on a
+    * mounted pipeline the view runs no DDL and no Spark job. Returns the
     * fully-qualified name.
     */
   def register(spark: SparkSession, cfg: PipelineConfig): String = {
@@ -97,13 +101,22 @@ object CatalogRegistrar {
         spark.sql(s"CREATE OR REPLACE VIEW $fqn WITH SCHEMA EVOLUTION AS $body")
       }
     } else {
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${quote(Database)}")
-      held.foreach(t => spark.sql(
-        s"DROP ${if (t.tableType == CatalogTableType.VIEW) "VIEW" else "TABLE"} $fqn"))
       val cols = declared.map { case (n, t, c) =>
         s"${quote(n)} $t COMMENT '${c.replace("'", "''")}'"
       }.mkString(", ")
-      spark.sql(s"CREATE TABLE $fqn ($cols) USING parquet LOCATION '${cfg.preparedPath}'")
+      val path = new org.apache.hadoop.fs.Path(cfg.preparedPath)
+      val location = path.getFileSystem(spark.sessionState.newHadoopConf())
+        .makeQualified(path).toUri
+      if (held.exists(t => t.tableType == CatalogTableType.EXTERNAL &&
+          t.provider.contains("parquet") && t.location == location &&
+          t.schema == StructType.fromDDL(cols)))
+        spark.sql(s"REFRESH TABLE $fqn")
+      else {
+        spark.sql(s"CREATE DATABASE IF NOT EXISTS ${quote(Database)}")
+        held.foreach(t => spark.sql(
+          s"DROP ${if (t.tableType == CatalogTableType.VIEW) "VIEW" else "TABLE"} $fqn"))
+        spark.sql(s"CREATE TABLE $fqn ($cols) USING parquet LOCATION '${cfg.preparedPath}'")
+      }
     }
     name(cfg)
   }

@@ -639,9 +639,6 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * switch — consumers downstream may already depend on the images. */
   private def commitCdc(base: Snapshot): Boolean = changeFeed || base.cdc
 
-  /** Latest committed version; 0 means no commit yet. Staged manifests
-    * (`.tmp-*`) and foreign files are ignored — only a fully published
-    * `v<digits>.json` counts, so a half-written commit is invisible. */
   /** The partition spec + sort order a write staged NOW must honor —
     * what [[stage]] resolves internally, exposed for the native DSv2
     * batch write ([[graft.table.LogAppendWrite]]), which computes its
@@ -656,6 +653,9 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     }
   }
 
+  /** Latest committed version; 0 means no commit yet. Staged manifests
+    * (`.tmp-*`) and foreign files are ignored — only a fully published
+    * `v<digits>.json` counts, so a half-written commit is invisible. */
   def currentVersion(): Long = {
     val names = store.list()
     val max = names.flatMap {
@@ -672,7 +672,7 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     if (max == 0L && branchName.isEmpty &&
         names.contains(SnapshotLog.PendingReplaceName)) {
       store.get(SnapshotLog.PendingReplaceName).foreach { bytes =>
-        store.putIfAbsent(manifestName(1), bytes)
+        publishManifest(1, bytes)
         store.delete(SnapshotLog.PendingReplaceName)
       }
       if (store.exists(manifestName(1))) 1L else 0L
@@ -2015,8 +2015,7 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       schemaJson: String, spec: Seq[PartitionField],
       listedChecks: Map[String, String],
       appId: String, batchId: Long): Option[Snapshot] = {
-    val cur = currentVersion()
-    if (cur > 0 && snapshot(cur).txns.get(appId).exists(_ >= batchId)) {
+    if (replayed(headOrEmpty(), Some((appId, batchId)))) {
       files.foreach(f => fs.delete(new Path(dataDir, f._1), false))
       return None // replay detected before the footer lift
     }
@@ -2034,11 +2033,8 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       schemaJson: String, spec: Seq[PartitionField],
       listedChecks: Map[String, String],
       appId: String, batchId: Long): Option[Snapshot] = {
-    val cur = currentVersion()
-    val base =
-      if (cur == 0) Snapshot(0, "", 0, 0L, 0L, Seq.empty)
-      else snapshot(cur)
-    if (base.txns.get(appId).exists(_ >= batchId)) {
+    val base = headOrEmpty()
+    if (replayed(base, Some((appId, batchId)))) {
       files.foreach(f => fs.delete(new Path(dataDir, f._1), false))
       return None
     }
@@ -2076,16 +2072,10 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * (the staged write already enforced the DECLARED checks
     * writer-side; they attach post-publish). */
   private def freshRootSnapshot(staged: Staged): Snapshot = {
-    val base = Snapshot(0, "", 0, 0L, 0L, Seq.empty)
-    specGuard(staged, base)
-    val merged =
-      try mergeSchemaJson(base, staged.schemaJson)
-      catch { case e: IllegalStateException => discard(staged); throw e }
-    Snapshot(1, "append", 0, staged.rows, staged.bytes,
-      staged.files, staged.stats, merged, Map.empty, Nil,
-      staged.fileRows, staged.blooms, staged.fileBytes,
-      commitSpec(base), staged.partitions, commitSort(base),
-      commitCdc(base))
+    specGuard(staged, EmptySnapshot)
+    swapFiles(emptied(EmptySnapshot), Set.empty, staged).copy(
+      version = 1L, op = "append", rows = staged.rows, bytes = staged.bytes,
+      schemaJson = staged.schemaJson)
   }
 
   /** Atomic staged-CTAS publish: the table's FIRST commit, required to
@@ -2100,9 +2090,8 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       schemaJson: String, spec: Seq[PartitionField],
       listedChecks: Map[String, String]): Option[Snapshot] = {
     val staged = nativeStaged(files, schemaJson, spec, listedChecks)
-    val next = freshRootSnapshot(staged)
-    if (tryCommit(next)) Some(next)
-    else { discard(staged); None }
+    commit("append", Abort, Seq(staged), base = Some(EmptySnapshot),
+      skip = _.version > 0)(_ => freshRootSnapshot(staged))
   }
 
   /** Step 1 of the atomic RTAS publish: render the replacement's
@@ -2113,9 +2102,12 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   private[graft] def replacementV1Bytes(
       files: Seq[(String, Seq[String], Long)],
       schemaJson: String, spec: Seq[PartitionField],
-      listedChecks: Map[String, String]): Array[Byte] =
-    mapper.writeValueAsBytes(inlineManifestNode(
-      freshRootSnapshot(nativeStaged(files, schemaJson, spec, listedChecks))))
+      listedChecks: Map[String, String]): Array[Byte] = {
+    val staged = nativeStaged(files, schemaJson, spec, listedChecks)
+    val v1 = try freshRootSnapshot(staged)
+      catch { case e: Throwable => discard(staged); throw e }
+    mapper.writeValueAsBytes(inlineManifestNode(v1))
+  }
 
   /** Step 2: make the replacement DURABLE under the pending marker
     * while the old table is still fully intact — from here on a crash
@@ -2158,7 +2150,7 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * refuse rather than clobber it. */
   private[graft] def promotePendingReplace(bytes: Array[Byte]): Snapshot = {
     publishDeclaredCols()
-    if (!store.putIfAbsent(manifestName(1), bytes) &&
+    if (!publishManifest(1, bytes) &&
         !store.get(manifestName(1)).exists(_.sameElements(bytes))) {
       store.delete(SnapshotLog.PendingReplaceName)
       throw new CommitConflictException(
@@ -2177,14 +2169,9 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   private[graft] def commitNativeOverwriteAll(
       files: Seq[(String, Seq[String], Long)],
       schemaJson: String, spec: Seq[PartitionField],
-      listedChecks: Map[String, String]): Snapshot = {
-    val cur = currentVersion()
-    val base =
-      if (cur == 0) Snapshot(0, "", 0, 0L, 0L, Seq.empty)
-      else snapshot(cur)
-    overwriteAllStaged(base,
+      listedChecks: Map[String, String]): Snapshot =
+    overwriteAllStaged(headOrEmpty(),
       nativeStaged(files, schemaJson, spec, listedChecks), None)
-  }
 
   /** The native write's `INSERT OVERWRITE ... PARTITION` commit: the
     * fused replace_where over a pre-written batch. CDC insert images
@@ -2243,47 +2230,24 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   private def commitStagedAppend(staged: Staged): Snapshot =
     commitStagedAppendTxn(staged, None).get
 
-  /** The one append-commit loop every append tier runs — typed,
-    * native-batch, foreachBatch stream, DSv2 streaming sink. `txn`
+  /** The one append commit every append tier runs — typed,
+    * native-batch, foreachBatch stream, DSv2 streaming sink — rebased
+    * onto the fresh head on every lost slot (appends commute). `txn`
     * carries the exactly-once (appId, batchId) watermark: a replayed
-    * batch is detected against the FRESH parent inside the CAS loop
-    * (the check and the commit cannot race), the staged files are
-    * discarded, and None returns without committing. */
+    * batch is detected against each attempt's FRESH parent (the check
+    * and the commit cannot race), the staged files are discarded, and
+    * None returns without committing. */
   private def commitStagedAppendTxn(staged: Staged,
-      txn: Option[(String, Long)]): Option[Snapshot] = {
-    var attempts = 0
-    while (attempts < MaxCommitAttempts) {
-      val parent = currentVersion()
-      val base =
-        if (parent == 0) Snapshot(0, "", 0, 0L, 0L, Seq.empty)
-        else snapshot(parent)
-      if (txn.exists { case (a, b) => base.txns.get(a).exists(_ >= b) }) {
-        discard(staged) // lost the race to our own replay twin
-        return None
-      }
+      txn: Option[(String, Long)]): Option[Snapshot] =
+    commit("append", Rebase, Seq(staged), skip = replayed(_, txn)) { base =>
       specGuard(staged, base)
       policyGuard(staged)
-      val merged =
-        try mergeSchemaJson(base, staged.schemaJson)
-        catch { case e: IllegalStateException => discard(staged); throw e }
-      val next = Snapshot(parent + 1, "append", parent,
-        base.rows + staged.rows, base.bytes + staged.bytes,
-        base.files ++ staged.files, base.stats ++ staged.stats,
-        merged, txn.fold(base.txns) { case (a, b) => base.txns + (a -> b) },
-        base.tombstones, base.fileRows ++ staged.fileRows,
-        base.blooms ++ staged.blooms, base.fileBytes ++ staged.fileBytes,
-        commitSpec(base), base.partitions ++ staged.partitions,
-        commitSort(base), commitCdc(base),
-        priorSpecs = base.priorSpecs, fileSpecIdx = base.fileSpecIdx,
-        dvs = base.dvs, priorSchemas = base.priorSchemas,
-        fileSchemaIdx = base.fileSchemaIdx)
-      if (tryCommit(next)) return Some(next)
-      attempts += 1
+      swapFiles(base, Set.empty, staged).copy(
+        rows = base.rows + staged.rows, bytes = base.bytes + staged.bytes,
+        schemaJson = mergeSchemaJson(base, staged.schemaJson),
+        txns = txnsAfter(base, txn), partitionSpec = commitSpec(base),
+        sortOrder = commitSort(base), cdc = commitCdc(base), changes = None)
     }
-    discard(staged)
-    throw new CommitConflictException(
-      s"append to $tableDir lost the commit race $MaxCommitAttempts times")
-  }
 
   /** Exactly-once micro-batch append for Structured Streaming's
     * `foreachBatch`: the manifest records the highest committed batch id
@@ -2338,8 +2302,7 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   private[graft] def appendRunFiles(files: Seq[Path],
       schema: org.apache.spark.sql.types.StructType, runKey: String,
       expectRows: Long): Option[Snapshot] = {
-    val cur = currentVersion()
-    if (cur > 0 && snapshot(cur).txns.get(runKey).exists(_ >= 0L))
+    if (replayed(headOrEmpty(), Some(runKey -> 0L)))
       return None // replay detected before copying any data
     val commitId = UUID.randomUUID().toString.take(8)
     val names = files.map(f => s"$commitId-${f.getName}")
@@ -2416,54 +2379,25 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   private def commitReplacing(op: String, base: Snapshot,
       replaced: Seq[String], replacedRows: Long, replacedBytes: Long,
       staged: Staged): Snapshot = {
-    val replacedSet = replaced.toSet
-    var cur = base
-    var attempts = 0
-    while (attempts < MaxCommitAttempts) {
-      // an interleaved evolve_spec aborts below (op != append), but an
+    val gone = replaced.toSet
+    commit(op, OverAppends, Seq(staged), base = Some(base)) { cur =>
+      // an interleaved evolve_spec aborts (op != append), but an
       // interleaved APPEND that introduced a spec onto a previously
       // spec-less table would slip through the op check — the guard
       // catches that the staged files carry no (or stale) tuples
       specGuard(staged, cur)
       policyGuard(staged)
-      val merged =
-        try mergeSchemaJson(cur, staged.schemaJson)
-        catch { case e: IllegalStateException => discard(staged); throw e }
-      val next = Snapshot(cur.version + 1, op, cur.version,
-        cur.rows - replacedRows + staged.rows,
-        cur.bytes - replacedBytes + staged.bytes,
-        cur.files.filterNot(replacedSet) ++ staged.files,
-        (cur.stats -- replaced) ++ staged.stats,
-        merged, cur.txns, Nil,
-        (cur.fileRows -- replaced) ++ staged.fileRows,
-        (cur.blooms -- replaced) ++ staged.blooms,
-        (cur.fileBytes -- replaced) ++ staged.fileBytes,
-        commitSpec(cur), (cur.partitions -- replaced) ++ staged.partitions,
-        commitSort(cur), commitCdc(cur),
-        priorSpecs = cur.priorSpecs, fileSpecIdx = cur.fileSpecIdx -- replaced,
-        // a rewrite of a DV-covered file consumed the DV-applied read —
-        // its vector is MATERIALIZED and drops with the file; likewise a
-        // rewrite re-stages under CURRENT column names, draining the
-        // rename debt of everything it replaced
-        dvs = cur.dvs -- replaced, priorSchemas = cur.priorSchemas,
-        fileSchemaIdx = cur.fileSchemaIdx -- replaced)
-      if (tryCommit(next)) return next
-      val newest = snapshot()
-      val interleaved = ((cur.version + 1) to newest.version).map(snapshot(_))
-      if (!interleaved.forall(_.op == "append")) {
-        discard(staged)
-        throw new CommitConflictException(
-          s"$op of $tableDir: concurrent " +
-            s"${interleaved.map(_.op).distinct.mkString("/")} since " +
-            s"v${cur.version} may have removed rows the rewrite re-wrote; " +
-            "rerun against the new current version")
-      }
-      cur = newest
-      attempts += 1
-    }
-    discard(staged)
-    throw new CommitConflictException(
-      s"$op of $tableDir lost the commit race $MaxCommitAttempts times")
+      // a rewrite of a DV-covered file consumed the DV-applied read —
+      // its vector is MATERIALIZED and drops with the file; likewise a
+      // rewrite re-stages under CURRENT column names, draining the
+      // rename debt of everything it replaced
+      swapFiles(cur, gone, staged).copy(
+        rows = cur.rows - replacedRows + staged.rows,
+        bytes = cur.bytes - replacedBytes + staged.bytes,
+        schemaJson = mergeSchemaJson(cur, staged.schemaJson),
+        tombstones = Nil, partitionSpec = commitSpec(cur),
+        sortOrder = commitSort(cur), cdc = commitCdc(cur), changes = None)
+    }.get
   }
 
   /** Range delete: drop rows with `column` in [lo, hi]. Only files
@@ -2496,20 +2430,6 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   def deleteWhere(preds: (String, Any, Any)*): Option[Snapshot] =
     deleteWhereTxn(preds, None)
 
-  /** [[deleteWhere]] with the exactly-once `(appId, batchId)` watermark
-    * contract of [[appendStream]]/[[deleteKeys]]: an already-committed
-    * batch id returns None without staging — what lets [[LogMirror]]
-    * REPLAY a source's predicate delete on a replica idempotently (the
-    * predicate ships in the source's [[ChangeSet]]; replaying it prunes
-    * on the replica's own stats instead of shipping pre-image rows).
-    *
-    * `mode` — `"auto"` (default) lets the planner choose per file
-    * between copy-on-write and a deletion vector by matched fraction
-    * ([[SnapshotLog.DvRewriteFraction]]); `"cow"` forces the rewrite
-    * for every straddling file with a match — the SQL catalog pins this
-    * (its raw batch scan cannot compose the DV anti-join, so SQL DELETE
-    * must leave the table SQL-readable). Metadata-only whole-file drops
-    * apply in both modes. */
   /** [[deleteWhereTxn]] generalized to an ARBITRARY deterministic row
     * predicate — OR-trees, expressions over columns, anything a
     * `WHERE` clause can say short of a subquery. `hints` are the
@@ -2567,6 +2487,20 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     }
   }
 
+  /** [[deleteWhere]] with the exactly-once `(appId, batchId)` watermark
+    * contract of [[appendStream]]/[[deleteKeys]]: an already-committed
+    * batch id returns None without staging — what lets [[LogMirror]]
+    * REPLAY a source's predicate delete on a replica idempotently (the
+    * predicate ships in the source's [[ChangeSet]]; replaying it prunes
+    * on the replica's own stats instead of shipping pre-image rows).
+    *
+    * `mode` — `"auto"` (default) lets the planner choose per file
+    * between copy-on-write and a deletion vector by matched fraction
+    * ([[SnapshotLog.DvRewriteFraction]]); `"cow"` forces the rewrite
+    * for every straddling file with a match — the SQL catalog pins this
+    * (its raw batch scan cannot compose the DV anti-join, so SQL DELETE
+    * must leave the table SQL-readable). Metadata-only whole-file drops
+    * apply in both modes. */
   def deleteWhereTxn(preds0: Seq[(String, Any, Any)],
       txn: Option[(String, Long)] = None,
       mode: String = "auto"): Option[Snapshot] = {
@@ -2759,14 +2693,6 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
           else extraCond.map(renderPredSql).getOrElse("")))
     val rewriteBytes = rewriteSet.map(f => base.fileBytes.getOrElse(f,
       fs.getFileStatus(new Path(dataDir, f)).getLen)).sum
-    val (stagedFiles, stagedRows, stagedBytes, stagedStats, stagedFileRows,
-        stagedBlooms, stagedFileBytes, stagedParts) = stagedOpt match {
-      case Some(st) => (st.files, st.rows, st.bytes, st.stats,
-        st.fileRows, st.blooms, st.fileBytes, st.partitions)
-      case None => (Nil, 0L, 0L, Map.empty[String, Map[String, ColRange]],
-        Map.empty[String, Long], Map.empty[String, Map[String, String]],
-        Map.empty[String, Long], Map.empty[String, Seq[String]])
-    }
     // gone = physically dereferenced files; the DV set's files STAY in
     // the manifest (their stats/blooms remain sound supersets), each
     // gaining the new vector on top of any it already carried
@@ -2774,28 +2700,16 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     val newDvs = (base.dvs -- gone) ++ dvStaged.fold(
       Map.empty[String, Seq[String]])(st => dvSet.map(f =>
         f -> (base.dvs.getOrElse(f, Nil) :+ st.files.head)).toMap)
-    val next = Snapshot(base.version + 1, "delete", base.version,
-      base.rows - droppedRows - rewriteMatched - dvMatched,
-      base.bytes - droppedBytes - rewriteBytes + stagedBytes,
-      base.files.filterNot(gone) ++ stagedFiles,
-      (base.stats -- gone) ++ stagedStats,
-      base.schemaJson,
-      txn.fold(base.txns) { case (a, b) => base.txns + (a -> b) }, Nil,
-      (base.fileRows -- gone) ++ stagedFileRows,
-      (base.blooms -- gone) ++ stagedBlooms,
-      (base.fileBytes -- gone) ++ stagedFileBytes,
-      commitSpec(base), (base.partitions -- gone) ++ stagedParts,
-      commitSort(base), recordCdc, changeSet,
-      base.priorSpecs, base.fileSpecIdx -- gone, newDvs,
-      base.priorSchemas, base.fileSchemaIdx -- gone)
-    if (!tryCommit(next)) {
-      stagedOpt.foreach(discard)
-      dvStaged.foreach(discard)
-      changeStaged.foreach(discard)
-      throw new CommitConflictException(
-        s"delete on $tableDir: concurrent commit since v${base.version}; rerun")
+    commit("delete", Abort, stagedOpt.toSeq ++ dvStaged ++ changeStaged,
+        base = Some(base)) { base =>
+      swapFiles(base, gone, stagedOpt.toSeq: _*).copy(
+        rows = base.rows - droppedRows - rewriteMatched - dvMatched,
+        bytes = base.bytes - droppedBytes - rewriteBytes +
+          stagedOpt.fold(0L)(_.bytes),
+        txns = txnsAfter(base, txn), tombstones = Nil,
+        partitionSpec = commitSpec(base), sortOrder = commitSort(base),
+        cdc = recordCdc, changes = changeSet, dvs = newDvs)
     }
-    Some(next)
   }
 
   /** `fs` read position-tagged ([[DvFileCol]]/[[DvPosCol]]) with PRIOR
@@ -3119,49 +3033,23 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
           else extraCond.map(renderPredSql).getOrElse("")))
     val rewriteBytes = rewriteSet.map(f => base.fileBytes.getOrElse(f,
       fs.getFileStatus(new Path(dataDir, f)).getLen)).sum
-    val (survFiles, survBytes, survStats, survFileRows, survBlooms,
-        survFileBytes, survParts) = survivorsOpt match {
-      case Some(st) => (st.files, st.bytes, st.stats, st.fileRows,
-        st.blooms, st.fileBytes, st.partitions)
-      case None => (Nil, 0L, Map.empty[String, Map[String, ColRange]],
-        Map.empty[String, Long], Map.empty[String, Map[String, String]],
-        Map.empty[String, Long], Map.empty[String, Seq[String]])
-    }
     val gone = rewriteSet.toSet
     val newDvs = (base.dvs -- gone) ++ dvStaged.fold(
       Map.empty[String, Seq[String]])(st => dvSet.map(f =>
         f -> (base.dvs.getOrElse(f, Nil) :+ st.files.head)).toMap)
-    // updated copies carry NEW values — a CHECK published since this
-    // write staged must abort it (policyGuard discards updStaged;
-    // the sibling stages clean up here)
-    try policyGuard(updStaged)
-    catch { case e: Throwable =>
-      survivorsOpt.foreach(discard); dvStaged.foreach(discard)
-      changeStaged.foreach(discard); throw e }
-    val next = Snapshot(base.version + 1, "update", base.version,
-      base.rows, // an update never changes the row count
-      base.bytes - rewriteBytes + survBytes + updStaged.bytes,
-      base.files.filterNot(gone) ++ survFiles ++ updStaged.files,
-      (base.stats -- gone) ++ survStats ++ updStaged.stats,
-      base.schemaJson,
-      txn.fold(base.txns) { case (a, b) => base.txns + (a -> b) }, Nil,
-      (base.fileRows -- gone) ++ survFileRows ++ updStaged.fileRows,
-      (base.blooms -- gone) ++ survBlooms ++ updStaged.blooms,
-      (base.fileBytes -- gone) ++ survFileBytes ++ updStaged.fileBytes,
-      commitSpec(base),
-      (base.partitions -- gone) ++ survParts ++ updStaged.partitions,
-      commitSort(base), recordCdc, changeSet,
-      base.priorSpecs, base.fileSpecIdx -- gone, newDvs,
-      base.priorSchemas, base.fileSchemaIdx -- gone)
-    if (!tryCommit(next)) {
-      survivorsOpt.foreach(discard)
-      dvStaged.foreach(discard)
-      discard(updStaged)
-      changeStaged.foreach(discard)
-      throw new CommitConflictException(
-        s"update on $tableDir: concurrent commit since v${base.version}; rerun")
+    val written = survivorsOpt.toSeq :+ updStaged
+    commit("update", Abort, written ++ dvStaged ++ changeStaged,
+        base = Some(base)) { base =>
+      // updated copies carry NEW values — a CHECK published since this
+      // write staged must abort it
+      policyGuard(updStaged)
+      // rows carry over: an update never changes the row count
+      swapFiles(base, gone, written: _*).copy(
+        bytes = base.bytes - rewriteBytes + written.map(_.bytes).sum,
+        txns = txnsAfter(base, txn), tombstones = Nil,
+        partitionSpec = commitSpec(base), sortOrder = commitSort(base),
+        cdc = recordCdc, changes = changeSet, dvs = newDvs)
     }
-    Some(next)
   }
 
   /** Copy-on-write MERGE (upsert) by key: rows of `updates` replace
@@ -3220,7 +3108,7 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       org.apache.spark.sql.functions.count_distinct(col(column))).head()
     require(!bounds.isNullAt(0), "updates must have at least one non-null key")
     val (lo, hi) = (bounds.get(0), bounds.get(1))
-    val (touched, untouched) =
+    val touched =
       if (bounds.getLong(2) <= MergeRouteKeyCap &&
           (base.stats.nonEmpty || base.blooms.nonEmpty)) {
         // per-key routing: a file rewrites only if SOME key can be in
@@ -3231,13 +3119,13 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         val keys = u.select(col(column)).na.drop().distinct()
           .collect().map(_.get(0)).toSeq // bounded by the cap
         val cand = keyCandidates(base, column, keys).toSet
-        base.files.partition(cand)
+        base.files.filter(cand)
       } else {
         // envelope routing still gets the partition-tuple veto — on a
         // bucket-partitioned table even an envelope-wide batch only
         // rewrites files in the buckets its keys hash to
         val cand = candidateFiles(base, Seq((column, lo, hi))).toSet
-        base.files.partition(cand)
+        base.files.filter(cand)
       }
     val (touchedRows, stagedDf) =
       if (touched.isEmpty) (0L, u)
@@ -3304,35 +3192,20 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       if (!recordCdc) None
       else Some(ChangeSet(files = changeStaged.map(_.files).getOrElse(Nil),
         keyColumn = column))
-    // merge upserts carry NEW values — same commit-time re-check as
-    // appends (policyGuard discards staged; the image stage cleans here)
-    try policyGuard(staged)
-    catch { case e: Throwable => changeStaged.foreach(discard); throw e }
-    val merged =
-      try mergeSchemaJson(base, staged.schemaJson)
-      catch { case e: IllegalStateException =>
-        discard(staged); changeStaged.foreach(discard); throw e }
-    val next = Snapshot(base.version + 1, "merge", base.version,
-      base.rows - touchedRows + staged.rows,
-      base.bytes - touchedBytes + staged.bytes,
-      untouched ++ staged.files,
-      (base.stats -- touched) ++ staged.stats,
-      merged, txn.fold(base.txns) { case (a, b) => base.txns + (a -> b) }, Nil,
-      (base.fileRows -- touched) ++ staged.fileRows,
-      (base.blooms -- touched) ++ staged.blooms,
-      (base.fileBytes -- touched) ++ staged.fileBytes,
-      commitSpec(base), (base.partitions -- touched) ++ staged.partitions,
-      commitSort(base), recordCdc, changeSet,
-      base.priorSpecs, base.fileSpecIdx -- touched,
+    commit("merge", Abort, staged +: changeStaged.toSeq,
+        base = Some(base)) { base =>
+      // merge upserts carry NEW values — same commit-time re-check as
+      // appends
+      policyGuard(staged)
       // touched files rewrote through the DV-applied read — materialized
-      base.dvs -- touched, base.priorSchemas, base.fileSchemaIdx -- touched)
-    if (!tryCommit(next)) {
-      discard(staged)
-      changeStaged.foreach(discard)
-      throw new CommitConflictException(
-        s"merge on $tableDir: concurrent commit since v${base.version}; rerun")
-    }
-    next
+      swapFiles(base, touched.toSet, staged).copy(
+        rows = base.rows - touchedRows + staged.rows,
+        bytes = base.bytes - touchedBytes + staged.bytes,
+        schemaJson = mergeSchemaJson(base, staged.schemaJson),
+        txns = txnsAfter(base, txn), tombstones = Nil,
+        partitionSpec = commitSpec(base), sortOrder = commitSort(base),
+        cdc = recordCdc, changes = changeSet)
+    }.get
   }
 
   /** General multi-clause MERGE — the full SQL shape [[mergeByKey]]'s
@@ -3452,7 +3325,6 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       }
     val rewriteTouched = matched.nonEmpty || notMatchedBySource.nonEmpty
     val rewritten = if (rewriteTouched) joinFiles else Nil
-    val untouched = base.files.filterNot(rewritten.toSet)
     // GENUINE-AMBIGUITY probe: a duplicated source key tuple aborts the
     // merge iff it matches a target row (SQL cardinality violation);
     // duplicated tuples that only insert are standard MERGE. With a
@@ -3631,31 +3503,17 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         if (!recordCdc) None
         else Some(ChangeSet(files = changeStaged.map(_.files).getOrElse(Nil),
           keyColumn = tKeys.mkString(",")))
-      try policyGuard(staged)
-      catch { case e: Throwable => changeStaged.foreach(discard); throw e }
-      val next = Snapshot(base.version + 1, "merge", base.version,
-        base.rows - touchedRows + staged.rows,
-        base.bytes - touchedBytes + staged.bytes,
-        untouched ++ staged.files,
-        (base.stats -- rewritten) ++ staged.stats,
-        base.schemaJson,
-        txn.fold(base.txns) { case (a, b) => base.txns + (a -> b) }, Nil,
-        (base.fileRows -- rewritten) ++ staged.fileRows,
-        (base.blooms -- rewritten) ++ staged.blooms,
-        (base.fileBytes -- rewritten) ++ staged.fileBytes,
-        commitSpec(base), (base.partitions -- rewritten) ++ staged.partitions,
-        commitSort(base), recordCdc, changeSet,
-        base.priorSpecs, base.fileSpecIdx -- rewritten,
+      commit("merge", Abort, staged +: changeStaged.toSeq,
+          base = Some(base)) { base =>
+        policyGuard(staged)
         // rewritten files read through the DV-applied scan — materialized
-        base.dvs -- rewritten, base.priorSchemas,
-        base.fileSchemaIdx -- rewritten)
-      if (!tryCommit(next)) {
-        discard(staged)
-        changeStaged.foreach(discard)
-        throw new CommitConflictException(
-          s"merge on $tableDir: concurrent commit since v${base.version}; rerun")
-      }
-      next
+        swapFiles(base, rewritten.toSet, staged).copy(
+          rows = base.rows - touchedRows + staged.rows,
+          bytes = base.bytes - touchedBytes + staged.bytes,
+          txns = txnsAfter(base, txn), tombstones = Nil,
+          partitionSpec = commitSpec(base), sortOrder = commitSort(base),
+          cdc = recordCdc, changes = changeSet)
+      }.get
     } finally joined.unpersist()
   }
 
@@ -3741,36 +3599,14 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       if (!recordCdc) None
       else Some(ChangeSet(files = changeStaged.map(_.files).getOrElse(Nil),
         keyColumn = column))
-    val next = Snapshot(base.version + 1, "delete_keys", base.version,
-      base.rows, base.bytes, base.files, base.stats,
-      base.schemaJson,
-      txn.fold(base.txns) { case (a, b) => base.txns + (a -> b) },
-      base.tombstones :+ Tombstone(staged.files.head, column, applies),
-      base.fileRows, base.blooms, base.fileBytes,
-      base.partitionSpec, base.partitions, base.sortOrder,
-      recordCdc, changeSet, base.priorSpecs, base.fileSpecIdx, base.dvs,
-      base.priorSchemas, base.fileSchemaIdx)
-    if (!tryCommit(next)) {
-      discard(staged)
-      changeStaged.foreach(discard)
-      throw new CommitConflictException(
-        s"delete_keys on $tableDir: concurrent commit since v${base.version}; rerun")
+    commit("delete_keys", Abort, staged +: changeStaged.toSeq,
+        base = Some(base)) { base =>
+      base.copy(txns = txnsAfter(base, txn),
+        tombstones = base.tombstones :+ Tombstone(staged.files.head, column, applies),
+        cdc = recordCdc, changes = changeSet)
     }
-    Some(next)
   }
 
-  /** Roll the table back to a retained `version` as a NEW commit: the
-    * old file set is re-published at the top of the log (op `restore`),
-    * so history stays intact, concurrent writers see the rollback
-    * through the same CAS as any commit, and nothing is copied — data
-    * files are immutable, the restore is one manifest write. This is
-    * the undo for a bad delete/merge/append while the horizon holds;
-    * `txns` carries FORWARD from the current version (a restore must
-    * not resurrect already-committed stream batches). A concurrent
-    * commit ABORTS the restore, like [[rewrite]] — a restore replaces
-    * the whole table, so retrying past a commit it hasn't seen would
-    * silently drop that commit's rows (while the carried txns watermark
-    * still marks its stream batch committed — unrecoverable by replay). */
   /** Evolve the hidden partition spec FORWARD: `newSpec` governs every
     * file staged from the next commit on, while files already committed
     * keep pruning under the spec that WROTE their tuples — the manifest
@@ -3796,18 +3632,14 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       newSpec.foreach(f => require(fields(f.source),
         s"spec source '${f.source}' is not a column of $tableDir"))
     }
-    val next = Snapshot(cur.version + 1, "evolve_spec", cur.version,
-      cur.rows, cur.bytes, cur.files, cur.stats, cur.schemaJson, cur.txns,
-      cur.tombstones, cur.fileRows, cur.blooms, cur.fileBytes,
-      newSpec, cur.partitions, cur.sortOrder, commitCdc(cur), None,
-      // every live file pins to the spec that wrote it, at its ABSOLUTE
-      // index — from here on, absence means the new current spec
-      cur.priorSpecs :+ cur.partitionSpec,
-      cur.files.map(f =>
-        f -> cur.fileSpecIdx.getOrElse(f, cur.priorSpecs.length)).toMap,
-      cur.dvs, cur.priorSchemas, cur.fileSchemaIdx)
-    if (!tryCommit(next)) throw new CommitConflictException(
-      s"evolve_spec on $tableDir: concurrent commit since v${cur.version}; rerun")
+    val next = commit("evolve_spec", Abort, base = Some(cur)) { cur =>
+      cur.copy(partitionSpec = newSpec, cdc = commitCdc(cur), changes = None,
+        // every live file pins to the spec that wrote it, at its ABSOLUTE
+        // index — from here on, absence means the new current spec
+        priorSpecs = cur.priorSpecs :+ cur.partitionSpec,
+        fileSpecIdx = cur.files.map(f =>
+          f -> cur.fileSpecIdx.getOrElse(f, cur.priorSpecs.length)).toMap)
+    }.get
     declaredSpec = newSpec // this handle keeps writing, under the new spec
     next
   }
@@ -3881,18 +3713,12 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
           st.fields.map(f => if (f.name == parts.last) f.copy(name = to) else f))
       }
     val toPath = (parts.init :+ to).mkString(".")
-    val next = Snapshot(cur.version + 1, "rename", cur.version,
-      cur.rows, cur.bytes, cur.files, cur.stats, renamed.json, cur.txns,
-      cur.tombstones, cur.fileRows, cur.blooms, cur.fileBytes,
-      cur.partitionSpec, cur.partitions,
-      cur.sortOrder.map(c => if (c == from) toPath else c),
-      commitCdc(cur), None, cur.priorSpecs, cur.fileSpecIdx, cur.dvs,
+    val next = commit("rename", Abort, base = Some(cur)) { cur =>
       // every live file pins to the epoch that wrote it (the RETAINED
       // epoch normalized with explicit ids, so matching is id-exact)
-      cur.priorSchemas :+ withIds.json,
-      cur.files.map(f => f -> cur.schemaIdxOf(f)).toMap)
-    if (!tryCommit(next)) throw new CommitConflictException(
-      s"rename on $tableDir: concurrent commit since v${cur.version}; rerun")
+      newEpoch(cur, renamed, withIds).copy(
+        sortOrder = cur.sortOrder.map(c => if (c == from) toPath else c))
+    }.get
     // this handle keeps maintaining the same columns under the new name
     statsCols = statsCols.map(c => if (c == from) toPath else c)
     bloomCols = bloomCols.map(c => if (c == from) toPath else c)
@@ -3971,16 +3797,8 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         StructType(st.fields.map(f =>
           if (f.name == parts.last) widenField(f) else f))
       }
-    val next = Snapshot(cur.version + 1, "widen_type", cur.version,
-      cur.rows, cur.bytes, cur.files, cur.stats, widened.json, cur.txns,
-      cur.tombstones, cur.fileRows, cur.blooms, cur.fileBytes,
-      cur.partitionSpec, cur.partitions, cur.sortOrder,
-      commitCdc(cur), None, cur.priorSpecs, cur.fileSpecIdx, cur.dvs,
-      cur.priorSchemas :+ withIds.json,
-      cur.files.map(f => f -> cur.schemaIdxOf(f)).toMap)
-    if (!tryCommit(next)) throw new CommitConflictException(
-      s"widen on $tableDir: concurrent commit since v${cur.version}; rerun")
-    next
+    commit("widen_type", Abort, base = Some(cur))(
+      newEpoch(_, widened, withIds)).get
   }
 
   /** Drop `name` as ONE metadata-only commit (op `drop`) — the
@@ -4043,16 +3861,10 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         org.apache.spark.sql.types.StructType(
           st.fields.filterNot(_.name == parts.last))
       }
-    val next = Snapshot(cur.version + 1, "drop", cur.version,
-      cur.rows, cur.bytes, cur.files, cur.stats, dropped.json, cur.txns,
-      cur.tombstones, cur.fileRows, cur.blooms, cur.fileBytes,
-      cur.partitionSpec, cur.partitions,
-      cur.sortOrder.filterNot(_ == name),
-      commitCdc(cur), None, cur.priorSpecs, cur.fileSpecIdx, cur.dvs,
-      cur.priorSchemas :+ withIds.json,
-      cur.files.map(f => f -> cur.schemaIdxOf(f)).toMap)
-    if (!tryCommit(next)) throw new CommitConflictException(
-      s"drop on $tableDir: concurrent commit since v${cur.version}; rerun")
+    val next = commit("drop", Abort, base = Some(cur)) { cur =>
+      newEpoch(cur, dropped, withIds).copy(
+        sortOrder = cur.sortOrder.filterNot(_ == name))
+    }.get
     statsCols = statsCols.filterNot(_ == name)
     bloomCols = bloomCols.filterNot(_ == name)
     sortCols = sortCols.filterNot(_ == name)
@@ -4122,12 +3934,9 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
               .build())
         org.apache.spark.sql.types.StructType(st.fields :+ tagged)
       }
-    val next = cur.copy(version = cur.version + 1, op = "widen",
-      parent = cur.version, schemaJson = widened.json, changes = None,
-      cdc = commitCdc(cur), ts = 0L)
-    if (!tryCommit(next)) throw new CommitConflictException(
-      s"widen on $tableDir: concurrent commit since v${cur.version}; rerun")
-    next
+    commit("widen", Abort, base = Some(cur)) { cur =>
+      cur.copy(schemaJson = widened.json, cdc = commitCdc(cur), changes = None)
+    }.get
   }
 
   /** Remove every row as ONE metadata-only commit (op `truncate`): the
@@ -4146,22 +3955,13 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * any, is already recorded). A concurrent commit aborts, like
     * [[restore]] — a truncate replaces the whole table. */
   def truncate(txn: Option[(String, Long)] = None): Option[Snapshot] = {
-    val cur = currentVersion()
-    val base =
-      if (cur == 0) Snapshot(0, "", 0, 0L, 0L, Seq.empty)
-      else snapshot(cur)
-    if (txn.exists { case (a, b) => base.txns.get(a).exists(_ >= b) })
-      return None // replay detected
-    if (cur > 0 && base.files.isEmpty && txn.isEmpty) return None // already empty
-    val next = Snapshot(base.version + 1, "truncate", base.version,
-      0L, 0L, Seq.empty, Map.empty, base.schemaJson,
-      txn.fold(base.txns) { case (a, b) => base.txns + (a -> b) }, Nil,
-      Map.empty, Map.empty, Map.empty,
-      commitSpec(base), Map.empty, commitSort(base), commitCdc(base), None,
-      base.priorSpecs, Map.empty)
-    if (!tryCommit(next)) throw new CommitConflictException(
-      s"truncate of $tableDir: concurrent commit since v${base.version}; rerun")
-    Some(next)
+    val base = headOrEmpty()
+    if (replayed(base, txn)) return None // replay detected
+    if (base.version > 0 && base.files.isEmpty && txn.isEmpty)
+      return None // already empty
+    commit("truncate", Abort, base = Some(base)) { base =>
+      emptied(base).copy(txns = txnsAfter(base, txn))
+    }
   }
 
   /** Replace the WHOLE table with `df` in one atomic commit (op
@@ -4179,35 +3979,22 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * its rows). */
   def overwriteAll(df: DataFrame, txn: Option[(String, Long)] = None,
       preArranged: Boolean = false): Snapshot = {
-    val cur = currentVersion()
-    val base =
-      if (cur == 0) Snapshot(0, "", 0, 0L, 0L, Seq.empty)
-      else snapshot(cur)
-    if (txn.exists { case (a, b) => base.txns.get(a).exists(_ >= b) })
+    val base = headOrEmpty()
+    if (replayed(base, txn))
       return base // replay detected — nothing stages, nothing commits
     overwriteAllStaged(base,
       stage(df, base = Some(base), preArranged = preArranged), txn)
   }
 
   private def overwriteAllStaged(base: Snapshot, staged: Staged,
-      txn: Option[(String, Long)]): Snapshot = {
-    policyGuard(staged)
-    val merged =
-      try mergeSchemaJson(base, staged.schemaJson)
-      catch { case e: IllegalStateException => discard(staged); throw e }
-    val next = Snapshot(base.version + 1, "overwrite", base.version,
-      staged.rows, staged.bytes, staged.files, staged.stats, merged,
-      txn.fold(base.txns) { case (a, b) => base.txns + (a -> b) }, Nil,
-      staged.fileRows, staged.blooms, staged.fileBytes,
-      commitSpec(base), staged.partitions, commitSort(base), commitCdc(base),
-      None, base.priorSpecs, Map.empty)
-    if (!tryCommit(next)) {
-      discard(staged)
-      throw new CommitConflictException(
-        s"overwrite of $tableDir: concurrent commit since v${base.version}; rerun")
-    }
-    next
-  }
+      txn: Option[(String, Long)]): Snapshot =
+    commit("overwrite", Abort, Seq(staged), base = Some(base)) { base =>
+      policyGuard(staged)
+      swapFiles(emptied(base), Set.empty, staged).copy(
+        rows = staged.rows, bytes = staged.bytes,
+        schemaJson = mergeSchemaJson(base, staged.schemaJson),
+        txns = txnsAfter(base, txn))
+    }.get
 
   /** Replace the REGION matching a conjunction of [lo, hi] ranges with
     * `df` in ONE atomic commit (op `replace_where`) — delete-the-region
@@ -4292,10 +4079,6 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     val droppedRows = dropped.map(base.fileRows).sum
     val touchedBytes = touched.map(f => base.fileBytes.getOrElse(f,
       fs.getFileStatus(new Path(dataDir, f)).getLen)).sum
-    // the new batch carries NEW rows — constraint-gate it like appends
-    // (policyGuard discards stagedNew itself on failure); survivors are
-    // carried old rows (already validated), like deletes
-    policyGuard(stagedNew)
     val stagedSurv = survivorsDf.map(s => stage(s, base = Some(base)))
     val recordCdc = commitCdc(base)
     val changeStaged =
@@ -4322,43 +4105,23 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         deletedDataFiles = dropped,
         preds = if (preds.nonEmpty && encodedPreds.forall(_.isDefined))
           encodedPreds.flatten else Nil))
-    val merged =
-      try mergeSchemaJson(base, stagedNew.schemaJson)
-      catch { case e: IllegalStateException =>
-        discard(stagedNew); stagedSurv.foreach(discard)
-        changeStaged.foreach(discard); throw e }
-    def sv[T](f: Staged => Map[String, T]): Map[String, T] =
-      stagedSurv.fold(Map.empty[String, T])(f)
-    val survRows = stagedSurv.fold(0L)(_.rows)
-    val survBytes = stagedSurv.fold(0L)(_.bytes)
-    val gone = touched.toSet
-    val next = Snapshot(base.version + 1, "replace_where", base.version,
-      base.rows - droppedRows - straddleLive + survRows + stagedNew.rows,
-      base.bytes - touchedBytes + survBytes + stagedNew.bytes,
-      base.files.filterNot(gone) ++
-        stagedSurv.fold(Seq.empty[String])(_.files) ++ stagedNew.files,
-      (base.stats -- gone) ++ sv(_.stats) ++ stagedNew.stats,
-      merged,
-      txn.fold(base.txns) { case (a, b) => base.txns + (a -> b) }, Nil,
-      (base.fileRows -- gone) ++ sv(_.fileRows) ++ stagedNew.fileRows,
-      (base.blooms -- gone) ++ sv(_.blooms) ++ stagedNew.blooms,
-      (base.fileBytes -- gone) ++ sv(_.fileBytes) ++ stagedNew.fileBytes,
-      commitSpec(base),
-      (base.partitions -- gone) ++ sv(_.partitions) ++ stagedNew.partitions,
-      commitSort(base), recordCdc, changeSet,
-      base.priorSpecs, base.fileSpecIdx -- gone,
+    val written = stagedSurv.toSeq :+ stagedNew
+    commit("replace_where", Abort, written ++ changeStaged,
+        base = Some(base)) { base =>
+      // the new batch carries NEW rows — constraint-gate it like
+      // appends; survivors are carried old rows (already validated),
+      // like deletes
+      policyGuard(stagedNew)
       // touched straddlers rewrote through the DV-applied read —
       // materialized; dropped files' vectors die with them
-      base.dvs -- gone, base.priorSchemas, base.fileSchemaIdx -- gone)
-    if (!tryCommit(next)) {
-      discard(stagedNew)
-      stagedSurv.foreach(discard)
-      changeStaged.foreach(discard)
-      throw new CommitConflictException(
-        s"replace_where on $tableDir: concurrent commit since " +
-          s"v${base.version}; rerun")
-    }
-    next
+      swapFiles(base, touched.toSet, written: _*).copy(
+        rows = base.rows - droppedRows - straddleLive + written.map(_.rows).sum,
+        bytes = base.bytes - touchedBytes + written.map(_.bytes).sum,
+        schemaJson = mergeSchemaJson(base, stagedNew.schemaJson),
+        txns = txnsAfter(base, txn), tombstones = Nil,
+        partitionSpec = commitSpec(base), sortOrder = commitSort(base),
+        cdc = recordCdc, changes = changeSet)
+    }.get
   }
 
   /** DYNAMIC partition overwrite: replace exactly the partitions `df`'s
@@ -4432,7 +4195,6 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       newRows: => DataFrame,
       txn: Option[(String, Long)]): Option[Snapshot] = {
     if (staged.rows == 0) { discard(staged); return None }
-    policyGuard(staged)
     val tuples = staged.partitions.values.toSet
     val dropped = base.files.filter(f =>
       base.partitions.get(f).exists(tuples.contains))
@@ -4474,33 +4236,17 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         // marks the commit as tuple-defined so the mirror knows a
         // dynamic replay is SOUND (see DynamicOverwriteMarker)
         keyColumn = SnapshotLog.DynamicOverwriteMarker))
-    val merged =
-      try mergeSchemaJson(base, staged.schemaJson)
-      catch { case e: IllegalStateException =>
-        discard(staged); changeStaged.foreach(discard); throw e }
-    val gone = dropped.toSet
-    val next = Snapshot(base.version + 1, "replace_where", base.version,
-      base.rows - droppedRows + staged.rows,
-      base.bytes - droppedBytes + staged.bytes,
-      base.files.filterNot(gone) ++ staged.files,
-      (base.stats -- gone) ++ staged.stats,
-      merged,
-      txn.fold(base.txns) { case (a, b) => base.txns + (a -> b) }, Nil,
-      (base.fileRows -- gone) ++ staged.fileRows,
-      (base.blooms -- gone) ++ staged.blooms,
-      (base.fileBytes -- gone) ++ staged.fileBytes,
-      commitSpec(base), (base.partitions -- gone) ++ staged.partitions,
-      commitSort(base), recordCdc, changeSet,
-      base.priorSpecs, base.fileSpecIdx -- gone,
-      base.dvs -- gone, base.priorSchemas, base.fileSchemaIdx -- gone)
-    if (!tryCommit(next)) {
-      discard(staged)
-      changeStaged.foreach(discard)
-      throw new CommitConflictException(
-        s"replace_where on $tableDir: concurrent commit since " +
-          s"v${base.version}; rerun")
+    commit("replace_where", Abort, staged +: changeStaged.toSeq,
+        base = Some(base)) { base =>
+      policyGuard(staged)
+      swapFiles(base, dropped.toSet, staged).copy(
+        rows = base.rows - droppedRows + staged.rows,
+        bytes = base.bytes - droppedBytes + staged.bytes,
+        schemaJson = mergeSchemaJson(base, staged.schemaJson),
+        txns = txnsAfter(base, txn), tombstones = Nil,
+        partitionSpec = commitSpec(base), sortOrder = commitSort(base),
+        cdc = recordCdc, changes = changeSet)
     }
-    Some(next)
   }
 
   /** Re-declare the table's write-time clustering as ONE metadata-only
@@ -4525,12 +4271,9 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         s"sort column '$c' is not a column of $tableDir"))
     }
     if (cols == cur.sortOrder) return cur // idempotent: re-run DDL is a no-op
-    val next = cur.copy(version = cur.version + 1, op = "set_sort",
-      parent = cur.version, sortOrder = cols, cdc = commitCdc(cur),
-      changes = None, ts = 0L)
-    if (!tryCommit(next)) throw new CommitConflictException(
-      s"set_sort on $tableDir: concurrent commit since v${cur.version}; rerun")
-    next
+    commit("set_sort", Abort, base = Some(cur)) { cur =>
+      cur.copy(sortOrder = cols, cdc = commitCdc(cur), changes = None)
+    }.get
   }
 
   /** Turn on row-level CDC for an EXISTING table as ONE metadata-only
@@ -4550,29 +4293,28 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         "(withChangeFeed / CREATE TABLE ... ('change-feed'='true'))")
     val cur = snapshot()
     if (cur.cdc) return cur
-    val next = cur.copy(version = cur.version + 1, op = "enable_feed",
-      parent = cur.version, cdc = true, changes = None, ts = 0L)
-    if (!tryCommit(next)) throw new CommitConflictException(
-      s"enable_feed on $tableDir: concurrent commit since v${cur.version}; rerun")
-    next
+    commit("enable_feed", Abort, base = Some(cur))(
+      _.copy(cdc = true, changes = None)).get
   }
 
+  /** Roll the table back to a retained `version` as a NEW commit: the
+    * old file set is re-published at the top of the log (op `restore`),
+    * so history stays intact, concurrent writers see the rollback
+    * through the same CAS as any commit, and nothing is copied — data
+    * files are immutable, the restore is one manifest write. This is
+    * the undo for a bad delete/merge/append while the horizon holds;
+    * `txns` carries FORWARD from the current version (a restore must
+    * not resurrect already-committed stream batches). A concurrent
+    * commit ABORTS the restore, like [[rewrite]] — a restore replaces
+    * the whole table, so retrying past a commit it hasn't seen would
+    * silently drop that commit's rows (while the carried txns watermark
+    * still marks its stream batch committed — unrecoverable by replay). */
   def restore(version: Long): Snapshot = {
     require(version >= 1, s"restore needs a committed version, got $version")
     val target = snapshot(version)
-    val cur = snapshot()
-    val next = Snapshot(cur.version + 1, "restore", cur.version,
-      target.rows, target.bytes, target.files, target.stats,
-      target.schemaJson, cur.txns, target.tombstones, target.fileRows,
-      target.blooms, target.fileBytes, target.partitionSpec,
-      target.partitions, target.sortOrder, commitCdc(cur), None,
-      target.priorSpecs, target.fileSpecIdx, target.dvs,
-      target.priorSchemas, target.fileSchemaIdx)
-    if (!tryCommit(next))
-      throw new CommitConflictException(
-        s"restore of $tableDir to v$version: concurrent commit since " +
-          s"v${cur.version}; re-examine the new current state and rerun")
-    next
+    commit("restore", Abort, base = Some(snapshot())) { cur =>
+      target.copy(txns = cur.txns, cdc = commitCdc(cur), changes = None)
+    }.get
   }
 
   /** Bin-pack the live set back to ~`targetFileBytes` files via a
@@ -4715,13 +4457,6 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     Some(commitReplacing("compact", base, old, expected, oldBytes, staged))
   }
 
-  /** Garbage-collect: drop manifests older than the last `keepLast`
-    * versions, then delete data files referenced by NO retained manifest
-    * and any dead staging directories. `graceMs` (modification-time
-    * grace) protects an in-flight commit whose files are staged but
-    * whose manifest hasn't published yet — at scale this is the same
-    * contract as object-store table formats' retention horizon. Returns
-    * the number of data files deleted. */
   /** Pin `version` (default: the current head) under an immutable named
     * tag — the audit/reproducibility ref: `read`/`VERSION AS OF
     * '<name>'`/`graft_log(dir, '<name>')` resolve it forever, and
@@ -4830,24 +4565,21 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
           "dropConstraint first to redefine")
       return // identical redefinition: already validated when first added
     }
-    // VALIDATE-then-ANCHOR loop: validate the existing rows at the
+    // VALIDATE-then-ANCHOR: validate the existing rows at the
     // current head, then publish a metadata-only `policy` manifest at
     // head+1. The anchor is what CLOSES the guard-vs-CAS window
     // [[policyGuard]] alone could not: the manifest chain's CAS totally
     // orders this attach against every write commit — a writer whose
     // guard listing predates the claim must CAS a version slot, and
     // exactly one of {that writer, this anchor} wins it. If the writer
-    // wins, this loop re-validates at the NEW head (its rows included);
-    // if the anchor wins, the writer's CAS fails and its rerun stages
-    // with enforcement. No span remains in which an unvalidated commit
+    // wins, the rebased anchor re-validates at the NEW head (its rows
+    // included); if the anchor wins, the writer's CAS fails and its
+    // rerun stages with enforcement. No span remains in which an unvalidated commit
     // can land, however slow the writer. (An EMPTY table has no chain
     // to anchor on — and no rows to validate; the first commit's own
     // CAS at v1 plays the anchor's role.)
     try {
-      var attempts = 0
-      while (attempts < SnapshotLog.MaxCommitAttempts) {
-        if (currentVersion() == 0) return
-        val cur = snapshot()
+      commit("policy", Rebase, skip = _.version == 0) { cur =>
         val table = read(cur.version)
         if (refs.forall(r => table.columns.exists(_.equalsIgnoreCase(r)))) {
           val bad = table.where(
@@ -4857,14 +4589,8 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
             s"cannot add CHECK '$name' ($sql) to $tableDir: existing rows " +
               "violate it — fix the data first (deleteWhere/updateWhere)")
         }
-        val next = cur.copy(version = cur.version + 1, op = "policy",
-          parent = cur.version, cdc = commitCdc(cur), changes = None, ts = 0L)
-        if (tryCommit(next)) return
-        attempts += 1 // lost the slot: re-validate the new head
+        cur.copy(cdc = commitCdc(cur), changes = None)
       }
-      throw new CommitConflictException(
-        s"addConstraint '$name' on $tableDir lost the anchor-commit race " +
-          s"${SnapshotLog.MaxCommitAttempts} times")
     } catch { case e: Throwable =>
       store.delete(constraintRefName(name)) // roll the claim back
       throw e
@@ -4922,9 +4648,16 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     val v = if (version < 0) currentVersion() else version
     require(v >= 1 && store.exists(manifestName(v)),
       s"cannot branch $tableDir at v$v — no such committed version")
+    // branch v1 is the fork snapshot; manifests left by a branch whose
+    // ref is gone (a crash inside createBranch or dropBranch) may hold
+    // another fork, which a new ref must not adopt
+    val fork = snapshot(v)
     val b = branchHandle(name)
-    if (b.currentVersion() == 0)
-      b.tryCommit(snapshot(v).copy(version = 1L, op = "branch", parent = 0L))
+    val v1 = b.commit("branch", Abort, skip = _.version > 0)(_ => fork)
+      .getOrElse(b.snapshot(1))
+    require(v1.files.toSet == fork.files.toSet && v1.rows == fork.rows,
+      s"branch '$name' on $tableDir already holds commits forked from " +
+        "another version — dropBranch it before re-branching elsewhere")
     val payload = s"""{"branch":"$name","fork":$v}"""
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
     if (!store.putIfAbsent(branchRefName(name), payload)) {
@@ -5008,15 +4741,19 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
             s"publish of branch '$name' onto $tableDir: main diverged at " +
               s"v$target (op '${existing.op}' vs branch '${ms.op}') — " +
               "recreate the branch from the current head and replay")
-      } else if (!tryCommit(ms))
-        throw new CommitConflictException(
-          s"publish of branch '$name' onto $tableDir: lost the CAS race " +
-            s"at v$target; rerun publish (already-published prefix is kept)")
+      } else commit(ms.op, Abort, base = Some(snapshot(target - 1)))(_ => ms)
     }
     dropBranch(name)
     fork + bCur - 1
   }
 
+  /** Garbage-collect: drop manifests older than the last `keepLast`
+    * versions, then delete data files referenced by NO retained manifest
+    * and any dead staging directories. `graceMs` (modification-time
+    * grace) protects an in-flight commit whose files are staged but
+    * whose manifest hasn't published yet — at scale this is the same
+    * contract as object-store table formats' retention horizon. Returns
+    * the number of data files deleted. */
   def vacuum(keepLast: Int = 2, graceMs: Long = 3600000L): Int = {
     require(keepLast >= 1, s"must retain at least one version: $keepLast")
     require(branchName.isEmpty,
@@ -5123,12 +4860,6 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         * rows. */
       spec: Seq[PartitionField] = Nil)
 
-  /** Abort (discarding `staged`) if the spec in force for the next
-    * commit no longer matches the spec the files were staged under — the
-    * retry loops may legally race past concurrent APPENDS, but racing
-    * past a concurrent `evolve_spec` would mis-tag the staged files'
-    * partition tuples (see [[Staged.spec]]). Loud
-    * [[CommitConflictException]], same contract as restore/evolve. */
   /** Commit-time constraint re-check — the writer-side half of
     * [[addConstraint]]'s claim-then-validate protocol: a CHECK
     * published (or REDEFINED via drop + re-add) after this write
@@ -5137,9 +4868,9 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * referenced columns; the rerun stages with enforcement. Matching
     * is by (name, expression), not name alone: a same-named constraint
     * whose text changed mid-flight is exactly as unvalidated as a new
-    * one. One ref listing per commit attempt, control-plane sized.
-    * ANY failure here (including a ref-store I/O error) discards the
-    * staged files — nothing may leak into data/ on an aborted path.
+    * one. One ref listing per commit attempt, control-plane sized. It
+    * runs inside [[commit]]'s build, so any failure here (including a
+    * ref-store I/O error) discards the staged files.
     *
     * This listing and the manifest CAS are still not one atomic step,
     * but the former residual window is CLOSED by [[addConstraint]]'s
@@ -5154,26 +4885,29 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * rides the manifest chain. */
   private def policyGuard(staged: Staged): Unit =
     staged.checkedNames.foreach { seen =>
-      try {
-        val frameCols = org.apache.spark.sql.types.DataType
-          .fromJson(staged.schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
-        constraints().foreach { case (n, sql) =>
-          if (!seen.get(n).contains(sql) && staged.rows > 0 &&
-              constraintRefs(sql).forall(r =>
-                frameCols.exists(_.equalsIgnoreCase(r))))
-            throw new CommitConflictException(
-              s"commit to $tableDir: CHECK constraint '$n' ($sql) was added " +
-                "or redefined while this write was staged — its rows were " +
-                "never validated against it; rerun (the restage enforces it)")
-        }
-      } catch { case e: Throwable => discard(staged); throw e }
+      val frameCols = org.apache.spark.sql.types.DataType
+        .fromJson(staged.schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
+      constraints().foreach { case (n, sql) =>
+        if (!seen.get(n).contains(sql) && staged.rows > 0 &&
+            constraintRefs(sql).forall(r =>
+              frameCols.exists(_.equalsIgnoreCase(r))))
+          throw new CommitConflictException(
+            s"commit to $tableDir: CHECK constraint '$n' ($sql) was added " +
+              "or redefined while this write was staged — its rows were " +
+              "never validated against it; rerun (the restage enforces it)")
+      }
     }
 
+  /** Abort if the spec in force for the next commit no longer matches
+    * the spec the files were staged under — a retrying commit may
+    * legally race past concurrent APPENDS, but racing past a concurrent
+    * `evolve_spec` would mis-tag the staged files' partition tuples
+    * (see [[Staged.spec]]). Loud [[CommitConflictException]], same
+    * contract as restore/evolve. */
   private def specGuard(staged: Staged, base: Snapshot): Unit = {
     val want = commitSpec(base)
     if (staged.spec != want) {
-      discard(staged)
       throw new CommitConflictException(
         s"commit to $tableDir: partition spec evolved from ${staged.spec} " +
           s"to $want while this write was staged — its partition tuples " +
@@ -5515,23 +5249,55 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   private def discard(staged: Staged): Unit =
     staged.files.foreach(f => fs.delete(new Path(dataDir, f), false))
 
-  /** Publish `s` at its version slot; false iff the slot was taken. */
-  /** Publish `s` at its version slot. Two manifest layouts, chosen by
-    * live-file count: INLINE (per-file stats/blooms/rows/bytes/tuples in
-    * the manifest itself — one GET plans everything, the right shape for
-    * small tables) and SEGMENTED past [[SnapshotLog.InlineFileLimit]]
-    * files — the per-file plane moves to immutable `seg-*.json` files;
-    * a commit REUSES every parent segment whose files all survive and
-    * writes ONE new segment for the rest, so an append's metadata write
-    * is O(new files), not O(table). At 100 TB (~10⁵ files) this is the
-    * difference between every commit re-serializing gigabytes of
-    * manifest and a constant-sized commit — the manifest-list design of
-    * production table formats, implemented rather than named. Segments
-    * are cached after first read (immutable), so repeated planning costs
-    * one manifest GET + cache hits; the list is bounded by
-    * [[SnapshotLog.MaxManifestSegments]] via consolidation commits.
-    * Orphan segments from lost CAS races are garbage that [[vacuum]]
-    * sweeps. */
+  /** The head snapshot at its listed slot (the slot, not the manifest
+    * body, is what the next commit follows);
+    * [[SnapshotLog.EmptySnapshot]] before any commit. */
+  private def headOrEmpty(): Snapshot = {
+    val v = currentVersion()
+    if (v == 0) EmptySnapshot else snapshot(v).copy(version = v)
+  }
+
+  /** Whether `base` already records the exactly-once `txn` watermark. */
+  private def replayed(base: Snapshot, txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (a, b) => base.txns.get(a).exists(_ >= b) }
+
+  /** `base`'s watermarks with `txn` recorded. */
+  private def txnsAfter(base: Snapshot, txn: Option[(String, Long)]): Map[String, Long] =
+    txn.fold(base.txns)(base.txns + _)
+
+  /** `base` with the `gone` files dropped and the `added` staged files
+    * joined, every per-file plane in step (stats, row and byte counts,
+    * blooms, tuples, spec and epoch tags, deletion vectors). Totals,
+    * tombstones and change sets stay the caller's. */
+  private def swapFiles(base: Snapshot, gone: Set[String], added: Staged*): Snapshot =
+    base.copy(
+      files = base.files.filterNot(gone) ++ added.flatMap(_.files),
+      stats = (base.stats -- gone) ++ added.flatMap(_.stats),
+      fileRows = (base.fileRows -- gone) ++ added.flatMap(_.fileRows),
+      blooms = (base.blooms -- gone) ++ added.flatMap(_.blooms),
+      fileBytes = (base.fileBytes -- gone) ++ added.flatMap(_.fileBytes),
+      partitions = (base.partitions -- gone) ++ added.flatMap(_.partitions),
+      fileSpecIdx = base.fileSpecIdx -- gone, dvs = base.dvs -- gone,
+      fileSchemaIdx = base.fileSchemaIdx -- gone)
+
+  /** `base` with every file gone — the empty table: the schema, spec
+    * history, sort order and stream watermarks survive; the epoch
+    * history goes with the files. */
+  private def emptied(base: Snapshot): Snapshot =
+    EmptySnapshot.copy(schemaJson = base.schemaJson, txns = base.txns,
+      partitionSpec = commitSpec(base), sortOrder = commitSort(base),
+      cdc = commitCdc(base), priorSpecs = base.priorSpecs)
+
+  /** `cur` under the new `schema` epoch: the retained epoch (`withIds`,
+    * `cur`'s schema with explicit field ids) joins the history, and every
+    * live file pins to the epoch that wrote it. */
+  private def newEpoch(cur: Snapshot,
+      schema: org.apache.spark.sql.types.StructType,
+      withIds: org.apache.spark.sql.types.StructType): Snapshot =
+    cur.copy(schemaJson = schema.json, cdc = commitCdc(cur), changes = None,
+      priorSchemas = cur.priorSchemas :+ withIds.json,
+      fileSchemaIdx = cur.files.map(f => f -> cur.schemaIdxOf(f)).toMap)
+
   /** Publish this handle's DECLARED stats/bloom columns as a table ref
     * (once per handle, first commit): what lets a LATER handle —
     * [[SnapshotLog.inheriting]], i.e. every SQL write — keep lifting
@@ -5563,9 +5329,77 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       (arr("stats"), arr("blooms"))
     }.getOrElse((Nil, Nil))
 
+  /** The one commit path: every manifest version this handle writes
+    * goes through here. Each attempt builds the next snapshot from its
+    * base (`base` on the first attempt when given, else the head),
+    * stamps `version`/`parent`/`op` (and clears `ts`, which publishing
+    * stamps), and publishes it through the CAS; a lost slot resolves by
+    * `rule`. `skip` declines the commit on a base that already holds
+    * its effect (a replayed txn watermark, an occupied fresh slot): it
+    * is checked before each build and after each loss, and a skipped
+    * commit returns None. The `staged` sets are discarded whenever the
+    * commit does not land — a guard or build failure, a skip, an abort,
+    * or running out of attempts — so nothing unnamed is left in
+    * `data/` on an aborted path. */
+  private def commit(op: String, rule: OnConflict, staged: Seq[Staged] = Nil,
+      base: Option[Snapshot] = None, skip: Snapshot => Boolean = _ => false)(
+      build: Snapshot => Snapshot): Option[Snapshot] = {
+    def fail(msg: String): Nothing = {
+      staged.foreach(discard)
+      throw new CommitConflictException(msg)
+    }
+    var cur = base.getOrElse(headOrEmpty())
+    var attempts = 0
+    while (!skip(cur)) {
+      val next =
+        try build(cur).copy(version = cur.version + 1, op = op,
+          parent = cur.version, ts = 0L)
+        catch { case e: Throwable => staged.foreach(discard); throw e }
+      if (tryCommit(next)) return Some(next)
+      attempts += 1
+      val newest = headOrEmpty()
+      if (!skip(newest)) {
+        rule match {
+          case Abort =>
+            fail(s"$op on $tableDir: concurrent commit since v${cur.version}; rerun")
+          case OverAppends =>
+            val ops = ((cur.version + 1) to newest.version).map(snapshot(_).op)
+            if (ops.exists(_ != "append")) fail(
+              s"$op on $tableDir: concurrent ${ops.distinct.mkString("/")} " +
+                s"since v${cur.version} may have removed rows the rewrite " +
+                "re-wrote; rerun against the new current version")
+          case Rebase =>
+        }
+        if (attempts == MaxCommitAttempts) fail(
+          s"$op on $tableDir lost the commit race $MaxCommitAttempts times")
+      }
+      cur = newest
+    }
+    staged.foreach(discard)
+    None
+  }
+
+  /** Publish `s` at its version slot; false iff the slot was taken. Two
+    * manifest layouts, chosen by live-file count: INLINE (per-file
+    * stats/blooms/rows/bytes/tuples in the manifest itself — one GET
+    * plans everything, the right shape for small tables) and SEGMENTED
+    * past [[SnapshotLog.InlineFileLimit]] files — the per-file plane
+    * moves to immutable `seg-*.json` files;
+    * a commit REUSES every parent segment whose files all survive and
+    * writes ONE new segment for the rest, so an append's metadata write
+    * is O(new files), not O(table). At 100 TB (~10⁵ files) this is the
+    * difference between every commit re-serializing gigabytes of
+    * manifest and a constant-sized commit — the manifest-list design of
+    * production table formats, implemented rather than named. Segments
+    * are cached after first read (immutable), so repeated planning costs
+    * one manifest GET + cache hits; the list is bounded by
+    * [[SnapshotLog.MaxManifestSegments]] via consolidation commits.
+    * Orphan segments from lost CAS races are garbage that [[vacuum]]
+    * sweeps. */
   private def tryCommit(s: Snapshot): Boolean = {
     publishDeclaredCols()
-    if (s.files.size <= InlineFileLimit) tryCommitInline(s)
+    if (s.files.size <= InlineFileLimit)
+      publishManifest(s.version, mapper.writeValueAsBytes(inlineManifestNode(s)))
     else {
       val nextFiles = s.files.toSet
       val parentSegs = segNamesOf(s.parent)
@@ -5581,12 +5415,16 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       val node = manifestCommon(s)
       val sa = node.putArray("segments")
       segs.foreach(sa.add)
-      val ok = store.putIfAbsent(manifestName(s.version),
-        mapper.writeValueAsBytes(node))
+      val ok = publishManifest(s.version, mapper.writeValueAsBytes(node))
       if (ok) segNamesCache.put(s.version, segs)
       ok
     }
   }
+
+  /** Create version `v`'s manifest iff its slot is free — the one
+    * manifest-slot write; true iff this call created it. */
+  private def publishManifest(v: Long, bytes: Array[Byte]): Boolean =
+    store.putIfAbsent(manifestName(v), bytes)
 
   /** The layout-independent manifest fields. */
   private def manifestCommon(s: Snapshot): com.fasterxml.jackson.databind.node.ObjectNode = {
@@ -5669,11 +5507,7 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     node
   }
 
-  private def tryCommitInline(s: Snapshot): Boolean =
-    store.putIfAbsent(manifestName(s.version),
-      mapper.writeValueAsBytes(inlineManifestNode(s)))
-
-  /** The INLINE manifest layout of `s` — shared by [[tryCommitInline]]
+  /** The INLINE manifest layout of `s` — shared by [[tryCommit]]
     * and the RTAS pending-replace render ([[replacementV1Bytes]]). */
   private def inlineManifestNode(s: Snapshot): com.fasterxml.jackson.databind.node.ObjectNode = {
     // one shared serializer for the layout-independent fields — a field
@@ -5745,6 +5579,20 @@ object SnapshotLog {
   private[graft] val TagNameRe = "^[A-Za-z0-9][A-Za-z0-9._-]*$".r
   private val StagePrefix = "_staged-"
   private val MaxCommitAttempts = 20
+  /** The base of a table's first commit. */
+  private val EmptySnapshot = Snapshot(0, "", 0, 0L, 0L, Seq.empty)
+
+  /** How `commit` resolves a lost manifest slot — chosen per op in code. */
+  private sealed trait OnConflict
+  /** Rebuild on the fresh head and retry: the op commutes with whatever
+    * interleaved (appends; an anchor that re-validates its head). */
+  private case object Rebase extends OnConflict
+  /** Rebuild and retry only when every interleaved commit is an append:
+    * a row-preserving rewrite carries appended files forward, but its
+    * input may hold rows any other op removed. */
+  private case object OverAppends extends OnConflict
+  /** One attempt: the op's input may no longer equal the table. */
+  private case object Abort extends OnConflict
 
   /** `df` rebound so its parquet write stores `TimestampType` columns as
     * TIMESTAMP_MICROS: Spark's INT96 default (deprecated) carries no

@@ -82,6 +82,24 @@ class BranchSpec extends AnyFunSuite {
     assert(log.branches().isEmpty)
   }
 
+  test("re-create refuses a branch whose ref is gone but whose commits remain") {
+    // the state a crash between the branch's v1 commit and its ref put
+    // leaves, or one inside dropBranch (ref deleted before manifests)
+    val log = seeded(freshTable())
+    log.createBranch("g", 1L)
+    log.branch("g").append(Seq((1000, "stale")).toDF("id", "v"))
+    assert(new java.io.File(
+      s"${log.tableDir}/${SnapshotLog.LogDirName}/branchref-g.json").delete())
+    log.append(Seq((2000, "m")).toDF("id", "v"))
+    val ex = intercept[IllegalArgumentException] { log.createBranch("g") }
+    assert(ex.getMessage.contains("dropBranch"), ex.getMessage)
+    assert(log.branches().isEmpty, "a refused re-create writes no ref")
+    log.dropBranch("g")
+    assert(log.createBranch("g") == 2L)
+    assert(ids(log.branch("g")) == (0 until 100) :+ 2000,
+      "the re-created branch forks main v2, not the stale chain")
+  }
+
   test("vacuum keeps branch-referenced files live; dropBranch releases them") {
     val log = seeded(freshTable())
     log.createBranch("keep")

@@ -154,32 +154,18 @@ class ConstraintSpec extends AnyFunSuite {
   }
 
   test("attach anchors on the manifest chain: a write racing past the guard loses the slot") {
-    import graft.table.{CommitStore, InMemoryCommitStore}
+    import graft.table.InMemoryCommitStore
     // the former residual window: a write stages, passes policyGuard
     // (constraint set empty), and a constraint attaches BEFORE the
-    // write's manifest CAS. Injected at the seam the race happens on —
-    // the store's conditional put: the write's first manifest publish
-    // fires a concurrent addConstraint (claim + validate + ANCHOR
-    // commit through a second handle), so the write's CAS must lose
-    // the version slot to the anchor and abort instead of landing
-    // unvalidated rows.
+    // write's manifest CAS. Injected at the store's conditional put:
+    // the write's first manifest publish fires a concurrent
+    // addConstraint (claim + validate + ANCHOR commit through a second
+    // handle), so the write's CAS must lose the version slot to the
+    // anchor and abort instead of landing unvalidated rows.
     val dir = freshTable()
     val inner = new InMemoryCommitStore
-    class RacingStore extends CommitStore {
-      private var armed = false
-      def arm(): Unit = synchronized { armed = true }
-      override def putIfAbsent(name: String, payload: Array[Byte]): Boolean = {
-        val fire = synchronized {
-          val f = armed && name.startsWith("v"); if (f) armed = false; f }
-        if (fire)
-          SnapshotLog(spark, dir, Nil, inner).addConstraint("qty_pos", "qty > 0")
-        inner.putIfAbsent(name, payload)
-      }
-      override def get(name: String): Option[Array[Byte]] = inner.get(name)
-      override def list(): Seq[String] = inner.list()
-      override def delete(name: String): Unit = inner.delete(name)
-    }
-    val racer = new RacingStore
+    val racer = new RacingCommitStore(inner)(
+      SnapshotLog(spark, dir, Nil, inner).addConstraint("qty_pos", "qty > 0"))
     val log = SnapshotLog(spark, dir, Nil, racer)
     log.append(Seq((1, 10)).toDF("id", "qty")) // v1, clean
     racer.arm()

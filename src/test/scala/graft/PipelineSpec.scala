@@ -851,22 +851,25 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("re-registering a log view replaces it in place") {
-    val spark = TestSpark.spark
-    val tmp = Files.createTempDirectory("graft-reg-")
-    val cfg = cfgFor(tmp).copy(tableFormat = PipelineConfig.FormatLog)
-    val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(cfg.tableName,
-      Some(graft.catalog.CatalogRegistrar.Database))
-    def created = spark.sessionState.catalog.getTableMetadata(ident).createTime
-    Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run1")
-    val first = created
-    Thread.sleep(5) // a dropped-and-recreated view would carry a later time
-    // the view reads the mounted log, so later cycles leave it untouched
-    Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run2")
-    graft.catalog.CatalogRegistrar.register(spark, cfg)
-    assert(created == first, "the view was dropped and re-created, not replaced")
-    assert(spark.table(graft.catalog.CatalogRegistrar.name(cfg)).count() == 2 * fixtureRows(spark))
+  Seq(PipelineConfig.FormatDir, PipelineConfig.FormatLog).foreach { fmt =>
+    test(s"re-registering keeps the cataloged object in place ($fmt)") {
+      val spark = TestSpark.spark
+      val tmp = Files.createTempDirectory(s"graft-reg-$fmt-")
+      val cfg = cfgFor(tmp).copy(tableFormat = fmt)
+      val ledger = new LocalJsonLedger(tmp.resolve("ledger"))
+      val ident = org.apache.spark.sql.catalyst.TableIdentifier(cfg.tableName,
+        Some(graft.catalog.CatalogRegistrar.Database))
+      def created = spark.sessionState.catalog.getTableMetadata(ident).createTime
+      Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run1")
+      val first = created
+      Thread.sleep(5) // a dropped-and-recreated object would carry a later time
+      // the view reads the mounted log and the table is refreshed, so
+      // later cycles leave either object in place
+      Orchestrator.runEndToEnd(spark, cfg, src, ledger, "run2")
+      graft.catalog.CatalogRegistrar.register(spark, cfg)
+      assert(created == first, "the object was dropped and re-created, not kept")
+      assert(spark.table(graft.catalog.CatalogRegistrar.name(cfg)).count() == 2 * fixtureRows(spark))
+    }
   }
 
   test("a table_format switch leaves one readable object with the declared columns") {

@@ -137,30 +137,16 @@ class TableLogSpec extends AnyFunSuite {
   }
 
   test("compactSmall resolves a concurrent append without touching its files") {
-    import graft.table.{CommitStore, InMemoryCommitStore}
+    import graft.table.InMemoryCommitStore
     // compactSmall has no transform hook to interleave through, so the
-    // race is injected at the seam the race actually happens on: the
-    // store's conditional put. The first manifest publish triggers a
-    // concurrent append through a second writer (its puts delegate
-    // straight to the inner store), so compactSmall's CAS loses exactly
-    // once and must resolve.
+    // race is injected at the store's conditional put: the first
+    // manifest publish triggers a concurrent append through a second
+    // writer, so compactSmall's CAS loses exactly once and must resolve.
     val dir = freshTable()
     val inner = new InMemoryCommitStore
-    class RacingStore extends CommitStore {
-      private var armed = false
-      def arm(): Unit = synchronized { armed = true }
-      override def putIfAbsent(name: String, payload: Array[Byte]): Boolean = {
-        val fire = synchronized { val f = armed; armed = false; f }
-        if (fire)
-          SnapshotLog(spark, dir, Nil, inner)
-            .append(mkRows(9, 6).toDF("id", "payload"))
-        inner.putIfAbsent(name, payload)
-      }
-      override def get(name: String): Option[Array[Byte]] = inner.get(name)
-      override def list(): Seq[String] = inner.list()
-      override def delete(name: String): Unit = inner.delete(name)
-    }
-    val racer = new RacingStore
+    val racer = new RacingCommitStore(inner)(
+      SnapshotLog(spark, dir, Nil, inner)
+        .append(mkRows(9, 6).toDF("id", "payload")))
     val log = SnapshotLog(spark, dir, Nil, racer)
     (0 until 4).foreach(r => log.append(mkRows(r, 8).toDF("id", "payload")))
     racer.arm()
@@ -1894,7 +1880,7 @@ class TableLogSpec extends AnyFunSuite {
   }
 
   test("append staged under an old spec aborts when a concurrent evolve lands mid-commit") {
-    import graft.table.{CommitStore, InMemoryCommitStore, PartitionField}
+    import graft.table.{InMemoryCommitStore, PartitionField}
     val dir = freshTable()
     val inner = new InMemoryCommitStore
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -1910,17 +1896,8 @@ class TableLogSpec extends AnyFunSuite {
     // attempt, stealing the version slot — exactly the stage-then-lose-
     // the-CAS window the guard closes
     val evolver = new SnapshotLog(spark, dir, Nil, Some(inner))
-    val interposed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val racing: CommitStore = new CommitStore {
-      override def putIfAbsent(name: String, payload: Array[Byte]): Boolean = {
-        if (name.startsWith("v") && interposed.compareAndSet(false, true))
-          evolver.evolvePartitionSpec(Seq(PartitionField.month("ts")))
-        inner.putIfAbsent(name, payload)
-      }
-      override def get(name: String) = inner.get(name)
-      override def list() = inner.list()
-      override def delete(name: String) = inner.delete(name)
-    }
+    val racing = new RacingCommitStore(inner)(
+      evolver.evolvePartitionSpec(Seq(PartitionField.month("ts")))).arm()
     val victim = new SnapshotLog(spark, dir, Nil, Some(racing))
     val ex = intercept[CommitConflictException] {
       victim.append(rows.map { case (t, i, p) => (t, i + 10, p + "!") }
@@ -1940,5 +1917,59 @@ class TableLogSpec extends AnyFunSuite {
     assert(newFiles.nonEmpty &&
       newFiles.map(f => s.partitions(f)).toSet == Set(Seq("648"), Seq("649")),
       "post-evolve appends must carry epoch-month tuples")
+  }
+
+  /** `data/` files that no version of `log` names. */
+  private def unnamedDataFiles(log: SnapshotLog): Set[String] = {
+    val named = (1L to log.currentVersion()).flatMap { v =>
+      val s = log.snapshot(v)
+      s.files ++ s.dvs.values.flatten ++ s.tombstones.map(_.file) ++
+        s.changes.toSeq.flatMap(_.files)
+    }.toSet
+    Option(new java.io.File(log.tableDir, SnapshotLog.DataDirName).listFiles())
+      .toSeq.flatten.map(_.getName)
+      .filterNot(n => n.startsWith(".") || n.endsWith(".crc")).toSet -- named
+  }
+
+  /** A table at v1 whose handle loses its next manifest slot to an
+    * append of `mkRows(9, 4)` through another handle. */
+  private def racedTable(): SnapshotLog = {
+    import graft.table.InMemoryCommitStore
+    val dir = freshTable()
+    val inner = new InMemoryCommitStore
+    val racer = new RacingCommitStore(inner)(
+      SnapshotLog(spark, dir, Nil, inner)
+        .append(mkRows(9, 4).toDF("id", "payload")))
+    val log = new SnapshotLog(spark, dir, Seq("id"), Some(racer))
+    log.append(mkRows(0, 30).toDF("id", "payload").coalesce(1))
+    racer.arm()
+    log
+  }
+
+  test("a delete that rewrites a file aborts when an append takes its slot; its staged files go") {
+    val log = racedTable()
+    val ex = intercept[CommitConflictException] {
+      log.deleteWhereTxn(Seq(("id", 0, 4)), mode = "cow")
+    }
+    assert(ex.getMessage.contains(s"delete on ${log.tableDir}: concurrent commit since v1"),
+      ex.getMessage)
+    assert(log.currentVersion() == 2 && log.snapshot().op == "append",
+      "the table must stay at the racer's commit")
+    assert(rowsOf(log) == (mkRows(0, 30) ++ mkRows(9, 4)).sorted)
+    assert(unnamedDataFiles(log).isEmpty,
+      s"the delete's rewrite must be discarded: ${unnamedDataFiles(log)}")
+  }
+
+  test("a metadata-only rename aborts when an append takes its slot") {
+    val log = racedTable()
+    val ex = intercept[CommitConflictException] {
+      log.renameColumn("payload", "body")
+    }
+    assert(ex.getMessage.contains(s"rename on ${log.tableDir}: concurrent commit since v1"),
+      ex.getMessage)
+    assert(log.currentVersion() == 2 && log.snapshot().op == "append",
+      "the table must stay at the racer's commit")
+    assert(log.read().columns.toSeq == Seq("id", "payload"))
+    assert(unnamedDataFiles(log).isEmpty, unnamedDataFiles(log).toString)
   }
 }
