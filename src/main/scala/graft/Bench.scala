@@ -118,7 +118,6 @@ object Bench {
 object BenchChild {
   def main(args: Array[String]): Unit = {
     val Array(name, sfDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // min-of-7 in one JVM: rep 1 pays JIT/codegen warmup (~3-5 s even on
     // trivial plans); 6 post-warmup samples give min() enough draws that
     // host-noise stalls (single reps inflate 3-10x on this VM — see
@@ -126,13 +125,7 @@ object BenchChild {
     // Only sub-budget (light) queries run all 7; the time budget below
     // still caps heavy ones at >= 3 draws.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "7").toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(LocalSpark.envCpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     // adaptive reps: light queries get the full rep count (JIT warmup

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: run one named query from [[SparkEntry.queries]] N times
   * against a given sf dir, print per-run wall seconds (cold + warm), and
   * optionally the formatted physical plan.
@@ -14,13 +12,7 @@ object RunOne {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
     val explain = args.contains("explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events fixture is TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
+    val b = LocalSpark.builder(LocalSpark.envCpus(32))
     // ad-hoc conf A/B: SPARK_GRAFT_CONF="k=v,k2=v2"
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })

@@ -33,14 +33,7 @@ object ScaleData {
     val src = args(0)
     val dst = args(1)
     val k = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(LocalSpark.envCpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     documentsTimesK(spark, src, dst, k)

@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke harness mirroring the driver's entry check: runs
   * [[SparkEntry.entry]] (the end-to-end medallion flagship) twice —
   * the second pass proves ingest → promote → catalog is idempotent and
   * re-registerable in one session — and prints the result. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events fixture is TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(LocalSpark.envCpus(8)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df1 = SparkEntry.entry(spark)
     df1.show(10, truncate = false)

@@ -1,10 +1,10 @@
 package graft.jobs
 
+import graft.LocalSpark
 import graft.config.PipelineConfig
 import graft.ledger.{LocalJsonLedger, RunId}
 import graft.orchestrate.Orchestrator
 import graft.sources.{JdbcSnapshotSource, ParquetSource, SourceReader}
-import org.apache.spark.sql.SparkSession
 
 import java.nio.file.Paths
 
@@ -54,15 +54,9 @@ object Main {
       .getOrElse(sys.error(s"no pipeline with job_src '$jobSrc' under $pipelinesDir"))
     val runId = opts.getOrElse("--run-id", RunId())
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events fixture is TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      .appName(cfg.displayName)
-      .getOrCreate()
+    val b = LocalSpark.builder(LocalSpark.envCpus(8)).appName(cfg.displayName)
+    sys.env.get("SPARK_GRAFT_MASTER").foreach(b.master)
+    val spark = b.getOrCreate()
     try {
       val ledger = new LocalJsonLedger(
         Paths.get(cfg.rawRoot, "_ledger", cfg.ledgerName))

@@ -688,7 +688,7 @@ private[graft] final class LogTable(private[graft] val log: SnapshotLog,
     requireHead("DELETE")
     LogTable.exactRanges(filters) match {
       case Some(Nil)    => log.truncate() // unconditioned DELETE FROM
-      case Some(ranges) => log.deleteWhereTxn(ranges, None, mode = "auto")
+      case Some(ranges) => log.deleteWhereTxn(ranges, None)
       case None => throw new UnsupportedOperationException(
         s"DELETE on ${log.tableDir}: condition ${filters.mkString(" AND ")} " +
           "does not convert exactly to point/range predicates — use the " +

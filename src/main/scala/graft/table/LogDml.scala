@@ -1336,8 +1336,7 @@ final case class DeleteExprLogCommand(tableDir: String,
       org.apache.spark.sql.GraftBridge.toCol(
         SubqueryPred.materialize(spark, cond._2)), subs)
     GraftTableCatalog.sessionLog(spark, tableDir).deleteWhereExpr(
-      full, hints ++ subHints,
-      txn = None, mode = "auto", semis = semis)
+      full, hints ++ subHints, txn = None, semis = semis)
     Seq.empty
   }
 }
@@ -1361,15 +1360,15 @@ final case class UpdateExprLogCommand(tableDir: String,
       set.map { case (n, e) =>
         n -> org.apache.spark.sql.GraftBridge.toCol(
           SubqueryPred.materialize(spark, e)) },
-      hints ++ subHints, txn = None, mode = "auto", semis = semis)
+      hints ++ subHints, txn = None, semis = semis)
     Seq.empty
   }
 }
 
 /** The executable UPDATE: resolves the table's log at execution and
   * commits through [[SnapshotLog.updateWhereTxn]]'s stats-targeted
-  * three-arm planner (`mode = "auto"` — sparse matches take the
-  * deletion-vector merge-on-read arm, dense ones rewrite; see
+  * planner (sparse matches take the deletion-vector merge-on-read
+  * arm, dense ones rewrite; see
   * [[UpdateLogRule]]); the counting, survivor rewrite and updated-batch
   * staging inside are fully distributed — only the commit decision is
   * local, like every log commit. */
@@ -1382,7 +1381,7 @@ final case class UpdateLogCommand(tableDir: String,
       set.map { case (n, e) =>
         n -> org.apache.spark.sql.GraftBridge.toCol(
           SubqueryPred.materialize(spark, e)) },
-      txn = None, mode = "auto")
+      txn = None)
     Seq.empty
   }
 }

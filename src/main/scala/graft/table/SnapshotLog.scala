@@ -800,36 +800,32 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         Option(cn.get("predSql")).map(_.asText()).getOrElse(""))
     }
     segNamesCache.put(v, segNames)
-    if (segNames.isEmpty)
-      Snapshot(node.get("version").asLong(), node.get("op").asText(),
-        node.get("parent").asLong(), node.get("rows").asLong(),
-        node.get("bytes").asLong(), files, stats, schemaJson, txns, tombstones,
-        fileRows, blooms, fileBytes, partitionSpec, partitions, sortOrder,
-        cdc, changeSet, priorSpecs, fileSpecIdx, dvs,
-        priorSchemas, fileSchemaIdx,
-        Option(node.get("ts")).map(_.asLong()).getOrElse(0L))
+    // the version is the slot read, never the body's claim: a manifest
+    // copied to another slot must not pose as its source version
+    val inline = Snapshot(v, node.get("op").asText(),
+      node.get("parent").asLong(), node.get("rows").asLong(),
+      node.get("bytes").asLong(), files, stats, schemaJson, txns, tombstones,
+      fileRows, blooms, fileBytes, partitionSpec, partitions, sortOrder,
+      cdc, changeSet, priorSpecs, fileSpecIdx, dvs,
+      priorSchemas, fileSchemaIdx,
+      Option(node.get("ts")).map(_.asLong()).getOrElse(0L))
+    if (segNames.isEmpty) inline
     else {
       // segmented manifest: the per-file plane lives in immutable
       // segment files (cached); the manifest itself is O(segments)
       val entries = segNames.flatMap(segEntries)
-      Snapshot(node.get("version").asLong(), node.get("op").asText(),
-        node.get("parent").asLong(), node.get("rows").asLong(),
-        node.get("bytes").asLong(),
-        entries.map(_.file),
-        entries.collect { case e if e.stats.nonEmpty => e.file -> e.stats }.toMap,
-        schemaJson, txns, tombstones,
-        entries.collect { case e if e.rows >= 0 => e.file -> e.rows }.toMap,
-        entries.collect { case e if e.blooms.nonEmpty => e.file -> e.blooms }.toMap,
-        entries.collect { case e if e.bytes >= 0 => e.file -> e.bytes }.toMap,
-        partitionSpec,
-        entries.collect { case e if e.partition.nonEmpty => e.file -> e.partition }.toMap,
-        sortOrder, cdc, changeSet, priorSpecs,
+      inline.copy(files = entries.map(_.file),
+        stats = entries.collect { case e if e.stats.nonEmpty => e.file -> e.stats }.toMap,
+        fileRows = entries.collect { case e if e.rows >= 0 => e.file -> e.rows }.toMap,
+        blooms = entries.collect { case e if e.blooms.nonEmpty => e.file -> e.blooms }.toMap,
+        fileBytes = entries.collect { case e if e.bytes >= 0 => e.file -> e.bytes }.toMap,
+        partitions = entries.collect {
+          case e if e.partition.nonEmpty => e.file -> e.partition }.toMap,
         // explicit per-entry indices only matter once specs diverged;
         // with a single spec the absent-means-current default is exact
-        if (priorSpecs.isEmpty) Map.empty
-        else entries.map(e => e.file -> e.specIdx).toMap,
-        dvs, priorSchemas, fileSchemaIdx,
-        Option(node.get("ts")).map(_.asLong()).getOrElse(0L))
+        fileSpecIdx =
+          if (priorSpecs.isEmpty) Map.empty
+          else entries.map(e => e.file -> e.specIdx).toMap)
     }
   }
 
@@ -2184,10 +2180,8 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       spec: Seq[PartitionField],
       listedChecks: Map[String, String]): Snapshot = {
     val base = snapshot()
-    require(base.tombstones.isEmpty,
-      s"$tableDir has unmaterialized key tombstones; run compact() before " +
-        "a region overwrite (rewriting covered files raw would " +
-        "resurrect tombstoned rows)")
+    requireNoTombstones(base, "a region overwrite (rewriting covered " +
+      "files raw would resurrect tombstoned rows)")
     def newRows: DataFrame =
       if (files.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], writeSchema)
@@ -2340,14 +2334,26 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     // are pending), not the physical manifest total
     val expectedRows =
       if (base.tombstones.isEmpty) base.rows else read(base.version).count()
-    val staged = stage(transform(read(base.version)), base = Some(base))
-    if (staged.rows != expectedRows) {
+    replaceVerified(op, base, base.files, base.rows, base.bytes, expectedRows,
+      transform(read(base.version)))
+  }
+
+  /** Stage `df` as the replacement for `replaced` (`replacedRows` and
+    * `replacedBytes` are that set's PHYSICAL manifest totals) and commit
+    * it through [[commitReplacing]] — only when the staged rows equal
+    * `expected`; otherwise the staged files go and this throws, the
+    * table untouched. */
+  private def replaceVerified(op: String, base: Snapshot,
+      replaced: Seq[String], replacedRows: Long, replacedBytes: Long,
+      expected: Long, df: DataFrame): Snapshot = {
+    val staged = stage(df, base = Some(base))
+    if (staged.rows != expected) {
       discard(staged)
       throw new IllegalStateException(
-        s"$op row-count mismatch for $tableDir: $expectedRows before, " +
+        s"$op row-count mismatch for $tableDir: $expected rows expected, " +
           s"${staged.rows} rewritten — aborted, table untouched")
     }
-    commitReplacing(op, base, base.files, base.rows, base.bytes, staged)
+    commitReplacing(op, base, replaced, replacedRows, replacedBytes, staged)
   }
 
   /** Commit `staged` as the replacement for `replaced`
@@ -2451,10 +2457,9 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   def deleteWhereExpr(cond: Column,
       hints: Seq[(String, Any, Any)] = Nil,
       txn: Option[(String, Long)] = None,
-      mode: String = "auto",
       semis: Seq[SemiTag] = Nil): Option[Snapshot] = {
     requireDeterministic(cond, "deleteWhereExpr")
-    deleteCore(hints, Some(cond), txn, mode, semis)
+    deleteCore(hints, Some(cond), txn, semis)
   }
 
   /** A general predicate must be deterministic: the exact-counting
@@ -2493,19 +2498,13 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * REPLAY a source's predicate delete on a replica idempotently (the
     * predicate ships in the source's [[ChangeSet]]; replaying it prunes
     * on the replica's own stats instead of shipping pre-image rows).
-    *
-    * `mode` — `"auto"` (default) lets the planner choose per file
-    * between copy-on-write and a deletion vector by matched fraction
-    * ([[SnapshotLog.DvRewriteFraction]]); `"cow"` forces the rewrite
-    * for every straddling file with a match — the SQL catalog pins this
-    * (its raw batch scan cannot compose the DV anti-join, so SQL DELETE
-    * must leave the table SQL-readable). Metadata-only whole-file drops
-    * apply in both modes. */
+    * Planned by [[planRemoval]]: whole-file drops first, then per file
+    * copy-on-write or a deletion vector by matched fraction
+    * ([[SnapshotLog.DvRewriteFraction]]). */
   def deleteWhereTxn(preds0: Seq[(String, Any, Any)],
-      txn: Option[(String, Long)] = None,
-      mode: String = "auto"): Option[Snapshot] = {
+      txn: Option[(String, Long)] = None): Option[Snapshot] = {
     require(preds0.nonEmpty, "deleteWhere needs at least one (column, lo, hi)")
-    deleteCore(preds0, None, txn, mode)
+    deleteCore(preds0, None, txn)
   }
 
   /** `cond` as round-trippable SQL text — empty when the expression is
@@ -2546,71 +2545,126 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   private def deleteCore(preds0: Seq[(String, Any, Any)],
       extraCond: Option[Column],
       txn: Option[(String, Long)],
-      mode: String,
       semis: Seq[SemiTag] = Nil): Option[Snapshot] = {
-    require(mode == "auto" || mode == "cow",
-      s"unknown delete mode '$mode' (auto | cow)")
+    // metadata-only drops need PROOF every row matches — file stats can
+    // give it for range conjunctions, never for an arbitrary predicate
+    val p = planRemoval("delete", preds0, extraCond, semis, txn,
+      dropWhole = extraCond.isEmpty && semis.isEmpty).getOrElse(return None)
+    // CDC images: deleted rows from BOTH straddling paths materialize as
+    // a change file (one extra pass over just the straddling files — the
+    // bounded commit-time cost the feed opt-in buys); whole-file drops
+    // ship BY REFERENCE in deletedDataFiles, zero new bytes
+    val changeStaged =
+      if (p.feed.isEmpty || p.matchedRows == 0) None
+      else {
+        val st = stage(p.matched().withColumn("_change_type", lit("delete")),
+          partitioned = false)
+        if (st.rows == 0) { discard(st); None } else Some(st)
+      }
+    commit("delete", Abort, p.staged ++ changeStaged,
+        base = Some(p.base)) { base =>
+      swapFiles(base, p.gone, p.survivors.toSeq: _*).copy(
+        rows = base.rows - p.droppedRows - p.matchedRows,
+        bytes = base.bytes - p.replacedBytes + p.survivors.fold(0L)(_.bytes),
+        txns = txnsAfter(base, txn), tombstones = Nil,
+        partitionSpec = commitSpec(base), sortOrder = commitSort(base),
+        cdc = p.feed.isDefined,
+        changes = p.feed.map(_.copy(
+          files = changeStaged.map(_.files).getOrElse(Nil))),
+        dvs = p.dvs)
+    }
+  }
+
+  /** A predicate DELETE's or UPDATE's row removal as [[planRemoval]]
+    * planned and staged it, against `base`:
+    *  - `droppedRows` — rows of the metadata-only whole-file drops;
+    *  - `matchedRows` — matched rows of the counted files, exact;
+    *  - `survivors`/`dv` — the staged rewrite survivors and vector file;
+    *  - `gone` — the files the commit dereferences; `dvs` — the next
+    *    vector map; `replacedBytes` — the bytes of `gone`;
+    *  - `feed` — the change set without image files on a feed-enabled
+    *    table (dropped files by reference, the predicates when they
+    *    replay), None otherwise;
+    *  - `matched` — the matched rows of the counted files under the
+    *    live schema: the pre-images, and UPDATE's rows to re-assign. */
+  private final case class Removal(base: Snapshot,
+      droppedRows: Long, matchedRows: Long,
+      survivors: Option[Staged], dv: Option[Staged],
+      gone: Set[String], dvs: Map[String, Seq[String]],
+      replacedBytes: Long, feed: Option[ChangeSet],
+      matched: () => DataFrame) {
+    def staged: Seq[Staged] = survivors.toSeq ++ dv
+  }
+
+  /** The one planner of predicate DELETE and UPDATE — "find the touched
+    * files, then drop, rewrite or mark each". In order:
+    *  1. a replayed `txn` returns None; pending key tombstones refuse
+    *     (the per-file row accounting assumes physical rows are logical
+    *     rows), as does an `assigned` column the table lacks;
+    *  2. stats/partition pruning picks the candidate files; with
+    *     `dropWhole`, a file EVERY row of which provably matches
+    *     (contained footer range with zero nulls, or a contained
+    *     partition tuple) leaves the manifest without being opened — a
+    *     whole-partition delete is pure manifest arithmetic at any table
+    *     size. That needs the recorded per-file row count and NO pending
+    *     vector (a covered file's physical count overstates its live
+    *     rows — it takes the counting path instead);
+    *  3. ONE exact counting job over the rest decides per file: untouched
+    *     (0 matches — conservative stats sent it here), COPY-ON-WRITE
+    *     (matched fraction at or above [[SnapshotLog.DvRewriteFraction]]
+    *     — mostly-dead files are cheaper rewritten than dragged through
+    *     read-side anti-joins), or a positional DELETION VECTOR (commit
+    *     O(matched rows) of positions, leave the file untouched — at
+    *     100 TB the difference between a seconds commit and rewriting
+    *     nearly every straddled file for a handful of rows each);
+    *  4. the rewrite set's survivors and the vector file stage, each
+    *     checked against the counting job's numbers;
+    *  5. the pre-image frame, the change-feed predicates, the next vector
+    *     map and the replaced bytes follow.
+    * None when no row can match: nothing staged. */
+  private def planRemoval(op: String, preds0: Seq[(String, Any, Any)],
+      extraCond: Option[Column], semis: Seq[SemiTag],
+      txn: Option[(String, Long)], dropWhole: Boolean,
+      assigned: Seq[String] = Nil): Option[Removal] = {
     val base = snapshot()
-    if (txn.exists { case (a, b) => base.txns.get(a).exists(_ >= b) })
-      return None // replay detected — nothing stages, nothing commits
-    require(base.tombstones.isEmpty,
-      s"$tableDir has unmaterialized key tombstones; run compact() before " +
-        "a predicate delete (its per-file row accounting assumes " +
-        "physical rows are logical rows)")
+    if (replayed(base, txn)) return None // nothing stages, nothing commits
+    requireNoTombstones(base, s"a predicate $op (its per-file row " +
+      "accounting assumes physical rows are logical rows)")
+    if (assigned.nonEmpty) {
+      val missing = assigned.filterNot(schemaOf(base).fieldNames.contains)
+      require(missing.isEmpty,
+        s"updateWhere on $tableDir: no such column(s) ${missing.mkString(", ")}" +
+          " — UPDATE cannot add columns (use addColumn/append for evolution)")
+    }
     // driver-side bound coercion, same contract as readWhere: an
     // unparseable bound matches no row of the column's type → no-op
     val preds = coercePreds(base, preds0).getOrElse(return None)
     val touched =
       if (preds.isEmpty) base.files else candidateFiles(base, preds)
     if (touched.isEmpty) return None
-    // metadata-only drops: a file EVERY row of which provably matches
-    // (contained footer range with zero nulls, or a contained partition
-    // tuple) leaves the manifest without being opened, let alone
-    // rewritten — a whole-partition delete (drop one day, expire one
-    // tenant) on a day/identity-partitioned table is pure manifest
-    // arithmetic at any table size. Requires the recorded per-file row
-    // count for exact accounting, and NO pending deletion vector (a
-    // covered file's physical count overstates its live rows — it
-    // routes to the exact-counting straddling plan instead).
-    val dts = preds.map { case (c, _, _) => c -> schemaType(base, c) }.toMap
-    // metadata-only drops need PROOF every row matches — file stats can
-    // give it for range conjunctions, never for an arbitrary predicate
     val (dropped, rem) =
-      if (extraCond.isDefined || semis.nonEmpty) (Nil, touched)
-      else touched.partition(f =>
-        base.fileRows.contains(f) && !base.dvs.contains(f) &&
-          fullyContained(base, f, preds, dts))
-    val droppedRows = dropped.map(base.fileRows).sum
-    val droppedBytes = dropped.map(f => base.fileBytes.getOrElse(f,
-      fs.getFileStatus(new Path(dataDir, f)).getLen)).sum
-    // a row is deleted iff every predicate matches; NULL keys never
-    // match (between is NULL for NULL inputs, and the survivor filter
-    // keeps NULL explicitly — a bare negation would DROP those rows).
-    // The general predicate coalesces NULL→false for the same reason.
+      if (!dropWhole) (Nil, touched)
+      else {
+        val dts = preds.map { case (c, _, _) => c -> schemaType(base, c) }.toMap
+        touched.partition(f =>
+          base.fileRows.contains(f) && !base.dvs.contains(f) &&
+            fullyContained(base, f, preds, dts))
+      }
+    // a row matches iff every predicate does; NULL keys never match
+    // (between is NULL for NULL inputs, and the survivor filter keeps
+    // NULL explicitly — a bare negation would DROP those rows). The
+    // general predicate coalesces NULL→false for the same reason.
     val matches = (preds.map { case (c, lo, hi) =>
       col(c).isNotNull && col(c).between(lit(lo), lit(hi)) } ++
       extraCond.map(c => coalesce(c, lit(false))) ++
       semis.zipWithIndex.map { case (t, i) => semiMatch(t, i) })
       .reduce(_ && _)
-    val recordCdc = commitCdc(base)
-    // ---- plan the straddling set ------------------------------------
-    // `rem` read position-tagged with PRIOR deletion vectors applied —
-    // all three downstream frames (planner counts, survivor rewrite,
-    // DV/CDC staging) derive from this one shape, so a row a prior DV
-    // already removed can never be re-counted, re-written or re-imaged;
-    // over-cap key sets ride along as SemiTag join flags
+    // every frame (counts, survivors, vector, images) derives from the
+    // one prior-DV-applied shape of [[aliveTagged]]; over-cap key sets
+    // ride along as SemiTag join flags
     def alive(fs: Seq[String]): DataFrame =
       tagSemis(aliveTagged(base, fs), semis)
     val semiFlags = semis.indices.map(semiFlag)
-    // ONE exact counting job over just the straddling files decides
-    // per file: untouched (0 matches — conservative stats sent it here,
-    // nothing to do), COPY-ON-WRITE (matched fraction at or above
-    // [[SnapshotLog.DvRewriteFraction]] — mostly-dead files are cheaper
-    // rewritten than dragged through read-side anti-joins), or a
-    // positional DELETION VECTOR (the low-selectivity case: commit
-    // O(matched rows) of positions, leave the file untouched — at
-    // 100 TB the difference between a seconds commit and rewriting
-    // nearly every straddled file for a handful of rows each).
     val perFile: Map[String, (Long, Long)] =
       if (rem.isEmpty) Map.empty
       else alive(rem).groupBy(col(DvFileCol))
@@ -2619,97 +2673,72 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
         .toMap // O(straddling files) rows — control-plane sized
     val hit = rem.filter(f => perFile.get(f).exists(_._2 > 0))
-    val (rewriteSet, dvSet) =
-      if (mode == "cow") (hit, Nil)
-      else hit.partition { f =>
-        val (live, matched) = perFile(f)
-        matched.toDouble / live >= DvRewriteFraction
-      }
     if (dropped.isEmpty && hit.isEmpty) return None // provably a no-op
+    val (rewriteSet, dvSet) = hit.partition { f =>
+      val (live, matched) = perFile(f)
+      matched.toDouble / live >= DvRewriteFraction
+    }
     val rewriteLive = rewriteSet.map(f => perFile(f)._1).sum
     val rewriteMatched = rewriteSet.map(f => perFile(f)._2).sum
     val dvMatched = dvSet.map(f => perFile(f)._2).sum
-    val stagedOpt =
+    val survivors =
       // every live row of the rewrite set matched → nothing survives:
       // the files just drop (exact — the counts are from the same scan
       // the survivors would come from), no empty staging job
-      if (rewriteSet.isEmpty || rewriteLive == rewriteMatched) None
+      if (rewriteLive == rewriteMatched) None
       else {
         val st = stage(alive(rewriteSet).where(!matches)
           .drop(DvFileCol, DvPosCol).drop(semiFlags: _*), base = Some(base))
         if (st.rows != rewriteLive - rewriteMatched) {
           discard(st)
           throw new IllegalStateException(
-            s"delete on $tableDir: planner counted ${rewriteLive -
+            s"$op on $tableDir: planner counted ${rewriteLive -
               rewriteMatched} survivors, rewrite staged ${st.rows} — aborted")
         }
         Some(st)
       }
-    // the DV file: one parquet of (_file, _pos) for every matched row of
-    // the DV set — broadcast-sized by the planner's own fraction gate
-    val dvStaged =
+    // the vector file: one parquet of (_file, _pos) for every matched row
+    // of the DV set — broadcast-sized by the planner's own fraction gate
+    val dv =
       if (dvSet.isEmpty) None
       else {
         val st = stage(alive(dvSet).where(matches)
           .select(col(DvFileCol).as("_file"), col(DvPosCol).as("_pos"))
           .coalesce(1), partitioned = false)
         if (st.rows != dvMatched) {
-          discard(st); stagedOpt.foreach(discard)
+          discard(st); survivors.foreach(discard)
           throw new IllegalStateException(
-            s"delete on $tableDir: planner counted $dvMatched DV rows, " +
+            s"$op on $tableDir: planner counted $dvMatched DV rows, " +
               s"staging wrote ${st.rows} — aborted")
         }
         Some(st)
       }
-    // CDC images: deleted rows from BOTH straddling paths materialize as
-    // a change file (one extra pass over just the straddling files — the
-    // bounded commit-time cost the feed opt-in buys); whole-file drops
-    // ship BY REFERENCE in deletedDataFiles, zero new bytes. Predicates
-    // ride along type-tagged when encodable, for replica replay.
-    val changeStaged =
-      if (!recordCdc || hit.isEmpty) None
-      else {
-        val deleted = alive(hit).where(matches)
-          .drop(DvFileCol, DvPosCol).drop(semiFlags: _*)
-          .withColumn("_change_type", lit("delete"))
-        val st = stage(deleted, partitioned = false)
-        if (st.rows == 0) { discard(st); None } else Some(st)
-      }
     // with a general predicate the hints are a SUPERSET of the matched
     // rows — recording them as the change predicates would replay a
-    // WIDER delete on a replica; the FULL predicate records as SQL text
+    // WIDER change on a replica; the FULL predicate records as SQL text
     // instead when it round-trips (else rows-only + resync contract)
     val encodedPreds =
       if (extraCond.isDefined) Seq(None)
       else preds.map { case (c, lo, hi) => ChangePred.encode(c, lo, hi) }
-    val changeSet =
-      if (!recordCdc) None
-      else Some(ChangeSet(
-        files = changeStaged.map(_.files).getOrElse(Nil),
-        deletedDataFiles = dropped,
+    val feed =
+      if (!commitCdc(base)) None
+      else Some(ChangeSet(deletedDataFiles = dropped,
         preds = if (encodedPreds.forall(_.isDefined)) encodedPreds.flatten
           else Nil, // one unencodable bound → rows-only CDC, no replay
         predSql = if (semis.nonEmpty) "" // a join is not renderable SQL
           else extraCond.map(renderPredSql).getOrElse("")))
-    val rewriteBytes = rewriteSet.map(f => base.fileBytes.getOrElse(f,
-      fs.getFileStatus(new Path(dataDir, f)).getLen)).sum
     // gone = physically dereferenced files; the DV set's files STAY in
     // the manifest (their stats/blooms remain sound supersets), each
     // gaining the new vector on top of any it already carried
     val gone = (dropped ++ rewriteSet).toSet
-    val newDvs = (base.dvs -- gone) ++ dvStaged.fold(
+    val dvs = (base.dvs -- gone) ++ dv.fold(
       Map.empty[String, Seq[String]])(st => dvSet.map(f =>
         f -> (base.dvs.getOrElse(f, Nil) :+ st.files.head)).toMap)
-    commit("delete", Abort, stagedOpt.toSeq ++ dvStaged ++ changeStaged,
-        base = Some(base)) { base =>
-      swapFiles(base, gone, stagedOpt.toSeq: _*).copy(
-        rows = base.rows - droppedRows - rewriteMatched - dvMatched,
-        bytes = base.bytes - droppedBytes - rewriteBytes +
-          stagedOpt.fold(0L)(_.bytes),
-        txns = txnsAfter(base, txn), tombstones = Nil,
-        partitionSpec = commitSpec(base), sortOrder = commitSort(base),
-        cdc = recordCdc, changes = changeSet, dvs = newDvs)
-    }
+    Some(Removal(base, dropped.map(base.fileRows).sum,
+      rewriteMatched + dvMatched, survivors, dv, gone, dvs,
+      (dropped ++ rewriteSet).map(fileLen(base, _)).sum, feed,
+      () => alive(hit).where(matches)
+        .drop(DvFileCol, DvPosCol).drop(semiFlags: _*)))
   }
 
   /** `fs` read position-tagged ([[DvFileCol]]/[[DvPosCol]]) with PRIOR
@@ -2808,8 +2837,8 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * so they land in their new partitions — hidden partitioning keeps
     * this invisible to the caller, exactly as production formats do.
     *
-    * Planner: stats/partition pruning scopes the straddling set, then
-    * ONE exact counting pass chooses per file, like [[deleteWhereTxn]]:
+    * Planner: [[planRemoval]], as for [[deleteWhereTxn]] but without
+    * whole-file drops — ONE exact counting pass chooses per file:
     *  - matched fraction >= [[SnapshotLog.DvRewriteFraction]] →
     *    copy-on-write: the file's SURVIVORS restage (keeping any debt
     *    drained), its matched rows join the updated batch;
@@ -2817,10 +2846,8 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     *    VECTOR retires the old positions (O(matched rows) committed,
     *    the file untouched) and the updated rows stage as new files.
     * Either way the updated rows are written exactly once and `rows`
-    * is unchanged. `mode = "cow"` pins every straddler to the rewrite
-    * for callers that need a debt-free result NOW; the SQL surface
-    * runs `"auto"` since r12 — its scan serves pending vectors through
-    * [[graft.table.LogDebtScan]].
+    * is unchanged. The SQL surface's scan serves pending vectors
+    * through [[graft.table.LogDebtScan]].
     *
     * CDC: on a feed-enabled table the commit records pre-images
     * (`delete`) and post-images (`insert`) plus the predicates when
@@ -2835,17 +2862,15 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     updateWhereTxn(preds, set)
 
   /** [[updateWhere]] with the exactly-once `(appId, batchId)` watermark
-    * contract of [[appendStream]]/[[deleteWhereTxn]], and the
-    * `mode = "auto" | "cow"` planner pin documented there. */
+    * contract of [[appendStream]]/[[deleteWhereTxn]]. */
   def updateWhereTxn(preds0: Seq[(String, Any, Any)],
       set: Seq[(String, Column)],
-      txn: Option[(String, Long)] = None,
-      mode: String = "auto"): Option[Snapshot] = {
+      txn: Option[(String, Long)] = None): Option[Snapshot] = {
     require(preds0.nonEmpty, "updateWhere needs at least one (column, lo, hi)")
     require(set.nonEmpty, "updateWhere needs at least one (column, value)")
     require(set.map(_._1).distinct.size == set.size,
       s"duplicate assignment columns: ${set.map(_._1).mkString(", ")}")
-    updateCore(preds0, None, Left(set), txn, mode)
+    updateCore(preds0, None, Left(set), txn)
   }
 
   /** [[updateWhereTxn]] generalized to an ARBITRARY deterministic row
@@ -2858,13 +2883,12 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   def updateWhereExpr(cond: Column, set: Seq[(String, Column)],
       hints: Seq[(String, Any, Any)] = Nil,
       txn: Option[(String, Long)] = None,
-      mode: String = "auto",
       semis: Seq[SemiTag] = Nil): Option[Snapshot] = {
     require(set.nonEmpty, "updateWhereExpr needs at least one (column, value)")
     require(set.map(_._1).distinct.size == set.size,
       s"duplicate assignment columns: ${set.map(_._1).mkString(", ")}")
     requireDeterministic(cond, "updateWhereExpr")
-    updateCore(hints, Some(cond), Left(set), txn, mode, semis)
+    updateCore(hints, Some(cond), Left(set), txn, semis)
   }
 
   /** Replay half of a mirrored `update` ([[LogMirror]]): the source's
@@ -2876,7 +2900,7 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * riding the lane watermark. */
   private[table] def applyUpdate(preds0: Seq[(String, Any, Any)],
       postImages: DataFrame, txn: Option[(String, Long)]): Option[Snapshot] =
-    updateCore(preds0, None, Right(postImages), txn, "auto")
+    updateCore(preds0, None, Right(postImages), txn)
 
   /** [[applyUpdate]]'s sibling for GENERAL-predicate updates: the
     * replica retires its rows matching the recorded predicate SQL
@@ -2885,98 +2909,17 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * assertion, same lane watermark. */
   private[table] def applyUpdateExpr(cond: Column,
       postImages: DataFrame, txn: Option[(String, Long)]): Option[Snapshot] =
-    updateCore(Nil, Some(cond), Right(postImages), txn, "auto")
+    updateCore(Nil, Some(cond), Right(postImages), txn)
 
   private def updateCore(preds0: Seq[(String, Any, Any)],
       extraCond: Option[Column],
       newValues: Either[Seq[(String, Column)], DataFrame],
-      txn: Option[(String, Long)], mode: String,
+      txn: Option[(String, Long)],
       semis: Seq[SemiTag] = Nil): Option[Snapshot] = {
-    require(mode == "auto" || mode == "cow",
-      s"unknown update mode '$mode' (auto | cow)")
-    val base = snapshot()
-    if (txn.exists { case (a, b) => base.txns.get(a).exists(_ >= b) })
-      return None // replay detected — nothing stages, nothing commits
-    require(base.tombstones.isEmpty,
-      s"$tableDir has unmaterialized key tombstones; run compact() before " +
-        "a predicate update (its per-file row accounting assumes " +
-        "physical rows are logical rows)")
-    val schema =
-      if (base.schemaJson.nonEmpty)
-        org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      else read(base.version).schema // pre-schema manifest: one footer
-    newValues.left.foreach { set =>
-      val missing = set.map(_._1).filterNot(schema.fieldNames.contains)
-      require(missing.isEmpty,
-        s"updateWhere on $tableDir: no such column(s) ${missing.mkString(", ")}" +
-          " — UPDATE cannot add columns (use addColumn/append for evolution)")
-    }
-    val preds = coercePreds(base, preds0).getOrElse(return None)
-    val touched =
-      if (preds.isEmpty) base.files else candidateFiles(base, preds)
-    if (touched.isEmpty) return None
-    val matches = (preds.map { case (c, lo, hi) =>
-      col(c).isNotNull && col(c).between(lit(lo), lit(hi)) } ++
-      extraCond.map(c => coalesce(c, lit(false))) ++
-      semis.zipWithIndex.map { case (t, i) => semiMatch(t, i) })
-      .reduce(_ && _)
-    // over-cap key sets ride along as SemiTag join flags on every
-    // planner frame (counting, survivors, DV, updated batch, CDC)
-    def lively(fs: Seq[String]): DataFrame =
-      tagSemis(aliveTagged(base, fs), semis)
-    val semiFlags = semis.indices.map(semiFlag)
-    val recordCdc = commitCdc(base)
-    // ONE exact counting pass over the straddling set (see
-    // deleteWhereTxn — same planner, same prior-DV-applied shape)
-    val perFile: Map[String, (Long, Long)] =
-      lively(touched).groupBy(col(DvFileCol))
-        .agg(count(lit(1)).as("live"),
-          count(org.apache.spark.sql.functions.when(matches, 1)).as("matched"))
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap // O(straddling files) rows — control-plane sized
-    val hit = touched.filter(f => perFile.get(f).exists(_._2 > 0))
-    if (hit.isEmpty) return None // provably a no-op
-    val (rewriteSet, dvSet) =
-      if (mode == "cow") (hit, Nil)
-      else hit.partition { f =>
-        val (live, matched) = perFile(f)
-        matched.toDouble / live >= DvRewriteFraction
-      }
-    val matchedTotal = hit.map(f => perFile(f)._2).sum
-    val rewriteLive = rewriteSet.map(f => perFile(f)._1).sum
-    val rewriteMatched = rewriteSet.map(f => perFile(f)._2).sum
-    val dvMatched = dvSet.map(f => perFile(f)._2).sum
-    // survivors of the rewrite set (a fully-matched file has none — it
-    // just drops from the manifest; its rows continue as updated copies)
-    val survivorsOpt =
-      if (rewriteSet.isEmpty || rewriteLive == rewriteMatched) None
-      else {
-        val st = stage(lively(rewriteSet).where(!matches)
-          .drop(DvFileCol, DvPosCol).drop(semiFlags: _*), base = Some(base))
-        if (st.rows != rewriteLive - rewriteMatched) {
-          discard(st)
-          throw new IllegalStateException(
-            s"update on $tableDir: planner counted ${rewriteLive -
-              rewriteMatched} survivors, rewrite staged ${st.rows} — aborted")
-        }
-        Some(st)
-      }
-    // the DV file: matched positions of the merge-on-read set
-    val dvStaged =
-      if (dvSet.isEmpty) None
-      else {
-        val st = stage(lively(dvSet).where(matches)
-          .select(col(DvFileCol).as("_file"), col(DvPosCol).as("_pos"))
-          .coalesce(1), partitioned = false)
-        if (st.rows != dvMatched) {
-          discard(st); survivorsOpt.foreach(discard)
-          throw new IllegalStateException(
-            s"update on $tableDir: planner counted $dvMatched DV rows, " +
-              s"staging wrote ${st.rows} — aborted")
-        }
-        Some(st)
-      }
+    val p = planRemoval("update", preds0, extraCond, semis, txn,
+      dropWhole = false, assigned = newValues.fold(_.map(_._1), _ => Nil))
+      .getOrElse(return None)
+    val schema = schemaOf(p.base)
     // the updated rows, restaged through the normal partition/sort
     // pipeline (they may land in NEW partitions when a partition-source
     // column changes). Every right-hand side evaluates against the OLD
@@ -2984,7 +2927,7 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     val updatedDf = newValues match {
       case Left(set) =>
         val byName = set.toMap
-        lively(hit).where(matches).select(schema.fields.map { f =>
+        p.matched().select(schema.fields.map { f =>
           byName.get(f.name)
             .map(_.cast(f.dataType).as(f.name))
             .getOrElse(col(f.name))
@@ -2992,11 +2935,11 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       case Right(posts) =>
         posts.select(schema.fieldNames.map(col).toSeq: _*)
     }
-    val updStaged = stage(updatedDf, base = Some(base))
-    if (updStaged.rows != matchedTotal) {
-      discard(updStaged); dvStaged.foreach(discard); survivorsOpt.foreach(discard)
+    val updStaged = stage(updatedDf, base = Some(p.base))
+    if (updStaged.rows != p.matchedRows) {
+      discard(updStaged); p.staged.foreach(discard)
       throw new IllegalStateException(
-        s"update on $tableDir: planner matched $matchedTotal rows, " +
+        s"update on $tableDir: planner matched ${p.matchedRows} rows, " +
           s"updated batch staged ${updStaged.rows} — aborted" +
           (if (newValues.isRight) " (replica diverged from its source — " +
             "resync the mirror from a full read)" else ""))
@@ -3004,11 +2947,9 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     // CDC images: pre-images from the one alive shape, post-images are
     // the staged updated batch re-read BY NAME (exactly what committed)
     val changeStaged =
-      if (!recordCdc) None
+      if (p.feed.isEmpty) None
       else {
-        val pre = lively(hit).where(matches)
-          .drop(DvFileCol, DvPosCol).drop(semiFlags: _*)
-          .withColumn("_change_type", lit("delete"))
+        val pre = p.matched().withColumn("_change_type", lit("delete"))
         val post = spark.read.parquet(
             updStaged.files.map(f => new Path(dataDir, f).toString): _*)
           .select(schema.fieldNames.map(col).toSeq: _*)
@@ -3016,39 +2957,21 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         val st = stage(pre.unionByName(post), partitioned = false)
         if (st.rows == 0) { discard(st); None } else Some(st)
       }
-    // general-predicate updates: the hints are a superset of the
-    // matched rows, so replaying them as predicates would retire too
-    // many replica rows — the FULL predicate records as SQL text when
-    // it round-trips (same contract as deleteCore)
-    val encodedPreds =
-      if (extraCond.isDefined) Seq(None)
-      else preds.map { case (c, lo, hi) => ChangePred.encode(c, lo, hi) }
-    val changeSet =
-      if (!recordCdc) None
-      else Some(ChangeSet(
-        files = changeStaged.map(_.files).getOrElse(Nil),
-        preds = if (encodedPreds.forall(_.isDefined)) encodedPreds.flatten
-          else Nil, // one unencodable bound → rows-only CDC, no replay
-        predSql = if (semis.nonEmpty) "" // a join is not renderable SQL
-          else extraCond.map(renderPredSql).getOrElse("")))
-    val rewriteBytes = rewriteSet.map(f => base.fileBytes.getOrElse(f,
-      fs.getFileStatus(new Path(dataDir, f)).getLen)).sum
-    val gone = rewriteSet.toSet
-    val newDvs = (base.dvs -- gone) ++ dvStaged.fold(
-      Map.empty[String, Seq[String]])(st => dvSet.map(f =>
-        f -> (base.dvs.getOrElse(f, Nil) :+ st.files.head)).toMap)
-    val written = survivorsOpt.toSeq :+ updStaged
-    commit("update", Abort, written ++ dvStaged ++ changeStaged,
-        base = Some(base)) { base =>
+    val written = p.survivors.toSeq :+ updStaged
+    commit("update", Abort, written ++ p.dv ++ changeStaged,
+        base = Some(p.base)) { base =>
       // updated copies carry NEW values — a CHECK published since this
       // write staged must abort it
       policyGuard(updStaged)
       // rows carry over: an update never changes the row count
-      swapFiles(base, gone, written: _*).copy(
-        bytes = base.bytes - rewriteBytes + written.map(_.bytes).sum,
+      swapFiles(base, p.gone, written: _*).copy(
+        bytes = base.bytes - p.replacedBytes + written.map(_.bytes).sum,
         txns = txnsAfter(base, txn), tombstones = Nil,
         partitionSpec = commitSpec(base), sortOrder = commitSort(base),
-        cdc = recordCdc, changes = changeSet, dvs = newDvs)
+        cdc = p.feed.isDefined,
+        changes = p.feed.map(_.copy(
+          files = changeStaged.map(_.files).getOrElse(Nil))),
+        dvs = p.dvs)
     }
   }
 
@@ -3083,12 +3006,10 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   def mergeByKey(updates: DataFrame, column: String,
       txn: Option[(String, Long)] = None): Snapshot = {
     val base = snapshot()
-    if (txn.exists { case (a, b) => base.txns.get(a).exists(_ >= b) })
+    if (replayed(base, txn))
       return base // replay detected — nothing stages, nothing commits
-    require(base.tombstones.isEmpty,
-      s"$tableDir has unmaterialized key tombstones; run compact() before " +
-        "a copy-on-write merge (rewriting covered files raw would " +
-        "resurrect tombstoned rows)")
+    requireNoTombstones(base, "a copy-on-write merge (rewriting covered " +
+      "files raw would resurrect tombstoned rows)")
     // materialize the batch once: it feeds the bounds aggregate, the
     // anti-join and the staged union — recomputing an expensive (or
     // non-deterministic) update source three times could even disagree
@@ -3136,15 +3057,9 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         val touchedDf = scan(base, touched)
         val survivors = touchedDf.join(
           u.select(col(column)).distinct(), Seq(column), "left_anti")
-        val tRows =
-          if (touched.forall(base.fileRows.contains) &&
-              !touched.exists(base.dvs.contains))
-            touched.map(base.fileRows).sum
-          else touchedDf.count() // live count: physical minus DV'd
-        (tRows, survivors.unionByName(u))
+        (liveRows(base, touched), survivors.unionByName(u))
       }
-    val touchedBytes =
-      touched.map(f => fs.getFileStatus(new Path(dataDir, f)).getLen).sum
+    val touchedBytes = touched.map(fileLen(base, _)).sum
     val staged = stage(stagedDf, base = Some(base))
     // CDC images: replaced rows (pre-images, read again from just the
     // touched files) as deletes, the whole update batch as inserts —
@@ -3263,7 +3178,7 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         * becomes exact: only residual-PASSING duplicates abort. */
       residual: Option[Column] = None): Snapshot = {
     val base = snapshot()
-    if (txn.exists { case (a, b) => base.txns.get(a).exists(_ >= b) })
+    if (replayed(base, txn))
       return base // replay detected — nothing stages, nothing commits
     require(keys.nonEmpty, "mergeClauses needs at least one (target, source) key pair")
     require(keys.map(_._1).distinct.size == keys.size &&
@@ -3271,10 +3186,8 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       s"mergeClauses keys must be distinct per side, got $keys")
     require(base.schemaJson.nonEmpty,
       s"$tableDir is pre-schema; commit one append before clause merges")
-    require(base.tombstones.isEmpty,
-      s"$tableDir has unmaterialized key tombstones; run compact() before " +
-        "a copy-on-write merge (rewriting covered files raw would " +
-        "resurrect tombstoned rows)")
+    requireNoTombstones(base, "a copy-on-write merge (rewriting covered " +
+      "files raw would resurrect tombstoned rows)")
     def okActions(cs: Seq[MergeWhen], allowed: Set[String], what: String): Unit =
       cs.foreach(c => require(allowed(c.action),
         s"mergeClauses: $what clauses take ${allowed.mkString("/")}, " +
@@ -3453,14 +3366,8 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       val stagedDf =
         if (rewriteTouched) outM.unionByName(outT).unionByName(outS)
         else outS // insert-only merge: no target file rewrites
-      val touchedRows =
-        if (rewritten.isEmpty) 0L
-        else if (rewritten.forall(base.fileRows.contains) &&
-            !rewritten.exists(base.dvs.contains))
-          rewritten.map(base.fileRows).sum
-        else tgtRaw.count() // live count: physical minus DV'd
-      val touchedBytes = rewritten.map(f => base.fileBytes.getOrElse(f,
-        fs.getFileStatus(new Path(dataDir, f)).getLen)).sum
+      val touchedRows = liveRows(base, rewritten)
+      val touchedBytes = rewritten.map(fileLen(base, _)).sum
       val staged = stage(stagedDf, base = Some(base))
       // CDC images: pre-images (type delete) for every row a matched or
       // by-source clause updated/deleted; post-images (type insert) for
@@ -3543,7 +3450,7 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   def deleteKeys(column: String, keys: DataFrame,
       txn: Option[(String, Long)] = None): Option[Snapshot] = {
     val base = snapshot()
-    if (txn.exists { case (a, b) => base.txns.get(a).exists(_ >= b) })
+    if (replayed(base, txn))
       return None // replay detected — nothing stages, nothing commits
     // one file per tombstone: a sparse key list is broadcast-sized by
     // assumption, so the coalesce is a no-op-cheap narrow plan
@@ -4034,12 +3941,10 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       "overwriteWhere needs at least one (column, lo, hi) — use " +
         "overwriteAll for the full-table overwrite")
     val base = snapshot()
-    if (txn.exists { case (a, b) => base.txns.get(a).exists(_ >= b) })
+    if (replayed(base, txn))
       return base // replay detected — nothing stages, nothing commits
-    require(base.tombstones.isEmpty,
-      s"$tableDir has unmaterialized key tombstones; run compact() before " +
-        "a region overwrite (rewriting covered files raw would " +
-        "resurrect tombstoned rows)")
+    requireNoTombstones(base, "a region overwrite (rewriting covered " +
+      "files raw would resurrect tombstoned rows)")
     overwriteWhereStaged(base, preds0,
       stage(df, base = Some(base), preArranged = preArranged), df, txn)
   }
@@ -4070,15 +3975,9 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       else Some(scan(base, straddle).where(
         org.apache.spark.sql.functions.not(
           org.apache.spark.sql.functions.coalesce(matches, lit(false)))))
-    val straddleLive =
-      if (straddle.isEmpty) 0L
-      else if (straddle.forall(base.fileRows.contains) &&
-          !straddle.exists(base.dvs.contains))
-        straddle.map(base.fileRows).sum
-      else scan(base, straddle).count()
+    val straddleLive = liveRows(base, straddle)
     val droppedRows = dropped.map(base.fileRows).sum
-    val touchedBytes = touched.map(f => base.fileBytes.getOrElse(f,
-      fs.getFileStatus(new Path(dataDir, f)).getLen)).sum
+    val touchedBytes = touched.map(fileLen(base, _)).sum
     val stagedSurv = survivorsDf.map(s => stage(s, base = Some(base)))
     val recordCdc = commitCdc(base)
     val changeStaged =
@@ -4149,13 +4048,12 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   def overwritePartitions(df: DataFrame,
       txn: Option[(String, Long)] = None): Option[Snapshot] = {
     val base = snapshot()
-    if (txn.exists { case (a, b) => base.txns.get(a).exists(_ >= b) })
+    if (replayed(base, txn))
       return None // replay detected — nothing stages, nothing commits
     require(commitSpec(base).nonEmpty,
       s"$tableDir has no partition spec — dynamic partition overwrite " +
         "is partition-wise by definition; use overwriteAll/overwriteWhere")
-    require(base.tombstones.isEmpty,
-      s"$tableDir has unmaterialized key tombstones; run compact() first")
+    requireNoTombstones(base, "a dynamic partition overwrite")
     require(base.files.forall(f => base.specOf(f) == base.partitionSpec),
       s"$tableDir carries partition-spec evolution debt — old-spec " +
         "tuples are incomparable; compact() to converge the layout first")
@@ -4176,8 +4074,7 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     require(commitSpec(base).nonEmpty,
       s"$tableDir has no partition spec — dynamic partition overwrite " +
         "is partition-wise by definition; use overwriteAll/overwriteWhere")
-    require(base.tombstones.isEmpty,
-      s"$tableDir has unmaterialized key tombstones; run compact() first")
+    requireNoTombstones(base, "a dynamic partition overwrite")
     require(base.files.forall(f => base.specOf(f) == base.partitionSpec),
       s"$tableDir carries partition-spec evolution debt — old-spec " +
         "tuples are incomparable; compact() to converge the layout first")
@@ -4198,14 +4095,8 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     val tuples = staged.partitions.values.toSet
     val dropped = base.files.filter(f =>
       base.partitions.get(f).exists(tuples.contains))
-    val droppedRows =
-      if (dropped.forall(base.fileRows.contains) &&
-          !dropped.exists(base.dvs.contains))
-        dropped.map(base.fileRows).sum
-      else if (dropped.isEmpty) 0L
-      else scan(base, dropped).count()
-    val droppedBytes = dropped.map(f => base.fileBytes.getOrElse(f,
-      fs.getFileStatus(new Path(dataDir, f)).getLen)).sum
+    val droppedRows = liveRows(base, dropped)
+    val droppedBytes = dropped.map(fileLen(base, _)).sum
     val recordCdc = commitCdc(base)
     // A dropped file carrying a PENDING deletion vector must not ship
     // by reference: [[readChangeRows]] images referenced files via the
@@ -4354,30 +4245,20 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     // full compact() is their materialization path.
     val sized = base.files
       .filterNot(f => base.dvs.contains(f) || base.fileSchemaIdx.contains(f))
-      .map(f => f -> base.fileBytes.getOrElse(f,
-      fs.getFileStatus(new Path(dataDir, f)).getLen)) // pre-field manifests
+      .map(f => f -> fileLen(base, f))
     val small = sized.filter(_._2 < targetFileBytes / 2)
     val smallFiles = small.map(_._1)
     val smallBytes = small.map(_._2).sum
     val nOut = SnapshotLog.packedFileCount(smallBytes, targetFileBytes)
     if (small.size <= 1 || small.size <= nOut) return None
-    val df = reader(base)
-      .parquet(smallFiles.map(f => new Path(dataDir, f).toString): _*)
-    val expectedRows =
-      if (smallFiles.forall(base.fileRows.contains)) smallFiles.map(base.fileRows).sum
-      else df.count()
-    val staged = stage(df.coalesce(nOut), base = Some(base))
-    if (staged.rows != expectedRows) {
-      discard(staged)
-      throw new IllegalStateException(
-        s"compactSmall row-count mismatch for $tableDir: $expectedRows in " +
-          s"the undersized set, ${staged.rows} rewritten — aborted")
-    }
-    // expectedRows is exactly the physical rows of the replaced small
-    // set, so the shared replacement commit (with append-race
+    // the small set carries no vector, so its live rows are exactly its
+    // physical rows and the shared replacement commit (with append-race
     // resolution) applies unchanged
-    Some(commitReplacing("compact", base, smallFiles, expectedRows,
-      smallBytes, staged))
+    val smallRows = liveRows(base, smallFiles)
+    Some(replaceVerified("compact", base, smallFiles, smallRows, smallBytes,
+      smallRows, reader(base)
+        .parquet(smallFiles.map(f => new Path(dataDir, f).toString): _*)
+        .coalesce(nOut)))
   }
 
   /** Targeted merge-on-read materialization: rewrite ONLY the files a
@@ -4406,22 +4287,13 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     val vectored = dvFrame(base, covered)
       .where(col("_file").isInCollection(covered.toSet)).count()
     val expected = physRows - vectored
-    val coveredBytes = covered.map(f => base.fileBytes.getOrElse(f,
-      fs.getFileStatus(new Path(dataDir, f)).getLen)).sum
     // scan == the epoch-aligned, vector-applied logical read (tombstones
     // are empty by the delegate above) — also drains any rename debt of
-    // the covered files, since survivors re-stage under current names
-    val staged = stage(scan(base, covered), base = Some(base))
-    if (staged.rows != expected) {
-      discard(staged)
-      throw new IllegalStateException(
-        s"materializeDeletes row-count mismatch for $tableDir: $expected " +
-          s"live in the covered set, ${staged.rows} rewritten — aborted")
-    }
+    // the covered files, since survivors re-stage under current names.
     // `expected` is the covered set's LIVE rows — commitReplacing's row
     // accounting is in logical rows, so the total stays exact
-    Some(commitReplacing("compact", base, covered, expected,
-      coveredBytes, staged))
+    Some(replaceVerified("compact", base, covered, expected,
+      covered.map(fileLen(base, _)).sum, expected, scan(base, covered)))
   }
 
   /** Targeted rename-debt materialization: rewrite ONLY the files still
@@ -4439,22 +4311,9 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       base.fileSchemaIdx.contains(f) && !base.dvs.contains(f))
     if (old.isEmpty) return None
     if (base.tombstones.nonEmpty) return compact()
-    val expected =
-      if (old.forall(base.fileRows.contains)) old.map(base.fileRows).sum
-      else old.groupBy(base.schemaIdxOf).map { case (ep, g) =>
-        epochReader(base, ep)
-          .parquet(g.map(f => new Path(dataDir, f).toString): _*).count()
-      }.sum
-    val oldBytes = old.map(f => base.fileBytes.getOrElse(f,
-      fs.getFileStatus(new Path(dataDir, f)).getLen)).sum
-    val staged = stage(epochAlignedRead(base, old), base = Some(base))
-    if (staged.rows != expected) {
-      discard(staged)
-      throw new IllegalStateException(
-        s"materializeRenames row-count mismatch for $tableDir: $expected " +
-          s"in the old-epoch set, ${staged.rows} rewritten — aborted")
-    }
-    Some(commitReplacing("compact", base, old, expected, oldBytes, staged))
+    val expected = liveRows(base, old)
+    Some(replaceVerified("compact", base, old, expected,
+      old.map(fileLen(base, _)).sum, expected, epochAlignedRead(base, old)))
   }
 
   /** Pin `version` (default: the current head) under an immutable named
@@ -5249,17 +5108,40 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
   private def discard(staged: Staged): Unit =
     staged.files.foreach(f => fs.delete(new Path(dataDir, f), false))
 
-  /** The head snapshot at its listed slot (the slot, not the manifest
-    * body, is what the next commit follows);
-    * [[SnapshotLog.EmptySnapshot]] before any commit. */
+  /** The head snapshot; [[SnapshotLog.EmptySnapshot]] before any
+    * commit. */
   private def headOrEmpty(): Snapshot = {
     val v = currentVersion()
-    if (v == 0) EmptySnapshot else snapshot(v).copy(version = v)
+    if (v == 0) EmptySnapshot else snapshot(v)
   }
 
   /** Whether `base` already records the exactly-once `txn` watermark. */
   private def replayed(base: Snapshot, txn: Option[(String, Long)]): Boolean =
     txn.exists { case (a, b) => base.txns.get(a).exists(_ >= b) }
+
+  /** Refuse `what` while `base` has pending key tombstones. */
+  private def requireNoTombstones(base: Snapshot, what: String): Unit =
+    require(base.tombstones.isEmpty,
+      s"$tableDir has unmaterialized key tombstones; run compact() before $what")
+
+  /** Data file `f`'s size: the manifest's record, else (manifests written
+    * before the field) one file status. */
+  private def fileLen(base: Snapshot, f: String): Long =
+    base.fileBytes.getOrElse(f, fs.getFileStatus(new Path(dataDir, f)).getLen)
+
+  /** The live rows of `files`: their recorded counts when every file has
+    * one and none carries a deletion vector, else a count of their
+    * [[scan]]. */
+  private def liveRows(base: Snapshot, files: Seq[String]): Long =
+    if (files.forall(base.fileRows.contains) && !files.exists(base.dvs.contains))
+      files.map(base.fileRows).sum
+    else scan(base, files).count()
+
+  /** `base`'s schema; a pre-schema manifest's comes from one footer. */
+  private def schemaOf(base: Snapshot): org.apache.spark.sql.types.StructType =
+    if (base.schemaJson.isEmpty) read(base.version).schema
+    else org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
 
   /** `base`'s watermarks with `txn` recorded. */
   private def txnsAfter(base: Snapshot, txn: Option[(String, Long)]): Map[String, Long] =
@@ -5636,14 +5518,12 @@ object SnapshotLog {
     * little. */
   val MergeRouteKeyCap = 100000L
 
-  /** [[SnapshotLog.deleteWhere]] auto-mode planner threshold: a
-    * straddling file whose matched fraction (vs its recorded physical
-    * rows) is at or above this rewrites copy-on-write; below it the
-    * matches commit as a positional deletion vector instead —
-    * O(matched rows) written, the file untouched. 0.0 forces DV-always,
-    * 1.0 CoW-always (a fully-matching file still drops metadata-only). */
-  val DvRewriteFraction: Double =
-    sys.env.get("SPARK_GRAFT_DV_REWRITE_FRACTION").map(_.toDouble).getOrElse(0.5)
+  /** The predicate DELETE/UPDATE planner's threshold: a straddling
+    * file whose matched fraction (of its live rows) is at or above this
+    * rewrites copy-on-write; below it the matches commit as a positional
+    * deletion vector instead — O(matched rows) written, the file
+    * untouched. */
+  val DvRewriteFraction = 0.5
 
   /** Helper column names for the DV read path — underscored past any
     * plausible user column. */

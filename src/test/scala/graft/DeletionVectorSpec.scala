@@ -188,18 +188,6 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(ids(log) == ((0 until 400).filterNot(_ == 50)))
   }
 
-  test("mode=cow forces the rewrite; the auto fraction knob is the only difference") {
-    val log = clustered(freshTable())
-    val before = log.snapshot()
-    val s = log.deleteWhereTxn(Seq(("id", 50, 50)), None, mode = "cow").get
-    assert(s.dvs.isEmpty, "cow mode must never commit a vector")
-    assert(s.files.size == 4 && (s.files.toSet -- before.files).size == 1,
-      "the straddled file rewrote")
-    assert(ids(log) == ((0 until 400).filterNot(_ == 50)))
-    assertThrows[IllegalArgumentException](
-      log.deleteWhereTxn(Seq(("id", 1, 1)), None, mode = "bogus"))
-  }
-
   test("change feed: a vector delete records exact images and nets to the table") {
     val log = clustered(freshTable(), feed = true)
     val from = log.currentVersion()

@@ -1767,6 +1767,8 @@ class TableLogSpec extends AnyFunSuite {
     // unions by name, so nothing duplicates
     assert(rowsOf(logOn()) == (mkRows(0, 10) ++ mkRows(1, 5)).sorted)
     assert(logOn().read(1).count() == 10, "time travel reads through the store")
+    assert(logOn().snapshot(2).version == 2,
+      "a snapshot's version is the slot it was read from, not the body's")
   }
 
   /** In-memory S3: honors `If-None-Match: *`, paginates ListObjectsV2 —
@@ -1949,7 +1951,7 @@ class TableLogSpec extends AnyFunSuite {
   test("a delete that rewrites a file aborts when an append takes its slot; its staged files go") {
     val log = racedTable()
     val ex = intercept[CommitConflictException] {
-      log.deleteWhereTxn(Seq(("id", 0, 4)), mode = "cow")
+      log.deleteWhereTxn(Seq(("id", 0, 19))) // 20 of 30 rows: the rewrite arm
     }
     assert(ex.getMessage.contains(s"delete on ${log.tableDir}: concurrent commit since v1"),
       ex.getMessage)

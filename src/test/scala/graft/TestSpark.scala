@@ -7,13 +7,7 @@ import org.apache.spark.sql.SparkSession
   * exits at the end of the run). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events fixture is TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = LocalSpark.builder(4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
