@@ -99,7 +99,7 @@ object SparkEntry {
     "q34_log_sql_timetravel" -> (Relational.q34LogSqlTimetravel _), // oracle: graft_log TVF cross-version anti-join == the deleted rows
     "q35_log_catalog_sql" -> (Relational.q35LogCatalogSql _), // oracle: DSv2 catalog VERSION AS OF aggregate == full-nation recompute
     "q36_log_sql_insert" -> (Relational.q36LogSqlInsert _), // oracle: SQL INSERT INTO + DELETE FROM through the catalog == DuckDB survivors
-    "q37_log_sql_merge" -> (Relational.q37LogSqlMerge _), // oracle: SQL MERGE INTO upsert via mergeByKey == set-algebraic recompute
+    "q37_log_sql_merge" -> (Relational.q37LogSqlMerge _), // oracle: SQL MERGE INTO upsert via mergeClauses == set-algebraic recompute
     "q38_log_dv_delete" -> (Relational.q38LogDvDelete _), // oracle: deletion-vector read (position anti-join) == NOT(pred) survivors
     "q39_log_runtime_prune" -> (Relational.q39LogRuntimePrune _), // oracle: DPP star join over the DSv2 catalog == plain join
     "q40_log_spj" -> (Relational.q40LogSpj _), // oracle: zero-shuffle storage-partitioned join == plain join

@@ -537,7 +537,7 @@ object Relational {
       |ORDER BY n_regionkey""".stripMargin
 
   /** Graded SQL MERGE ([[graft.table.MergeIntoLogRule]] →
-    * [[graft.table.SnapshotLog.mergeByKey]]): the canonical key'd
+    * [[graft.table.SnapshotLog.mergeClauses]]): the whole-row key'd
     * upsert — uppercase the names of nations 0–4 (matched → whole-row
     * update) and insert shifted copies of nations 0–2 under new keys
     * (not matched → insert) — executed as ONE transactional `merge`
@@ -962,8 +962,8 @@ object Relational {
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin
 
-  /** Graded FULL SQL MERGE ([[graft.table.MergeIntoLogRule]] general
-    * tier → [[graft.table.SnapshotLog.mergeClauses]]): the complete
+  /** Graded FULL SQL MERGE ([[graft.table.MergeIntoLogRule]] →
+    * [[graft.table.SnapshotLog.mergeClauses]]): the complete
     * clause matrix in ONE transactional `merge` commit — composite
     * equality key with differing side names (`t.c_custkey = s.k AND
     * t.c_nationkey = s.n`), a conditional matched DELETE, a conditional

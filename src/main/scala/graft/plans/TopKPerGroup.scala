@@ -204,7 +204,7 @@ final class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions
     ext.injectTableFunction(graft.table.LogTableFunction.description)
     // SQL change feed: graft_log_changes(path, from [, to [, fourType]])
     ext.injectTableFunction(graft.table.LogTableFunction.changesDescription)
-    // MERGE INTO on catalog-mounted log tables → SnapshotLog.mergeByKey
+    // MERGE INTO on catalog-mounted log tables → SnapshotLog.mergeClauses
     ext.injectResolutionRule(s => new graft.table.MergeIntoLogRule(s))
     // UPDATE ... SET ... WHERE on catalog-mounted log tables →
     // SnapshotLog.updateWhere (stats-targeted copy-on-write)

@@ -60,11 +60,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    is refused at analysis (use the typed API or `deleteKeys`);
   *  - `DELETE FROM` (no WHERE) / `TRUNCATE TABLE` →
   *    [[SnapshotLog.truncate]] (one metadata-only commit);
-  *  - `MERGE INTO` → the canonical whole-row upsert routes to
-  *    [[SnapshotLog.mergeByKey]], everything else SQL MERGE can say
-  *    (composite keys, conditional multi-clause matched UPDATE/DELETE,
-  *    conditional inserts, NOT MATCHED BY SOURCE) to
-  *    [[SnapshotLog.mergeClauses]] — both via the resolution rule
+  *  - `MERGE INTO` → every shape SQL MERGE can say (whole-row upserts,
+  *    composite keys, conditional multi-clause matched UPDATE/DELETE,
+  *    conditional inserts, NOT MATCHED BY SOURCE) runs
+  *    [[SnapshotLog.mergeClauses]] via the resolution rule
   *    [[MergeIntoLogRule]] installed by [[graft.plans.GraftExtensions]];
   *  - `UPDATE ... SET ... WHERE` → [[SnapshotLog.updateWhereTxn]] via
   *    [[UpdateLogRule]] (same extensions install), under the same
@@ -737,7 +736,7 @@ object GraftTableCatalog {
     * session's WAP branch when [[WapBranchConf]] is set, else main.
     * Used by [[GraftTableCatalog.loadTable]] AND re-resolved at
     * execution by the DML commands ([[UpdateLogCommand]] /
-    * [[MergeIntoLogCommand]] / [[MergeClausesLogCommand]]) so a
+    * [[MergeClausesLogCommand]]) so a
     * command planned under the conf cannot escape to main. */
   private[graft] def sessionLog(spark: SparkSession,
       tableDir: String): SnapshotLog = {

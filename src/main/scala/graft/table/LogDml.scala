@@ -3,7 +3,7 @@ package graft.table
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, UnresolvedAttribute}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, EqualTo, Expression, GreaterThanOrEqual, IsNotNull, LessThanOrEqual, NamedExpression, PlanExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, GreaterThanOrEqual, IsNotNull, LessThanOrEqual, PlanExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction, InsertStarAction, LogicalPlan, MergeAction, MergeIntoTable, Project, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -17,23 +17,17 @@ import org.apache.spark.sql.functions.col
   * [[MergeIntoTable]] before Spark's row-level-operation rewrite, and
   * route it to the format's own transactional merge).
   *
-  * Two tiers, chosen by shape:
-  *
-  *  1. The CANONICAL key'd upsert — one same-name equality key,
-  *     unconditional `WHEN MATCHED THEN UPDATE SET *` +
-  *     `WHEN NOT MATCHED THEN INSERT *` — routes to
-  *     [[SnapshotLog.mergeByKey]] (per-key file routing, the fastest
-  *     path for the CDC-apply shape). Both the pre-expansion star
-  *     actions and the analyzer-expanded per-column assignment form are
-  *     recognized (the resolution batch runs to fixpoint, so the rule
-  *     may see either).
-  *  2. Everything else SQL MERGE can say — composite equality keys
-  *     (any column names on either side), multi-clause conditional
-  *     `WHEN MATCHED [AND c] THEN UPDATE SET .../DELETE`,
-  *     `WHEN NOT MATCHED [AND c] THEN INSERT (...) VALUES (...)`,
-  *     `WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE/DELETE` —
-  *     routes to [[SnapshotLog.mergeClauses]] (envelope file routing,
-  *     one full-outer classification join, first-wins clause order).
+  * One tier: every statement SQL MERGE can say — equality keys (one or
+  * composite, any column names on either side) plus residual ON
+  * conjuncts, `WHEN MATCHED [AND c] THEN UPDATE SET .../DELETE`,
+  * `WHEN NOT MATCHED [AND c] THEN INSERT ...`,
+  * `WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE/DELETE`, star
+  * actions included — runs [[MergeClausesLogCommand]] →
+  * [[SnapshotLog.mergeClauses]] (per-key or envelope file routing, one
+  * full-outer classification join, first-wins clause order). Every
+  * matching target row is updated, also when the target holds a key
+  * more than once; [[SnapshotLog.mergeByKey]], which replaces every
+  * row of a key, is not reachable from SQL.
   *
   * `WITH SCHEMA EVOLUTION` is supported through Spark's own analysis:
   * [[LogTable]] declares `AUTOMATIC_SCHEMA_EVOLUTION`, so the
@@ -53,9 +47,10 @@ import org.apache.spark.sql.functions.col
   * a time-travelled snapshot is refused — history is immutable.
   *
   * Cardinality: SQL's "a target row may be updated/deleted by at most
-  * one source row" is enforced on GENUINE ambiguity only — a duplicated
-  * source key aborts iff it matches a target row; duplicates that only
-  * insert are standard MERGE and insert them all. */
+  * one source row" is enforced on GENUINE ambiguity only — the merge
+  * aborts iff some target row matches more than one source row under
+  * the whole ON condition; duplicates that only insert are standard
+  * MERGE and insert them all. */
 final class MergeIntoLogRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
@@ -76,51 +71,24 @@ final class MergeIntoLogRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // reloaded relation. Defer until that has happened — translating
     // first would freeze the merge against the pre-evolution schema.
     if (m.withSchemaEvolution && m.needSchemaEvolution) return None
-    canonical(m, target).orElse(general(m, target))
+    translate(m, target)
   }
 
-  private def canonical(m: MergeIntoTable,
-      target: DataSourceV2Relation): Option[LogicalPlan] = {
-    if (m.notMatchedBySourceActions.nonEmpty)
-      return None
-    val key = keyOf(m.mergeCondition, target).getOrElse(return None)
-    if (!wholeRowAction(m.matchedActions, isUpdate = true, target) ||
-        !wholeRowAction(m.notMatchedActions, isUpdate = false, target))
-      return None
-    // project the source onto the target's columns BY NAME (casting
-    // where widening is needed) — the key-unique whole-row batch
-    // mergeByKey takes
-    val projected = target.output.map { t =>
-      val s = m.sourceTable.output.find(a => conf.resolver(a.name, t.name))
-        .getOrElse(return None)
-      val e: Expression =
-        if (s.dataType == t.dataType) s else Cast(s, t.dataType)
-      Alias(e, t.name)(): NamedExpression
-    }
-    val table = target.table.asInstanceOf[LogTable]
-    requireHead(table, "MERGE")
-    Some(MergeIntoLogCommand(table.log.tableDir, key,
-      Project(projected, m.sourceTable)))
-  }
-
-  private def requireHead(table: LogTable, verb: String): Unit =
-    if (table.pinnedVersion >= 0) throw new UnsupportedOperationException(
-      s"$verb on ${table.log.tableDir} VERSION/TIMESTAMP AS OF is not " +
-        "allowed — committed history is immutable; run DML against the " +
-        "head table")
-
-  /** The general tier: translate the analyzed actions into
-    * [[SnapshotLog.mergeClauses]]'s clause form — target attributes
+  /** Translate the analyzed actions into
+    * [[SnapshotLog.mergeClauses]]' clause form — target attributes
     * stay under their own names, source attributes move under
     * [[SnapshotLog.MergeSrcPrefix]] (the namespace of the merge's
     * classification join), re-anchored as unresolved names so they
     * resolve against the joined frame at execution. */
-  private def general(m: MergeIntoTable,
+  private def translate(m: MergeIntoTable,
       target: DataSourceV2Relation): Option[LogicalPlan] = {
     val table = target.table.asInstanceOf[LogTable]
     def refuse(why: String): Nothing = throw new UnsupportedOperationException(
       s"MERGE INTO ${table.log.tableDir}: $why")
-    requireHead(table, "MERGE")
+    if (table.pinnedVersion >= 0) throw new UnsupportedOperationException(
+      s"MERGE on ${table.log.tableDir} VERSION/TIMESTAMP AS OF is not " +
+        "allowed — committed history is immutable; run DML against the " +
+        "head table")
     val tgtSet = target.outputSet
     val srcSet = org.apache.spark.sql.catalyst.expressions.AttributeSet(
       m.sourceTable.output)
@@ -238,75 +206,6 @@ final class MergeIntoLogRule(spark: SparkSession) extends Rule[LogicalPlan] {
         (Seq((b.name, a.name, e)), Nil)
       else (Nil, Seq(e))
     case other => (Nil, Seq(other))
-  }
-
-  /** The ON condition as (target column, source column) equality pairs —
-    * None unless EVERY conjunct is one equality with exactly one side
-    * from each relation. */
-  private def keyPairs(cond: Expression,
-      tgtSet: org.apache.spark.sql.catalyst.expressions.AttributeSet,
-      srcSet: org.apache.spark.sql.catalyst.expressions.AttributeSet)
-      : Option[Seq[(String, String)]] = cond match {
-    case And(l, r) =>
-      for { a <- keyPairs(l, tgtSet, srcSet)
-            b <- keyPairs(r, tgtSet, srcSet) } yield a ++ b
-    case EqualTo(a: AttributeReference, b: AttributeReference) =>
-      if (tgtSet.contains(a) && srcSet.contains(b)) Some(Seq((a.name, b.name)))
-      else if (tgtSet.contains(b) && srcSet.contains(a)) Some(Seq((b.name, a.name)))
-      else None
-    case _ => None
-  }
-
-  /** The merge key iff the condition is ONE equality between a target
-    * attribute and a source attribute of the SAME name. */
-  private def keyOf(cond: Expression,
-      target: DataSourceV2Relation): Option[String] = cond match {
-    case EqualTo(a: AttributeReference, b: AttributeReference)
-        if conf.resolver(a.name, b.name) =>
-      val tgt = target.outputSet
-      if (tgt.contains(a) ^ tgt.contains(b)) // one side each
-        Some(if (tgt.contains(a)) a.name else b.name)
-      else None
-    case _ => None
-  }
-
-  /** True iff `actions` is exactly one unconditional whole-row-from-
-    * source action: the star form, or its analyzer expansion (every
-    * target column assigned the same-named source column). */
-  private def wholeRowAction(actions: Seq[MergeAction], isUpdate: Boolean,
-      target: DataSourceV2Relation): Boolean = actions match {
-    case Seq(UpdateStarAction(None)) => isUpdate
-    case Seq(InsertStarAction(None)) => !isUpdate
-    case Seq(UpdateAction(None, assigns, _)) if isUpdate =>
-      wholeRowAssignments(assigns, target)
-    case Seq(InsertAction(None, assigns)) if !isUpdate =>
-      wholeRowAssignments(assigns, target)
-    case _ => false
-  }
-
-  private def wholeRowAssignments(assigns: Seq[Assignment],
-      target: DataSourceV2Relation): Boolean =
-    assigns.length == target.output.length &&
-      target.output.forall { t =>
-        assigns.exists { a =>
-          val keyMatches = a.key match {
-            case k: AttributeReference => conf.resolver(k.name, t.name)
-            case _                     => false
-          }
-          val valueFromSource = stripCast(a.value) match {
-            case v: AttributeReference =>
-              conf.resolver(v.name, t.name) && !target.outputSet.contains(v)
-            case _ => false
-          }
-          keyMatches && valueFromSource
-        }
-      }
-
-  /** Alignment may interpose a widening cast on an assignment value —
-    * the underlying source attribute is what the shape check needs. */
-  private def stripCast(e: Expression): Expression = e match {
-    case c: Cast => stripCast(c.child)
-    case other   => other
   }
 }
 
@@ -1386,43 +1285,6 @@ final case class UpdateLogCommand(tableDir: String,
   }
 }
 
-/** The executable canonical MERGE: a driver-side command (the batch
-  * itself is a fully distributed upsert inside
-  * [[SnapshotLog.mergeByKey]] — staging write, anti-join, stats lift;
-  * only the commit decision is local, like every log commit). */
-final case class MergeIntoLogCommand(tableDir: String, key: String,
-    source: LogicalPlan) extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = Seq(source)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val log = GraftTableCatalog.sessionLog(spark, tableDir)
-    val updates = org.apache.spark.sql.GraftBridge.ofRows(spark, source)
-      .localCheckpoint(true) // feeds the dup probe AND the merge once
-    try {
-      // SQL MERGE cardinality: a target row may be updated by at most
-      // one source row. Only GENUINE ambiguity aborts — a duplicated
-      // source key that actually matches a target row; duplicates that
-      // only insert are standard MERGE (mergeByKey inserts them all).
-      // The probe pays a key-column table read only when duplicates
-      // exist at all.
-      val dups = updates.groupBy(col(key)).count()
-        .where(col("count") > 1).drop("count")
-      if (dups.limit(1).collect().nonEmpty) {
-        val clash = log.read().select(col(key))
-          .join(dups, Seq(key), "left_semi").limit(1).collect()
-        if (clash.nonEmpty) throw new IllegalStateException(
-          s"MERGE INTO $tableDir: source has multiple rows for matched " +
-            s"key $key = ${clash.head.get(0)} — a target row may be " +
-            "updated by at most one source row (dedupe the source, " +
-            "e.g. latest-wins)")
-      }
-      log.mergeByKey(updates, key)
-    } finally updates.unpersist()
-    Seq.empty
-  }
-}
-
 private[graft] object MergeClausesLogCommand {
   /** (condition, action, assignments) — the serializable clause form
     * the resolution rule hands the command; Columns are rebuilt from
@@ -1430,10 +1292,12 @@ private[graft] object MergeClausesLogCommand {
   type RawClause = (Option[Expression], String, Seq[(String, Expression)])
 }
 
-/** The executable general MERGE: resolves the table's log at execution
-  * and commits through [[SnapshotLog.mergeClauses]] (envelope file
-  * routing, one full-outer classification join, first-wins clauses,
-  * CDC images) — fully distributed; only the commit decision is local. */
+/** The executable SQL MERGE — every `MERGE INTO` on a log table plans
+  * to this command: it resolves the table's log at execution and
+  * commits through [[SnapshotLog.mergeClauses]] (per-key or envelope
+  * file routing, one full-outer classification join, one per-target-row
+  * ambiguity probe, first-wins clauses, CDC images) — fully
+  * distributed; only the commit decision is local. */
 final case class MergeClausesLogCommand(tableDir: String,
     keys: Seq[(String, String)],
     matched: Seq[MergeClausesLogCommand.RawClause],

@@ -39,15 +39,17 @@ import org.apache.hadoop.fs.Path
   *    its OWN stats/partitions, with zero rows shipped. A delete whose
   *    bounds were not manifest-encodable (rows-only images) or that
   *    predates feed enablement is refused — see below.
-  *  - `merge` — the recorded insert images (exactly the source's
-  *    key-unique update batch) replay as `dst.mergeByKey` on the
-  *    recorded key column, same watermark: an upsert against identical
-  *    pre-state produces the identical post-state. O(batch) shipped.
-  *    A CLAUSE merge ([[SnapshotLog.mergeClauses]] — composite keys
-  *    and/or matched-DELETE images with no paired post-image) replays
-  *    as one `dst.mergeClauses` call instead: pure-delete keys carry a
-  *    marker column and dispatch to a DELETE clause, every other image
-  *    upserts — same watermark, same O(batch).
+  *  - `merge` — replayed BY KEY on the recorded key column(s), same
+  *    watermark, and only after one count shows the replica's rows
+  *    under the images' keys are exactly the merge's pre-images (else
+  *    refused — see below). On one key with no pure deletes the insert
+  *    images replay as `dst.mergeByKey` (every row of each key
+  *    replaced); otherwise ([[SnapshotLog.mergeClauses]] composite
+  *    keys and/or matched-DELETE images with no paired post-image) as
+  *    one `dst.mergeClauses` call: pure-delete keys carry a marker
+  *    column and dispatch to a DELETE clause, every other image
+  *    upserts. Either way the same pre-state yields the same
+  *    post-state. O(batch) shipped, one replica scan for the count.
   *  - `update` — the recorded predicates + post-images replay as
   *    `dst.applyUpdate` on the lane watermark: the replica retires its
   *    own rows matching the predicates (exactly the source's
@@ -56,11 +58,15 @@ import org.apache.hadoop.fs.Path
   *  - `truncate` / `overwrite` — replayed as the same verb on the
   *    replica (`dst.truncate` / `dst.overwriteAll`) riding the txns
   *    watermark: no images needed, the logical outcome is the verb.
-  *  - `restore`, and row-removing commits WITHOUT images — REFUSED
-  *    (IllegalStateException): a rollback is not expressible as a
-  *    change feed, and a commit that recorded no images leaves the
-  *    replica no sound way to find the removed rows. The error names
-  *    the version so the operator can resync from a full read.
+  *  - `restore`, row-removing commits WITHOUT images, and merges that
+  *    key replay cannot express (a clause merge that changed some rows
+  *    of a key and kept others, a residual `ON` merge that inserted a
+  *    key the target still held) — REFUSED (IllegalStateException): a
+  *    rollback is not expressible as a change feed, a commit that
+  *    recorded no images leaves the replica no sound way to find the
+  *    removed rows, and replaying such a merge by key would collapse
+  *    the key on the replica. The error names the version so the
+  *    operator can resync from a full read.
   *
   * Single-writer assumption on the destination: the mirror is the only
   * logical writer (destination-local maintenance — compact/cluster —
@@ -372,6 +378,7 @@ object LogMirror {
               // the update-pair tag is feed-internal; replay keys off
               // _change_type alone (drop is lenient when untagged)
               .drop(SnapshotLog.PairCol)
+            requireKeyReplayable(src, dst, v, lane, img, ks)
             val inserts = img.where(col("_change_type") === "insert")
               .drop("_change_type")
             // pure deletes = delete images whose key has NO post-image —
@@ -424,6 +431,34 @@ object LogMirror {
       }
     }
     newlyApplied
+  }
+
+  /** Key replay (a whole-key replace, or a whole-row upsert on the
+    * images' keys) reproduces a merge only when the replica's rows
+    * under the keys of the change set's images are exactly the merge's
+    * pre-images. A clause merge that changed some rows of a key and
+    * left others, or a residual `ON` merge that inserted a key the
+    * target still held, fails that count and is refused with the resync
+    * contract, instead of collapsing the key on the replica. NULL keys
+    * match nothing on either side (a NULL-key pre-image is refused as
+    * key-unaddressable below). Skipped once the lane already holds `v`
+    * (a racing mirror applied it). One scan of the replica. */
+  private def requireKeyReplayable(src: SnapshotLog, dst: SnapshotLog,
+      v: Long, lane: String, img: org.apache.spark.sql.DataFrame,
+      ks: Seq[String]): Unit = {
+    import org.apache.spark.sql.functions.col
+    if (dst.currentVersion() > 0 &&
+        dst.snapshot().txns.get(lane).exists(_ >= v)) return
+    val pre = img.where(col("_change_type") === "delete").na.drop(ks).count()
+    val held =
+      if (dst.currentVersion() == 0) 0L
+      else dst.read().join(img.select(ks.map(col): _*).distinct(), ks,
+        "left_semi").count()
+    if (held != pre) throw new IllegalStateException(
+      s"cannot mirror ${src.tableDir} v$v: the replica holds $held rows " +
+        s"under the merge's keys but the merge has $pre pre-images — key " +
+        "replay would change rows the source kept; resync the replica " +
+        "from a full read of the source")
   }
 
   private def snapshotTombstones(src: SnapshotLog, version: Long): Int =

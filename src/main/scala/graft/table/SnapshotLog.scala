@@ -2975,23 +2975,23 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     }
   }
 
-  /** Copy-on-write MERGE (upsert) by key: rows of `updates` replace
-    * same-key rows and insert where the key is new. `updates` must be
-    * key-unique — it is exactly the shape the SCD latest-record-wins
-    * merge ([[graft.ops.Relational]] q24) emits, which is the intended
-    * feed: q24 computes the merged view, this applies it transactionally.
+  /** Copy-on-write whole-key replace: every table row whose `column`
+    * value appears in `updates` is removed, and every row of `updates`
+    * lands. This is NOT SQL MERGE: a key the table holds twice comes
+    * back once per batch row, not once per table row updated (SQL
+    * `MERGE INTO` runs [[mergeClauses]]). Its callers are
+    * [[DerivedAggregate]], whose batches are one row per group key, and
+    * the [[LogMirror]] replay of a merge's insert images, which the
+    * mirror runs only after checking that the replica's rows under the
+    * images' keys are exactly the merge's pre-images.
     *
-    * Stats-targeted like [[deleteBetween]], with PER-KEY routing for
-    * bounded batches: when the update batch has at most
-    * [[SnapshotLog.MergeRouteKeyCap]] distinct keys, each file rewrites
-    * only if it can actually hold ONE OF THE KEYS (range stats + blooms,
-    * the same gates as [[readKeys]]) — a scattered two-key update on a
-    * clustered table rewrites two files, not every file the [min, max]
-    * envelope spans. Larger batches fall back to the envelope (correct
-    * always, minimal when updates cluster; collecting an unbounded key
-    * set driver-side would not scale, and a batch that big touches most
-    * files anyway). Matched rows drop via a broadcast-sized anti-join,
-    * then the updates union in; every other file carries over by name.
+    * Files route through [[mergeRoute]]: per key (range stats + blooms
+    * + partition tuples, the same gates as [[readKeys]]) when the batch
+    * has at most [[SnapshotLog.MergeRouteKeyCap]] distinct keys, so a
+    * scattered two-key batch on a clustered table rewrites two files,
+    * not every file the [min, max] envelope spans; by envelope above
+    * it. Replaced rows drop via an anti-join on the batch's keys, then
+    * the batch unions in; every other file carries over by name.
     * Insert-only batches (keys beyond every file) stage straight to an
     * append. Conflicts abort, prior versions keep the pre-merge rows.
     *
@@ -3023,31 +3023,9 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
 
   private def mergeByKeyImpl(u: DataFrame, base: Snapshot,
       column: String, txn: Option[(String, Long)]): Snapshot = {
-    val bounds = u.agg(
-      org.apache.spark.sql.functions.min(col(column)),
-      org.apache.spark.sql.functions.max(col(column)),
-      org.apache.spark.sql.functions.count_distinct(col(column))).head()
-    require(!bounds.isNullAt(0), "updates must have at least one non-null key")
-    val (lo, hi) = (bounds.get(0), bounds.get(1))
-    val touched =
-      if (bounds.getLong(2) <= MergeRouteKeyCap &&
-          (base.stats.nonEmpty || base.blooms.nonEmpty)) {
-        // per-key routing: a file rewrites only if SOME key can be in
-        // it. NULL keys drop out of the probe set — stats/bloom gates
-        // cannot evaluate NULL, and a NULL-key update row never matches
-        // an existing row anyway (the anti-join is null-safe), so it
-        // rides along as a plain insert exactly like the envelope path
-        val keys = u.select(col(column)).na.drop().distinct()
-          .collect().map(_.get(0)).toSeq // bounded by the cap
-        val cand = keyCandidates(base, column, keys).toSet
-        base.files.filter(cand)
-      } else {
-        // envelope routing still gets the partition-tuple veto — on a
-        // bucket-partitioned table even an envelope-wide batch only
-        // rewrites files in the buckets its keys hash to
-        val cand = candidateFiles(base, Seq((column, lo, hi))).toSet
-        base.files.filter(cand)
-      }
+    val routed = mergeRoute(base, u, Seq(column -> column), wholesale = false)
+    require(routed.isDefined, "updates must have at least one non-null key")
+    val touched = routed.get
     val (touchedRows, stagedDf) =
       if (touched.isEmpty) (0L, u)
       else {
@@ -3123,8 +3101,40 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     }.get
   }
 
-  /** General multi-clause MERGE — the full SQL shape [[mergeByKey]]'s
-    * canonical whole-row upsert cannot express:
+  /** The files of `base` a merge must read, for the checkpointed batch
+    * `u` joined on `keys` (target column, source column): every file
+    * when `wholesale` (a by-source clause inspects every target row).
+    * Otherwise one aggregate takes each key's [min, max], cast to the
+    * target column's type, plus the distinct count when there is one
+    * key column. With one key column of at most
+    * [[SnapshotLog.MergeRouteKeyCap]] distinct non-null values on a
+    * table that records stats or blooms, the files that can hold one of
+    * the keys ([[keyCandidates]]); else the files the envelope crosses
+    * ([[candidateFiles]]). None when a key column is all NULL in `u`:
+    * NULL never matches, so no file can. */
+  private def mergeRoute(base: Snapshot, u: DataFrame,
+      keys: Seq[(String, String)], wholesale: Boolean): Option[Seq[String]] = {
+    if (wholesale) return Some(base.files)
+    val typed = keys.map { case (tk, sk) =>
+      schemaType(base, tk).fold(col(sk))(col(sk).cast(_)) }
+    val aggs = typed.flatMap(k => Seq(min(k), max(k))) ++
+      (if (keys.size == 1)
+        Seq(org.apache.spark.sql.functions.count_distinct(typed.head))
+      else Nil)
+    val b = u.agg(aggs.head, aggs.tail: _*).head()
+    if (keys.indices.exists(i => b.isNullAt(2 * i))) None
+    else if (keys.size == 1 && b.getLong(2) <= MergeRouteKeyCap &&
+        (base.stats.nonEmpty || base.blooms.nonEmpty))
+      // NULL keys drop out of the probe set: stats/bloom gates cannot
+      // evaluate NULL, and a NULL key never matches a target row
+      Some(keyCandidates(base, keys.head._1, u.select(typed.head).na.drop()
+        .distinct().collect().map(_.get(0)).toSeq)) // bounded by the cap
+    else Some(candidateFiles(base, keys.indices.map(i =>
+      (keys(i)._1, b.get(2 * i), b.get(2 * i + 1)))))
+  }
+
+  /** General multi-clause MERGE — every SQL `MERGE INTO` on a log table
+    * runs here:
     * {{{
     * MERGE INTO t USING s
     *   ON t.k1 = s.a AND t.k2 = s.b              -- composite equality
@@ -3141,17 +3151,25 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * unchanged, an unmatched source row no clause accepts is dropped —
     * SQL MERGE semantics exactly.
     *
-    * Cardinality: SQL's "a target row may be updated/deleted by at most
-    * one source row" is enforced on GENUINE ambiguity only — a source
-    * key tuple duplicated in the batch aborts the merge iff it actually
-    * matches a target row; duplicated tuples that only insert are legal
-    * (standard MERGE inserts them all). NULL keys never match (SQL
-    * equality): null-key source rows flow to the NOT MATCHED clauses,
-    * null-key target rows to NOT MATCHED BY SOURCE.
+    * Every matching target row is updated — also when the target
+    * holds a key more than once (where [[mergeByKey]] would collapse
+    * the key to the batch's rows).
     *
-    * Scale: the rewrite set routes by the source keys' per-column
-    * [min, max] envelope against file stats + partition tuples —
-    * O(candidate files) rewritten, like [[mergeByKey]]'s envelope arm.
+    * Cardinality: SQL's "a target row may be updated/deleted by at most
+    * one source row" is enforced on GENUINE ambiguity only — with
+    * matched clauses, the merge aborts iff some target row joins more
+    * than one source row under the whole ON condition (residual
+    * included); duplicated tuples that only insert, or that the
+    * residual tells apart, are legal (standard MERGE inserts them all).
+    * NULL keys never match (SQL equality): null-key source rows flow to
+    * the NOT MATCHED clauses, null-key target rows to NOT MATCHED BY
+    * SOURCE.
+    *
+    * Scale: the rewrite set routes through [[mergeRoute]], as for
+    * [[mergeByKey]] — per key for one bounded key column, else by the
+    * source keys' per-column [min, max] envelope against file stats +
+    * partition tuples; O(candidate files) rewritten. A table written
+    * before manifests recorded a schema takes its schema from a footer.
     * An insert-only merge (no matched / by-source clauses) rewrites
     * NOTHING: the join only classifies, and the staged output is the
     * insert set alone. `WHEN NOT MATCHED BY SOURCE` inspects every
@@ -3173,9 +3191,9 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
         * [[SnapshotLog.MergeSrcPrefix]]. A key-equal pair failing the
         * residual is NOT a match: the target row falls to the
         * by-source clauses, the source row to the insert clauses —
-        * exactly SQL's ON semantics. Routing still prunes on the key
-        * envelope (a superset — sound), and the ambiguity probe
-        * becomes exact: only residual-PASSING duplicates abort. */
+        * exactly SQL's ON semantics. Routing still prunes on the keys
+        * (a superset — sound), and only residual-PASSING duplicates
+        * abort. */
       residual: Option[Column] = None): Snapshot = {
     val base = snapshot()
     if (replayed(base, txn))
@@ -3184,8 +3202,6 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     require(keys.map(_._1).distinct.size == keys.size &&
       keys.map(_._2).distinct.size == keys.size,
       s"mergeClauses keys must be distinct per side, got $keys")
-    require(base.schemaJson.nonEmpty,
-      s"$tableDir is pre-schema; commit one append before clause merges")
     requireNoTombstones(base, "a copy-on-write merge (rewriting covered " +
       "files raw would resurrect tombstoned rows)")
     def okActions(cs: Seq[MergeWhen], allowed: Set[String], what: String): Unit =
@@ -3199,8 +3215,8 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       "mergeClauses needs at least one WHEN clause")
     require(!source.columns.exists(_.startsWith(SnapshotLog.MergeSrcPrefix)),
       s"source columns may not start with ${SnapshotLog.MergeSrcPrefix}")
-    // materialize the batch once: it feeds the routing bounds, the
-    // ambiguity probe and the join
+    // materialize the batch once: it feeds the routing aggregate and
+    // the join
     val u = source.localCheckpoint(true)
     try mergeClausesImpl(u, base, keys, matched, notMatched,
       notMatchedBySource, txn, residual)
@@ -3211,72 +3227,35 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       keys: Seq[(String, String)], matched: Seq[MergeWhen],
       notMatched: Seq[MergeWhen], notMatchedBySource: Seq[MergeWhen],
       txn: Option[(String, Long)], residual: Option[Column]): Snapshot = {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val tgtSchema = DataType.fromJson(base.schemaJson).asInstanceOf[StructType]
+    val tgtSchema = schemaOf(base)
     keys.foreach { case (tk, _) =>
       require(tgtSchema.fieldNames.exists(_.equalsIgnoreCase(tk)),
         s"mergeClauses: '$tk' is not a column of $tableDir") }
     val tKeys = keys.map { case (tk, _) =>
       tgtSchema.fieldNames.find(_.equalsIgnoreCase(tk)).get }
-    def tgtType(c: String) = tgtSchema(tgtSchema.fieldIndex(c)).dataType
-    // ROUTING — which files can hold a matched target row. By-source
-    // clauses inspect every row by definition: all files join. Without
-    // them, the source keys' per-column [min, max] envelope (cast to
-    // the target type so stats compare in the column's own type) gates
-    // files through stats + partition tuples; a key column that is
-    // all-NULL in the source matches nothing.
-    val wholesale = notMatchedBySource.nonEmpty
-    val joinFiles: Seq[String] =
-      if (wholesale || base.files.isEmpty) base.files
-      else {
-        val aggs = keys.zip(tKeys).flatMap { case ((_, sk), tk) =>
-          Seq(min(col(sk).cast(tgtType(tk))), max(col(sk).cast(tgtType(tk)))) }
-        val b = u.agg(aggs.head, aggs.tail: _*).head()
-        if (keys.indices.exists(i => b.isNullAt(2 * i))) Nil
-        else candidateFiles(base,
-          tKeys.zipWithIndex.map { case (tk, i) => (tk, b.get(2 * i), b.get(2 * i + 1)) })
-      }
+    // ROUTING — which files can hold a matched target row; by-source
+    // clauses inspect every row by definition, so all files join
+    val joinFiles = mergeRoute(base, u, tKeys.zip(keys.map(_._2)),
+      wholesale = notMatchedBySource.nonEmpty).getOrElse(Nil)
     val rewriteTouched = matched.nonEmpty || notMatchedBySource.nonEmpty
     val rewritten = if (rewriteTouched) joinFiles else Nil
-    // GENUINE-AMBIGUITY probe: a duplicated source key tuple aborts the
-    // merge iff it matches a target row (SQL cardinality violation);
-    // duplicated tuples that only insert are standard MERGE. With a
-    // RESIDUAL match condition this key-level probe would over-refuse
-    // (the residual may disambiguate duplicates, e.g. versioned CDC
-    // batches) — the exact per-target-row probe below replaces it.
-    if (matched.nonEmpty && joinFiles.nonEmpty && residual.isEmpty) {
-      val sk = keys.map(_._2)
-      val dups = u.na.drop(sk).groupBy(sk.map(col): _*)
-        .agg(count(lit(1)).as("__graft_n")).where(col("__graft_n") > 1)
-        .drop("__graft_n")
-      if (dups.limit(1).collect().nonEmpty) {
-        val tgtKeys = scan(base, joinFiles).select(tKeys.map(col): _*)
-          .toDF(sk: _*)
-        val clash = dups.join(tgtKeys, sk, "left_semi").limit(1).collect()
-        if (clash.nonEmpty) throw new IllegalStateException(
-          s"MERGE on $tableDir: source has multiple rows for matched key " +
-            s"(${sk.mkString(", ")}) = (${clash.head.toSeq.mkString(", ")}) — " +
-            "a target row may be updated/deleted by at most one source row " +
-            "(dedupe the source, e.g. latest-wins)")
-      }
-    }
     // THE JOIN — one full-outer pass classifying every row: target
     // columns under their own names, source under MergeSrcPrefix,
-    // presence markers on both sides (keys can be NULL, markers can't)
+    // presence markers on both sides (keys can be NULL, markers can't).
+    // Each target row carries an id for the ambiguity probe and the
+    // unactioned-match dedup; the id is non-deterministic per plan but
+    // `joined` checkpoints EAGERLY, so every downstream read sees the
+    // one materialized assignment.
     val SP = SnapshotLog.MergeSrcPrefix
     val srcP = u.columns.foldLeft(u)((d, c) => d.withColumnRenamed(c, SP + c))
       .withColumn(SnapshotLog.MergeSrcMark, lit(true))
-    val tgtRaw = if (joinFiles.isEmpty) emptySnap(base) else scan(base, joinFiles)
-    // a residual merge needs a per-target-row identity for the exact
-    // ambiguity probe and the unactioned-match dedup; the id is
-    // non-deterministic per plan but `joined` checkpoints EAGERLY, so
-    // every downstream read sees the one materialized assignment
+    val tgtRaw =
+      if (joinFiles.isEmpty) spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tgtSchema)
+      else scan(base, joinFiles)
     val Rid = "__graft_rid"
-    val tgtM0 = tgtRaw.withColumn(SnapshotLog.MergeTgtMark, lit(true))
-    val tgtM =
-      if (residual.isEmpty) tgtM0
-      else tgtM0.withColumn(Rid,
-        org.apache.spark.sql.functions.monotonically_increasing_id())
+    val tgtM = tgtRaw.withColumn(SnapshotLog.MergeTgtMark, lit(true))
+      .withColumn(Rid, org.apache.spark.sql.functions.monotonically_increasing_id())
     val cond0 = keys.zip(tKeys).map { case ((_, sk), tk) =>
       tgtM(tk) === srcP(SP + sk) }.reduce(_ && _)
     val cond = residual.fold(cond0)(cond0 && _)
@@ -3284,10 +3263,11 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     try {
       val isT = col(SnapshotLog.MergeTgtMark).isNotNull
       val isS = col(SnapshotLog.MergeSrcMark).isNotNull
-      if (matched.nonEmpty && residual.nonEmpty) {
-        // exact cardinality probe: >1 residual-passing source row for
-        // one target row is the SQL violation; key-duplicates that the
-        // residual filtered away are fine
+      if (matched.nonEmpty) {
+        // the one ambiguity probe: a target row joined by more than one
+        // source row (under the whole ON condition, residual included)
+        // is SQL's cardinality violation; duplicated source keys that
+        // match nothing, or that the residual tells apart, pass
         val clash = joined.where(isT && isS).groupBy(col(Rid))
           .agg(count(lit(1)).as("__graft_n"),
             org.apache.spark.sql.functions
@@ -3336,31 +3316,16 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       val mAct = withAct(joined.where(isT && isS), matched)
       val tAct = withAct(joined.where(isT && !isS), notMatchedBySource)
       val sAct = withAct(joined.where(!isT && isS), notMatched)
-      // With matched clauses the genuine-ambiguity probe above already
-      // aborted on duplicate source keys that match, so mAct carries at
-      // most one joined row per target row. WITHOUT matched clauses the
-      // probe doesn't run (duplicated source tuples are legal — they may
-      // all insert), but the full-outer join still fans a matched target
-      // row out once per duplicate; those rows are pure pass-through, so
-      // derive them by SEMI-join against the distinct source keys — each
-      // kept exactly once, SQL's semantics for an unactioned match.
+      // With matched clauses the probe above already aborted on a target
+      // row joined more than once, so mAct carries at most one joined
+      // row per target row. WITHOUT matched clauses duplicated source
+      // keys are legal (they may all insert), but the full-outer join
+      // still fans a matched target row out once per duplicate; those
+      // rows pass through unchanged, once each by their id.
       val outM =
         if (matched.nonEmpty) project(mAct, matched, defaultKeep = true)
-        else if (residual.nonEmpty)
-          // unactioned matches pass through once each — the rid dedups
-          // the full-outer fanout exactly (the key-only semi-join below
-          // would wrongly swallow rows whose match FAILED the residual,
-          // which belong to the by-source branch)
-          joined.where(isT && isS).dropDuplicates(Rid)
-            .select(tgtSchema.fieldNames.toSeq.map(col): _*)
-        else {
-          val srcKeys = u.select(keys.map { case (_, sk) => col(sk) }: _*)
-            .distinct()
-          val skCond = keys.zip(tKeys).map { case ((_, sk), tk) =>
-            tgtRaw(tk) === srcKeys(sk) }.reduce(_ && _)
-          tgtRaw.join(srcKeys, skCond, "left_semi")
-            .select(tgtSchema.fieldNames.toSeq.map(col): _*)
-        }
+        else joined.where(isT && isS).dropDuplicates(Rid)
+          .select(tgtSchema.fieldNames.toSeq.map(col): _*)
       val outT = project(tAct, notMatchedBySource, defaultKeep = true)
       val outS = project(sAct, notMatched, defaultKeep = false)
       val stagedDf =
@@ -5511,8 +5476,9 @@ object SnapshotLog {
     }
   }
 
-  /** Distinct-key ceiling under which [[SnapshotLog.mergeByKey]] routes
-    * the rewrite set per key (collecting the keys driver-side) instead
+  /** Distinct-key ceiling under which a merge ([[SnapshotLog.mergeByKey]],
+    * [[SnapshotLog.mergeClauses]]) on one key column routes the rewrite
+    * set per key (collecting the keys driver-side) instead
     * of by [min, max] envelope. CDC-sized batches stay under it; a
     * batch over it touches most files regardless, so the envelope loses
     * little. */
@@ -5962,7 +5928,7 @@ object SnapshotLog {
     * manifest: stats columns and bloom columns are inferred from what
     * the committed files already record, so a writer constructed from
     * just a path (the SQL DML surface — [[GraftTableCatalog]],
-    * [[MergeIntoLogCommand]]) keeps lifting the same per-file stats and
+    * [[MergeClausesLogCommand]]) keeps lifting the same per-file stats and
     * blooms the table's typed writers do, instead of silently staging
     * unprunable files. (Partition spec and sort order already inherit
     * through the manifest for every handle; stats/bloom column sets are

@@ -267,6 +267,39 @@ class CdcSpec extends AnyFunSuite {
       "mirror must converge through the randomized history")
   }
 
+  test("mirror refuses a merge that key replay would collapse; the replica stays put") {
+    import graft.table.MergeWhen
+    val SP = SnapshotLog.MergeSrcPrefix
+    // (1) a matched clause whose condition picks one of key 1's two rows;
+    // (2) a residual ON that turns a same-key source row into an insert
+    val merges: Seq[(String, SnapshotLog => Unit)] = Seq(
+      "partial matched update" -> (_.mergeClauses(Seq((1, "z")).toDF("id", "v"),
+        keys = Seq(("id", "id")),
+        matched = Seq(MergeWhen(Some(col("v") === "a"), "update",
+          Seq("v" -> col(SP + "v")))),
+        notMatched = Nil)),
+      "residual insert of a held key" -> (_.mergeClauses(Seq((2, "0")).toDF("id", "v"),
+        keys = Seq(("id", "id")),
+        matched = Seq(MergeWhen(None, "update", Seq("v" -> col(SP + "v")))),
+        notMatched = Seq(MergeWhen(None, "insert",
+          Seq("id" -> col(SP + "id"), "v" -> col(SP + "v")))),
+        residual = Some(col(SP + "v") > col("v")))))
+    merges.foreach { case (what, merge) =>
+      val src = SnapshotLog.withChangeFeed(spark, fresh("graft-cdc-src-"),
+        statsColumns = Seq("id"))
+      val dst = SnapshotLog(spark, fresh("graft-cdc-dst-"), statsColumns = Seq("id"))
+      src.append(Seq((1, "a"), (1, "b"), (2, "c")).toDF("id", "v")) // v1
+      LogMirror.mirror(src, dst)
+      merge(src)                                                      // v2
+      def all(l: SnapshotLog) = l.read().as[(Int, String)].collect().toSeq.sorted
+      val held = all(dst)
+      val ex = intercept[IllegalStateException] { LogMirror.mirror(src, dst) }
+      assert(ex.getMessage.contains("resync") && ex.getMessage.contains("v2"),
+        s"$what: ${ex.getMessage}")
+      assert(all(dst) == held, s"$what: the refused merge must leave the replica as it was")
+    }
+  }
+
   test("mirror still refuses a removal recorded without images") {
     val src = SnapshotLog(spark, fresh("graft-cdc-src-"), statsColumns = Seq("id"))
     val dst = SnapshotLog(spark, fresh("graft-cdc-dst-"))

@@ -696,7 +696,7 @@ class DsV2CatalogSpec extends AnyFunSuite {
     assert(log.read().count() == 20, "nothing may have been deleted")
   }
 
-  test("MERGE INTO (canonical upsert) routes through mergeByKey on an extensions session") {
+  test("MERGE INTO (whole-row upsert) routes through mergeClauses on an extensions session") {
     val (root, log) = freshRoot()
     val s = org.apache.spark.sql.GraftBridge
       .sessionWithExtensions(spark, new graft.plans.GraftExtensions()(_))

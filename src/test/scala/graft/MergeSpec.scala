@@ -130,7 +130,7 @@ class MergeSpec extends AnyFunSuite {
     // it; duplicated tuples only abort when a matched clause would fire
     // ambiguously). The matched row must flow through exactly once: the
     // full-outer join fans it out per duplicate, so the pass-through set
-    // derives by semi-join, not from the join.
+    // dedups the join by target row id.
     log.mergeClauses(Seq((1L, "x"), (1L, "y")).toDF("id", "v"),
       keys = Seq(("id", "id")),
       matched = Nil, notMatched = Nil,
@@ -359,7 +359,7 @@ class MergeSpec extends AnyFunSuite {
          |  (SELECT max(u.v) FROM mrg_bad_src u WHERE u.id = t.id)""".stripMargin,
       "subquer") // ours says "correlated subquery"; Spark's own analyzer
                  // may refuse first with "subqueries" — accept either
-    // the canonical whole-row shape still routes through mergeByKey
+    // the whole-row shape runs mergeClauses like every other SQL MERGE
     s.sql(
       s"""MERGE INTO $cat.t1 t USING mrg_bad_src s ON t.id = s.id
          |WHEN MATCHED THEN UPDATE SET *
@@ -483,5 +483,64 @@ class MergeSpec extends AnyFunSuite {
     assert(log.read().as[(Long, Long, String)].collect().sorted.toSeq ==
       Seq((1L, 11L, "a2"), (2L, 20L, "b"), (3L, 30L, "c")),
       "the SQL residual merge must update only the strictly-newer row")
+  }
+
+  /** An extensions session with `root` mounted as catalog `cat`. */
+  private def mounted(root: String, cat: String) = {
+    val s = org.apache.spark.sql.GraftBridge
+      .sessionWithExtensions(spark, new graft.plans.GraftExtensions()(_))
+    s.conf.set(s"spark.sql.catalog.$cat", classOf[GraftTableCatalog].getName)
+    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    s
+  }
+
+  test("SQL MERGE updates every target row of a key the target holds twice") {
+    val root = Files.createTempDirectory("graft-mergec-twice-").toString
+    val log = SnapshotLog(spark, s"$root/t1", statsColumns = Seq("id"))
+    log.append(Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("id", "v").coalesce(1))
+    val s = mounted(root, "gmrgtwice")
+    s.createDataFrame(Seq((1L, "z"), (9L, "n"))).toDF("id", "v")
+      .createOrReplaceTempView("mrg_twice_src")
+    s.sql(
+      """MERGE INTO gmrgtwice.t1 t USING mrg_twice_src s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    assert(log.read().as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "z"), (1L, "z"), (2L, "c"), (9L, "n")),
+      "both rows of key 1 match, so both update")
+  }
+
+  test("SQL MERGE routes a scattered two-key batch per key: at most 2 of 6 files rewrite") {
+    val shapes = Seq(
+      "unconditional" ->
+        """WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin,
+      "conditional" ->
+        """WHEN MATCHED AND s.v <> t.v THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    shapes.zipWithIndex.foreach { case ((shape, clauses), i) =>
+      val root = Files.createTempDirectory("graft-mergec-route-").toString
+      val log = SnapshotLog(spark, s"$root/t1", statsColumns = Seq("id"))
+      // six files, each one contiguous id range: clustered on id
+      val before = log.append((0 until 600).map(i => (i.toLong, s"p-$i"))
+        .toDF("id", "v").repartitionByRange(6, col("id")))
+      assert(before.files.size == 6, s"$shape: fixture wrote ${before.files.size} files")
+      val cat = s"gmrgroute$i"
+      val s = mounted(root, cat)
+      s.createDataFrame(Seq((5L, "SCAT-lo"), (595L, "SCAT-hi")))
+        .toDF("id", "v").createOrReplaceTempView(s"mrg_route_src$i")
+      s.sql(
+        s"""MERGE INTO $cat.t1 t USING mrg_route_src$i s ON t.id = s.id
+           |$clauses""".stripMargin)
+      val after = log.snapshot()
+      assert(after.op == "merge")
+      val carried = before.files.count(after.files.contains)
+      assert(carried >= before.files.size - 2,
+        s"$shape: a two-key scattered merge must rewrite at most two files " +
+          s"(carried $carried of ${before.files.size})")
+      val rows = log.read().as[(Long, String)].collect().toMap
+      assert(rows.size == 600 && rows(5L) == "SCAT-lo" &&
+        rows(595L) == "SCAT-hi" && rows(6L) == "p-6", s"$shape: $rows")
+    }
   }
 }

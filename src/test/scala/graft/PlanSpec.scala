@@ -450,10 +450,13 @@ class PlanSpec extends AnyFunSuite {
 
   test("session confs do not leak across queries: q39/q40 in both orders") {
     val spark = TestSpark.spark
-    def leaked: Seq[String] = spark.conf.getAll.keys.toSeq.filter(k =>
-      k == "spark.sql.sources.v2.bucketing.enabled" ||
-        k.startsWith("spark.sql.catalog.graft_") ||
-        k.startsWith("spark.sql.catalog.gq"))
+    // catalog mounts made before the queries (other suites share the
+    // session) are not theirs; only keys the queries add count
+    def setKeys: Set[String] = spark.conf.getAll.keys.toSet
+    val mountedBefore = setKeys.filter(_.startsWith("spark.sql.catalog."))
+    def leaked: Seq[String] = (setKeys -- mountedBefore).toSeq.sorted
+      .filter(k => k == "spark.sql.sources.v2.bucketing.enabled" ||
+        k.startsWith("spark.sql.catalog."))
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq
     // order A: runtime-pruned star join, then the SPJ query (which
