@@ -6,6 +6,7 @@ import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.functions.{col, count, countDistinct, lit, pmod}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Structured Streaming SOURCE over a [[SnapshotLog]] table's change
   * feed — `spark.readStream.format(...).option("path", table).load()`
@@ -16,10 +17,12 @@ import org.apache.spark.sql.types.StructType
   * streaming queries with checkpointed progress instead of hand-rolled
   * cursor loops.
   *
-  * Offsets ARE log versions: `getOffset` reports the table's current
-  * version, and `getBatch(start, end)` returns exactly
-  * [[SnapshotLog.readChanges]] over `(start, end]` — appended files by
-  * name, O(new data) per batch, never O(table). Version-as-offset makes
+  * Offsets ARE log versions: the latest offset is the table's current
+  * version, and the micro-batch over `(start, end]` runs
+  * [[SnapshotLog.feedPlan]], the plan the batch
+  * [[SnapshotLog.readChanges]] (insert feed) and
+  * [[SnapshotLog.readChangeRows]] (row-level feed) read — appended files
+  * by name, O(new data) per batch, never O(table). Version-as-offset makes
   * recovery exact: after a crash the engine replays `(checkpointed,
   * current]` and immutable delta files reproduce the batch bit-for-bit.
   * The [[SnapshotLog.vacuum]] version horizon bounds how far behind a
@@ -50,8 +53,8 @@ import org.apache.spark.sql.types.StructType
   * Implemented on the DSv2 streaming tier ([[LogMicroBatchStream]]:
   * `MicroBatchStream` + `SupportsAdmissionControl`) — each micro-batch
   * plans as Spark's own vectorized parquet partitions over the files
-  * the versions in range added ([[SnapshotLog.streamBatchGroups]]),
-  * retiring the former V1 `Source`'s internal streaming-frame bridge.
+  * the versions in range added ([[SnapshotLog.feedPlan]]), retiring the
+  * former V1 `Source`'s internal streaming-frame bridge.
   *
   * This table is the `format("graft-log-changes")` face; the
   * `MICRO_BATCH_READ` capability routes the engine to
@@ -60,7 +63,7 @@ import org.apache.spark.sql.types.StructType
   * in row-level CDC mode) — the same contract the V1 source declared. */
 private[graft] final class LogFeedTable(spark: SparkSession,
     tableDir: String, pinned: StructType,
-    options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
+    options: CaseInsensitiveStringMap)
     extends org.apache.spark.sql.connector.catalog.Table
     with org.apache.spark.sql.connector.catalog.SupportsRead {
   import org.apache.spark.sql.connector.catalog.TableCapability
@@ -72,25 +75,16 @@ private[graft] final class LogFeedTable(spark: SparkSession,
     java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(
-      scanOptions: org.apache.spark.sql.util.CaseInsensitiveStringMap): ScanBuilder = {
+      scanOptions: CaseInsensitiveStringMap): ScanBuilder = {
     // readStream options arrive both here and at getTable — prefer the
     // scan's copy (it is what the engine recorded for this query)
     val opts = if (scanOptions.isEmpty) options else scanOptions
-    def flag(k: String) = Option(opts.get(k)).exists(_.toBoolean)
-    def num(k: String) = Option(opts.get(k)).map(_.toLong).getOrElse(0L)
     () => new Scan {
       override def readSchema(): StructType = pinned
       override def description(): String = name()
       override def toMicroBatchStream(
           checkpointLocation: String): MicroBatchStream =
-        new LogMicroBatchStream(spark, tableDir, pinned,
-          skipChangeCommits = flag("skipChangeCommits"),
-          readChangeFeed = flag("readChangeFeed"),
-          fourTypeCdc = flag("fourTypeCdc"),
-          maxVersionsPerTrigger = num("maxVersionsPerTrigger"),
-          maxFilesPerTrigger = num("maxFilesPerTrigger"),
-          startingVersion0 = Option(opts.get("startingVersion")).getOrElse(""),
-          checkpointLocation = checkpointLocation)
+        LogChangeFeed.stream(spark, tableDir, pinned, opts, checkpointLocation)
     }
   }
 }
@@ -108,10 +102,10 @@ class LogChangeFeedProvider
   // .schema(...) is rejected by Spark itself (supportsExternalMetadata
   // stays false)
   override def inferSchema(
-      options: org.apache.spark.sql.util.CaseInsensitiveStringMap): StructType = {
+      options: CaseInsensitiveStringMap): StructType = {
     val spark = SparkSession.active
     LogChangeFeed.streamSchema(spark, LogChangeFeed.path(options),
-      Option(options.get("readChangeFeed")).exists(_.toBoolean))
+      LogChangeFeed.flag(options, "readChangeFeed"))
   }
 
   override def getTable(schema: StructType,
@@ -120,7 +114,7 @@ class LogChangeFeedProvider
       : org.apache.spark.sql.connector.catalog.Table = {
     require(partitioning.isEmpty,
       "the change feed is read-only — partitioning is declared on the table")
-    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(properties)
+    val opts = new CaseInsensitiveStringMap(properties)
     new LogFeedTable(SparkSession.active, LogChangeFeed.path(opts),
       schema, opts)
   }
@@ -155,14 +149,30 @@ object LogChangeFeed {
     finally in.close()
   }
 
-  private[streaming] def path(parameters: Map[String, String]): String =
-    parameters.getOrElse("path",
-      throw new IllegalArgumentException("option 'path' (the log table dir) is required"))
-
-  private[streaming] def path(
-      options: org.apache.spark.sql.util.CaseInsensitiveStringMap): String =
+  private[streaming] def path(options: CaseInsensitiveStringMap): String =
     Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("option 'path' (the log table dir) is required"))
+
+  private[graft] def flag(options: CaseInsensitiveStringMap, key: String): Boolean =
+    Option(options.get(key)).exists(_.toBoolean)
+
+  /** The feed stream a scan runs — the `graft-log-changes` table's and
+    * the catalog table's `readStream.table` face alike — built from its
+    * read options: `skipChangeCommits`, `readChangeFeed`, `fourTypeCdc`,
+    * `maxVersionsPerTrigger`, `maxFilesPerTrigger`, `startingVersion`. */
+  private[graft] def stream(spark: SparkSession, tableDir: String,
+      pinned: StructType, options: CaseInsensitiveStringMap,
+      checkpointLocation: String): LogMicroBatchStream = {
+    def num(k: String) = Option(options.get(k)).map(_.toLong).getOrElse(0L)
+    new LogMicroBatchStream(spark, tableDir, pinned,
+      skipChangeCommits = flag(options, "skipChangeCommits"),
+      readChangeFeed = flag(options, "readChangeFeed"),
+      fourTypeCdc = flag(options, "fourTypeCdc"),
+      maxVersionsPerTrigger = num("maxVersionsPerTrigger"),
+      maxFilesPerTrigger = num("maxFilesPerTrigger"),
+      startingVersion0 = Option(options.get("startingVersion")).getOrElse(""),
+      checkpointLocation = checkpointLocation)
+  }
 
   /** The table's committed read schema (requires >= 1 version). */
   private[streaming] def tableSchema(spark: SparkSession, tableDir: String): StructType = {
@@ -175,15 +185,8 @@ object LogChangeFeed {
   /** The stream's pinned schema: the table's committed columns, plus
     * `_change_type`/`_commit_version` in row-level CDC mode. */
   private[streaming] def streamSchema(spark: SparkSession, tableDir: String,
-      readChangeFeed: Boolean): StructType = {
-    val base = tableSchema(spark, tableDir)
-    if (!readChangeFeed) base
-    else StructType(base.fields ++ Seq(
-      org.apache.spark.sql.types.StructField("_change_type",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("_commit_version",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-  }
+      readChangeFeed: Boolean): StructType =
+    SnapshotLog.feedSchema(tableSchema(spark, tableDir), readChangeFeed)
 
   /** `readStream` over `tableDir`'s change feed — the reader-side
     * convenience mirroring [[SnapshotLog.readChanges]] (insert feed)

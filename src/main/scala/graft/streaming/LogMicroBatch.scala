@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.table.SnapshotLog
+import graft.table.{FeedFrame, FeedGroup, SnapshotLog}
 import org.apache.spark.sql.{GraftBridge, GraftWriteBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection}
@@ -23,8 +23,9 @@ private[graft] final case class LogStreamOffset(version: Long) extends Offset {
   * `latestOffset` reports the table's current version (capped by the
   * admission-control rate limits), and `planInputPartitions(start, end)`
   * plans the files the versions in `(start, end]` added as Spark's own
-  * vectorized parquet partitions via [[SnapshotLog.streamBatchGroups]] —
-  * no driver-planned DataFrame, no internal-API streaming-frame bridge.
+  * vectorized parquet partitions from [[SnapshotLog.feedPlan]] — the
+  * plan the batch readers read — with no driver-planned DataFrame and no
+  * internal-API streaming-frame bridge.
   * The steady-state insert feed (current-epoch files, no CDC columns)
   * passes the columnar batches through UNPROJECTED; rename-epoch files
   * and CDC image rows go through a per-group bound projection (field-id
@@ -187,15 +188,6 @@ private[graft] final class LogMicroBatchStream(spark: SparkSession,
     m
   }
 
-  /** Scratch for contributions that need a JOIN to reconstruct (a
-    * truncate/overwrite pre-image over a debt-carrying parent;
-    * four-type re-typing of pre-pair-tag merge images): the planner
-    * spills the composed batch read here once per version and plans
-    * the spilled parquet like any other group. Per-source checkpoint
-    * path → unique per stream, deterministic across restarts, swept on
-    * [[commit]]. */
-  private val spillDir = s"$checkpointLocation/graft-spill"
-
   /** Each partition CARRIES its group's delegate factory and bound
     * projection, so [[createReaderFactory]] is stateless — no
     * plan→factory mutable handoff depending on the engine calling
@@ -206,9 +198,11 @@ private[graft] final class LogMicroBatchStream(spark: SparkSession,
     * contract), so the batch-wide all-identity verdict is stamped onto
     * every partition. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val groups = log.streamBatchGroups(versionOf(start), versionOf(end),
-      pinned, readChangeFeed, fourTypeCdc, skipChangeCommits,
-      spillDir = Some(spillDir))
+    val groups = log.feedPlan(versionOf(start), versionOf(end), pinned,
+      readChangeFeed, fourTypeCdc, skipChangeCommits).flatMap {
+      case g: FeedGroup => Seq(g)
+      case f: FeedFrame => spill(f)
+    }
     val planned = groups.map { g =>
       val batch = GraftBridge.parquetBatchScan(spark, g.paths,
         g.dataSchema, g.dataSchema, Array.empty).toBatch
@@ -226,6 +220,43 @@ private[graft] final class LogMicroBatchStream(spark: SparkSession,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GroupProjectingFactory
+
+  /** Scratch for the plan's composed parts ([[FeedFrame]]: a
+    * truncate/overwrite pre-image over a debt-carrying parent; four-type
+    * re-typing of pre-pair-tag merge images): each is spilled here once
+    * per version and kind, and its files plan like any other group.
+    * Per-source checkpoint path → unique per stream, deterministic
+    * across restarts, swept on [[commit]]. */
+  private val spillDir = s"$checkpointLocation/graft-spill"
+
+  /** Write `f` ONCE under [[spillDir]] and plan its files. The path is
+    * deterministic per (version, kind); the engine may plan the same
+    * batch more than once (the sink's execution re-plans the scan), so
+    * the spill is write-once with stable file names — a second write's
+    * fresh part names would invalidate the first plan's partitions
+    * mid-read: write to a tmp dir and rename into place; a loser (or a
+    * later re-plan, or a restart) reuses the winner's files, which are
+    * row-identical by determinism of reads over immutable versions. The
+    * checkpoint may sit on another filesystem than the table (table on
+    * s3a://, checkpoint on file:/ or hdfs://), so the handle resolves
+    * from the spill path itself. */
+  private def spill(f: FeedFrame): Seq[FeedGroup] = {
+    import org.apache.hadoop.fs.Path
+    val dir = new Path(s"$spillDir/v${f.version}-${f.kind}")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(new Path(dir, "_SUCCESS"))) {
+      if (fs.exists(dir)) fs.delete(dir, true) // crashed partial spill
+      val tmp = new Path(
+        s"$spillDir/.tmp-v${f.version}-${f.kind}-${java.util.UUID.randomUUID()}")
+      f.df.write.parquet(tmp.toString)
+      if (!fs.rename(tmp, dir)) fs.delete(tmp, true)
+    }
+    val files = fs.listStatus(dir).toSeq.map(_.getPath.toString)
+      .filter(_.endsWith(".parquet"))
+    if (files.isEmpty) Nil
+    else Seq(FeedGroup(files, f.df.schema,
+      Some(f.df.schema.fieldNames.toSeq.map(org.apache.spark.sql.functions.col))))
+  }
 
   /** Retention = the vacuum horizon; the only per-commit bookkeeping is
     * sweeping spill scratch for versions at or below the committed end

@@ -179,7 +179,7 @@ final class DerivedAggregate(base: SnapshotLog, derived: SnapshotLog,
     // keys to merge-route)
     if (!deltas.exists(d => d.op == "append" && d.addedFiles.nonEmpty))
       return None
-    val partial = base.readAdded(deltas, baseCur)
+    val partial = base.readChanges(applied, baseCur)
       .where(col(key).isNotNull)
       .groupBy(col(key)).agg(aggs.head.partial, aggs.tail.map(_.partial): _*)
     if (derived.currentVersion() == 0)

@@ -958,22 +958,15 @@ private[graft] object LogScanStream {
   def microBatch(log: SnapshotLog, pinned: StructType,
       options: CaseInsensitiveStringMap,
       checkpointLocation: String): graft.streaming.LogMicroBatchStream = {
-    def flag(k: String) = Option(options.get(k)).exists(_.toBoolean)
-    require(!flag("readChangeFeed") && !flag("fourTypeCdc"),
+    import graft.streaming.LogChangeFeed
+    require(!LogChangeFeed.flag(options, "readChangeFeed") &&
+      !LogChangeFeed.flag(options, "fourTypeCdc"),
       "readStream.table streams the INSERT feed (the table's own " +
         "columns); for the row-level CDC feed use " +
         "readStream.format(\"graft-log-changes\").option(\"path\", ...)" +
         ".option(\"readChangeFeed\", \"true\")")
-    new graft.streaming.LogMicroBatchStream(log.session, log.tableDir,
-      pinned,
-      skipChangeCommits = flag("skipChangeCommits"),
-      readChangeFeed = false, fourTypeCdc = false,
-      maxVersionsPerTrigger = Option(options.get("maxVersionsPerTrigger"))
-        .map(_.toLong).getOrElse(0L),
-      maxFilesPerTrigger = Option(options.get("maxFilesPerTrigger"))
-        .map(_.toLong).getOrElse(0L),
-      startingVersion0 = Option(options.get("startingVersion")).getOrElse(""),
-      checkpointLocation = checkpointLocation)
+    LogChangeFeed.stream(log.session, log.tableDir, pinned, options,
+      checkpointLocation)
   }
 }
 

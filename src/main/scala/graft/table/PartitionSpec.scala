@@ -356,9 +356,6 @@ final case class PartitionField(source: String, transform: String) {
     }
   }
 
-  private[table] def bucketCount: Option[Int] =
-    if (kind == Bucket) Some(param) else None
-
   private def sameKey(lo: Any, hi: Any): Boolean =
     lo == hi || (try ColRange.num(lo) == ColRange.num(hi)
     catch { case _: NumberFormatException => false })

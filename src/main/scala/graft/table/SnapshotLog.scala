@@ -215,16 +215,25 @@ final case class Tombstone(file: String, column: String, appliesTo: Seq[String])
   * the committed op and the files this version added over its parent. */
 final case class VersionDelta(version: Long, op: String, addedFiles: Seq[String])
 
-/** One file-granular unit of a streaming micro-batch plan
-  * ([[SnapshotLog.streamBatchGroups]]): `paths` read under `dataSchema`
-  * (Spark's own vectorized parquet batch), then projected by `outs`
-  * onto the stream's pinned output schema. `outs = None` marks the
-  * identity group — `dataSchema` IS the output, so the reader factory
-  * passes the columnar batches through unprojected (the steady-state
-  * insert feed keeps whole-stage codegen over vectorized reads). */
-private[graft] final case class StreamFileGroup(paths: Seq[String],
+/** One part of a change-feed plan ([[SnapshotLog.feedPlan]]), already
+  * projected onto the feed's output columns. */
+private[graft] sealed trait FeedPart
+
+/** A file-granular part: `paths` read under `dataSchema` (Spark's own
+  * vectorized parquet batch), then projected by `outs` onto the output.
+  * `outs = None` marks the identity group — `dataSchema` IS the output,
+  * so the stream's reader factory passes the columnar batches through
+  * unprojected (the steady-state insert feed keeps whole-stage codegen
+  * over vectorized reads). */
+private[graft] final case class FeedGroup(paths: Seq[String],
     dataSchema: org.apache.spark.sql.types.StructType,
-    outs: Option[Seq[Column]])
+    outs: Option[Seq[Column]]) extends FeedPart
+
+/** A composed part of version `version` that needs a join to
+  * reconstruct; `kind` names it within the version ("pre" | "fourtype"),
+  * so a stream spills it under a stable name. */
+private[graft] final case class FeedFrame(version: Long, kind: String,
+    df: DataFrame) extends FeedPart
 
 /** One [lo, hi] predicate of a copy-on-write delete, serialized with a
   * type tag so [[LogMirror]] can REPLAY the delete on a replica
@@ -1014,32 +1023,6 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       }.toSeq ++ keep.map(col): _*)
     }
 
-  /** `df` (under `fromJson`'s names) projected onto `toJson`'s names by
-    * stable field id — the cross-VERSION alignment (change feed across
-    * a rename boundary); `alignTo` is the cross-EPOCH special case
-    * within one snapshot. Columns absent from `fromJson` (widened after
-    * it) null-pad; `keep` columns pass through. Identity when the
-    * schemas agree or either is pre-schema. */
-  private def alignSchemas(fromJson: String, toJson: String, df: DataFrame,
-      keep: Seq[String] = Nil): DataFrame =
-    if (fromJson == toJson || fromJson.isEmpty || toJson.isEmpty) df
-    else {
-      import org.apache.spark.sql.types.{DataType, StructType}
-      val from = DataType.fromJson(fromJson).asInstanceOf[StructType]
-      val to = DataType.fromJson(toJson).asInstanceOf[StructType]
-      val fromByFid = from.fields.zipWithIndex.map { case (f, i) =>
-        SnapshotLog.fidOf(f, i) -> f }.toMap
-      val keepPresent = keep.filter(df.columns.contains)
-      df.select(to.fields.zipWithIndex.map { case (f, i) =>
-        fromByFid.get(SnapshotLog.fidOf(f, i)) match {
-          case Some(ff) =>
-            SnapshotLog.alignColumn(ff.dataType, f.dataType, col(ff.name))
-              .as(f.name)
-          case None => lit(null).cast(f.dataType).as(f.name)
-        }
-      }.toSeq ++ keepPresent.map(col): _*)
-    }
-
   /** `files` of `s` read under the epochs that wrote them and aligned
     * to `s`'s current names — the epoch-aware RAW read (no
     * tombstones/vectors applied; callers that need those use [[scan]]). */
@@ -1376,23 +1359,33 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * merge; empty for a restore, which re-publishes old files). */
   def changes(fromVersion: Long, toVersion: Long = -1L): Seq[VersionDelta] = {
     val to = if (toVersion < 0) currentVersion() else toVersion
-    require(fromVersion >= 0 && fromVersion <= to,
-      s"changes needs 0 <= from <= to, got [$fromVersion, $to]")
-    // thread each iteration's snapshot forward as the next version's
-    // parent — N+1 manifest parses for an N-version walk, not 2N (the
-    // feed is read version-by-version by LogMirror/DerivedAggregate, so
-    // the doubling would land on every incremental consumer)
+    versionWalk(fromVersion, to).map { case (s, parent) =>
+      VersionDelta(s.version, s.op, addedOver(s, parent))
+    }.toSeq
+  }
+
+  /** Each version of `(from, to]` with its parent snapshot (None for
+    * the first commit) — one iteration's snapshot threads forward as the
+    * next version's parent, so an N-version walk parses N+1 manifests,
+    * not 2N (every incremental consumer walks the feed this way). */
+  private def versionWalk(from: Long,
+      to: Long): Iterator[(Snapshot, Option[Snapshot])] = {
+    require(from >= 0 && from <= to,
+      s"the change feed needs 0 <= from <= to, got [$from, $to]")
     var prev: Option[Snapshot] = None
-    ((fromVersion + 1) to to).map { v =>
+    ((from + 1) to to).iterator.map { v =>
       val s = snapshot(v)
-      val parentFiles =
-        if (s.parent == 0) Set.empty[String]
-        else prev.filter(_.version == s.parent).getOrElse(snapshot(s.parent))
-          .files.toSet
+      val parent =
+        if (s.parent == 0) None
+        else Some(prev.filter(_.version == s.parent).getOrElse(snapshot(s.parent)))
       prev = Some(s)
-      VersionDelta(v, s.op, s.files.filterNot(parentFiles))
+      (s, parent)
     }
   }
+
+  /** The files `s` lists that its parent did not. */
+  private def addedOver(s: Snapshot, parent: Option[Snapshot]): Seq[String] =
+    parent.fold(s.files) { p => val had = p.files.toSet; s.files.filterNot(had) }
 
   /** Change feed: the rows APPENDED after `fromVersion` (exclusive) up
     * to `toVersion` (inclusive, latest when -1) — what an incremental
@@ -1404,7 +1397,8 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     *
     * Semantics (at-commit-time, like a CDC insert feed):
     *  - `append` versions contribute their staged files — exactly the
-    *    rows that run added;
+    *    rows that run added, read under the schema they were committed
+    *    with and aligned by field id onto `toVersion`'s names;
     *  - row-preserving rewrites (`compact`/`cluster`/`zorder`) and
     *    `restore` contribute nothing: the table changed physically, not
     *    logically — the feed across a compaction is identity;
@@ -1416,34 +1410,11 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * Historical delta files are read by name even if a later rewrite
     * replaced them in the live set — immutability makes that exact; the
     * [[vacuum]] horizon bounds how far back a consumer may fall behind,
-    * the same contract as production table formats' CDF retention. */
-  def readChanges(fromVersion: Long, toVersion: Long = -1L): DataFrame = {
-    val to = if (toVersion < 0) currentVersion() else toVersion
-    readAdded(changes(fromVersion, to), to)
-  }
-
-  /** [[readChanges]] over an ALREADY-COMPUTED delta list — for callers
-    * that walked [[changes]] themselves (the streaming source guards on
-    * the ops first) so one manifest pass serves both decisions and the
-    * read. `to` supplies the read schema. */
-  private[graft] def readAdded(deltas: Seq[VersionDelta], to: Long): DataFrame = {
-    val s = snapshot(to)
-    val appendFiles = deltas
-      .filter(_.op == "append").flatMap(_.addedFiles)
-    if (appendFiles.nonEmpty)
-      // epoch-aware: files appended BEFORE a mid-range rename carry the
-      // old column name and are epoch-tagged at `to` — a raw
-      // current-schema read would silently null the renamed column
-      epochAlignedRead(s, appendFiles)
-    else if (s.schemaJson.nonEmpty) // empty delta, schema from the manifest
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.DataType.fromJson(s.schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-    else {
-      require(s.files.nonEmpty, s"version ${s.version} of $tableDir is empty")
-      reader(s).parquet(new Path(dataDir, s.files.head).toString).where(lit(false))
-    }
-  }
+    * the same contract as production table formats' CDF retention. This
+    * is [[feedPlan]]'s insert feed with `skipChangeCommits`, the plan
+    * the streaming source runs. */
+  def readChanges(fromVersion: Long, toVersion: Long = -1L): DataFrame =
+    readFeed(fromVersion, toVersion, rowLevel = false, fourType = false)
 
   /** ROW-LEVEL change feed (CDC): every logical row change in
     * `(fromVersion, toVersion]` as a DataFrame of the table's columns
@@ -1454,20 +1425,21 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     * them). Per-version contribution:
     *  - `append` — the added files as inserts (synthesized from the
     *    manifest, no recorded images needed);
-    *  - `delete` / `merge` / `delete_keys` / `update` — the commit's
-    *    recorded [[ChangeSet]] images: change files as written,
-    *    whole-file deletes read BY REFERENCE from the parent's data
-    *    files with 'delete' attached. A merge appears as
+    *  - `delete` / `merge` / `delete_keys` / `update` / `replace_where`
+    *    — the commit's recorded [[ChangeSet]] images: change files as
+    *    written, whole-file deletes read BY REFERENCE from the parent's
+    *    data files with 'delete' attached. A merge appears as
     *    delete(pre-image) + insert(post-image) pairs for replaced keys
     *    — the two-type default, deliberately simpler than four-type CDF
-    *    feeds; `fourType = true` re-types a merge's pairs on its
-    *    recorded key (comma-joined when composite): a pre-image whose
-    *    key also has a post-image becomes 'update_preimage' and that
-    *    post-image 'update_postimage'; a pre-image with NO post-image
-    *    stays 'delete' (a [[mergeClauses]] matched-DELETE), a
-    *    post-image with no pre-image stays 'insert' — the consumer can
-    *    tell an update from an unrelated delete+insert, and clause
-    *    merges type exactly. An `update` commit's images re-type
+    *    feeds; `fourType = true` re-types a merge's pairs: images
+    *    tagged at write time ([[SnapshotLog.PairCol]]) by their tag,
+    *    older images on the recorded key (comma-joined when composite):
+    *    a pre-image whose key also has a post-image becomes
+    *    'update_preimage' and that post-image 'update_postimage'; a
+    *    pre-image with NO post-image stays 'delete' (a [[mergeClauses]]
+    *    matched-DELETE), a post-image with no pre-image stays 'insert'
+    *    — the consumer can tell an update from an unrelated
+    *    delete+insert. An `update` commit's images re-type
     *    UNCONDITIONALLY under `fourType` — every image is half of an
     *    update pair by construction ([[updateWhere]] stages one
     *    post-image per pre-image). Non-merge deletes keep their types
@@ -1481,247 +1453,130 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
     *  - a row-removing version WITHOUT images (committed before the
     *    table was feed-enabled) or a `restore` throws — silently
     *    skipping either would hand the consumer a feed with a hole.
-    * Cost: O(changed rows) reads, never O(table) — appends read their
-    * delta files, images read what the commit recorded. */
+    * Columns renamed after a version alias onto `toVersion`'s names by
+    * field id; columns added later read as null. Cost: O(changed rows)
+    * reads, never O(table) — appends read their delta files, images
+    * read what the commit recorded. This is [[feedPlan]]'s row-level
+    * feed, the plan the streaming source runs. */
   def readChangeRows(fromVersion: Long, toVersion: Long = -1L,
-      fourType: Boolean = false): DataFrame = {
+      fourType: Boolean = false): DataFrame =
+    readFeed(fromVersion, toVersion, rowLevel = true, fourType)
+
+  /** The batch read of [[feedPlan]] under `to`'s schema: each group
+    * reads its files under its data schema and projects by its `outs`,
+    * composed frames join as planned. An empty range reads as the empty
+    * frame under the to-schema. */
+  private def readFeed(from: Long, toVersion: Long, rowLevel: Boolean,
+      fourType: Boolean): DataFrame = {
     val to = if (toVersion < 0) currentVersion() else toVersion
-    require(fromVersion >= 0 && fromVersion <= to,
-      s"readChangeRows needs 0 <= from <= to, got [$fromVersion, $to]")
     val toSnap = snapshot(to)
-    def path(f: String) = new Path(dataDir, f).toString
-    var prev: Option[Snapshot] = None
-    val frames = ((fromVersion + 1) to to).flatMap { v =>
-      val s = snapshot(v)
-      val parentSnap: Option[Snapshot] =
-        if (s.parent == 0) None
-        else Some(prev.filter(_.version == s.parent).getOrElse(snapshot(s.parent)))
-      val parentFiles = parentSnap.fold(Set.empty[String])(_.files.toSet)
-      prev = Some(s)
-      val contrib: Seq[DataFrame] = s.op match {
-        case "append" =>
-          val added = s.files.filterNot(parentFiles)
-          if (added.isEmpty) Nil
-          else Seq(reader(s).parquet(added.map(path): _*)
-            .withColumn("_change_type", lit("insert"))
-            .withColumn("_commit_version", lit(v)))
-        case "truncate" | "overwrite" =>
-          // both sides derive BY REFERENCE, no recorded images needed
-          // (so these ops feed even on tables without the CDC opt-in):
-          // the deleted pre-images are the parent's LOGICAL table — the
-          // tombstone-applied scan, not the raw files, or rows a pending
-          // key delete already removed would image twice — and an
-          // overwrite's inserts are exactly its committed files
-          val dels = parentSnap.filter(_.files.nonEmpty).map(p =>
-            scan(p, p.files).withColumn("_change_type", lit("delete")))
-          val ins =
-            if (s.files.isEmpty) None
-            else Some(reader(s).parquet(s.files.map(path): _*)
-              .withColumn("_change_type", lit("insert")))
-          (dels.toSeq ++ ins.toSeq).map(_.withColumn("_commit_version", lit(v)))
-        case "delete" | "merge" | "delete_keys" | "update" | "replace_where" =>
-          val cs = s.changes.getOrElse(throw new IllegalStateException(
-            s"$tableDir v$v is a '${s.op}' with no recorded change images " +
-              "(committed before the table was changeFeed-enabled) — " +
-              "row-level reads cannot span it; resync from a full read"))
-          val images =
-            if (cs.files.isEmpty) Nil
-            else {
-              val img0 = spark.read.parquet(cs.files.map(path): _*)
-              val hasPair = img0.columns.contains(SnapshotLog.PairCol)
-              // the pair tag is internal: it re-types four-type merge
-              // images below and never leaves this method
-              val img =
-                if (hasPair && !(fourType && s.op == "merge"))
-                  img0.drop(SnapshotLog.PairCol)
-                else img0
-              if (fourType && s.op == "update")
-                // every image of an `update` commit is half of an
-                // update pair BY CONSTRUCTION (updateCore stages one
-                // post-image per pre-image) — no key join needed
-                Seq(img.withColumn("_change_type",
-                  org.apache.spark.sql.functions.when(
-                    col("_change_type") === "delete", "update_preimage")
-                    .otherwise("update_postimage")))
-              else if (!fourType || s.op != "merge" || cs.keyColumn.isEmpty)
-                Seq(img)
-              else if (hasPair)
-                // clause-merge images tagged at write time: re-type by
-                // the recorded pair flag — exact (no key-collision
-                // ambiguity) and join-free
-                Seq(img.withColumn("_change_type",
-                  org.apache.spark.sql.functions.when(
-                    col(SnapshotLog.PairCol) &&
-                      col("_change_type") === "delete", "update_preimage")
-                    .when(col(SnapshotLog.PairCol) &&
-                      col("_change_type") === "insert", "update_postimage")
-                    .otherwise(col("_change_type")))
-                  .drop(SnapshotLog.PairCol))
-              else {
-                // four-type pairing on the recorded merge key (comma-
-                // joined for composite-key clause merges): a delete
-                // image whose key also has an insert post-image is half
-                // of an update pair; a delete with NO post-image is a
-                // genuine delete (a matched-DELETE clause), an insert
-                // with no pre-image a genuine insert. Symmetric by
-                // construction, so [[mergeByKey]]'s images (where every
-                // pre-image has a post-image) re-type exactly as
-                // before. Two semi/anti joins per merge version,
-                // O(batch) — AQE broadcasts the bounded update batch.
-                val ks = cs.keyColumn.split(",").toSeq
-                val pre = img.where(col("_change_type") === "delete")
-                val ins = img.where(col("_change_type") === "insert")
-                val preKeys = pre.select(ks.map(col): _*).distinct()
-                val insKeys = ins.select(ks.map(col): _*).distinct()
-                Seq(
-                  pre.join(insKeys, ks, "left_semi")
-                    .withColumn("_change_type", lit("update_preimage"))
-                    .unionByName(pre.join(insKeys, ks, "left_anti"))
-                    .unionByName(ins.join(preKeys, ks, "left_semi")
-                      .withColumn("_change_type", lit("update_postimage")))
-                    .unionByName(ins.join(preKeys, ks, "left_anti")))
-              }
-            }
-          val wholeFiles =
-            if (cs.deletedDataFiles.isEmpty) Nil
-            // the PARENT snapshot still lists (and epoch-tags) the
-            // dropped files — read them under the epochs that wrote them
-            else Seq(epochAlignedRead(parentSnap.getOrElse(s),
-              cs.deletedDataFiles).withColumn("_change_type", lit("delete")))
-          (images ++ wholeFiles).map(_.withColumn("_commit_version", lit(v)))
-        case "restore" => throw new IllegalStateException(
-          s"$tableDir v$v is a restore — a rollback is not expressible " +
-            "as row changes; resync the consumer from a full read")
-        case _ => Nil // physical rewrite: the table changed, rows didn't
+    // pre-schema manifests shape the output from a footer read
+    val base = if (toSnap.schemaJson.nonEmpty) toSnap.epochSchemas.last
+      else read(to).schema
+    val frames = feedPlan(from, to, base, rowLevel, fourType,
+      skipChangeCommits = true).map {
+      case g: FeedGroup =>
+        val df = spark.read
+          .schema(org.apache.spark.sql.GraftBridge.asNullable(g.dataSchema))
+          .parquet(g.paths: _*)
+        g.outs.fold(df)(outs => df.select(outs: _*))
+      case f: FeedFrame => f.df
+    }
+    // BALANCED union: a left-deep reduce over a long version span
+    // builds an O(span)-deep plan whose analysis cost grows
+    // quadratically — pairing halves keeps the tree O(log span) deep,
+    // so a consumer catching up across hundreds of versions plans in
+    // milliseconds, not minutes (row semantics identical; union is
+    // associative)
+    def balanced(fs: Seq[DataFrame]): DataFrame =
+      if (fs.size == 1) fs.head
+      else {
+        val (l, r) = fs.splitAt(fs.size / 2)
+        balanced(l).unionByName(balanced(r), allowMissingColumns = true)
       }
-      // columns renamed AFTER v alias onto the to-version's names by
-      // field id — without this, a rename boundary would union an
-      // old-name/new-name column pair and silently null one side
-      contrib.map(alignSchemas(s.schemaJson, toSnap.schemaJson, _,
-        keep = Seq("_change_type", "_commit_version")))
-    }
-    val outCols = org.apache.spark.sql.types.DataType.fromJson(toSnap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq ++
-      Seq("_change_type", "_commit_version")
-    if (frames.isEmpty) {
-      // no logical change in range: empty frame under the to-schema —
-      // built schema-first from the manifest (a fully-emptied table has
-      // no data file to borrow a reader from), falling back to a footer
-      // read only for pre-schema manifests
-      val empty =
-        (if (toSnap.schemaJson.nonEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.DataType.fromJson(toSnap.schemaJson)
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
-        else reader(toSnap)
-          .parquet(path(toSnap.files.headOption.getOrElse(
-            throw new IllegalStateException(
-              s"version $to of $tableDir is empty and pre-schema — " +
-                "nothing to shape a change frame from"))))
-          .where(lit(false)))
-        .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version", lit(0L))
-      empty.select(outCols.map(col): _*)
-    } else {
-      // columns added by later evolution read as null from earlier
-      // versions' frames (same schema-on-read rule as the table scan);
-      // columns RENAMED after a version's commit alias onto the
-      // to-version's names by field id, so a consumer reading across a
-      // rename boundary sees ONE column, not an old/new pair.
-      // BALANCED union: a left-deep reduce over a long version span
-      // builds an O(span)-deep plan whose analysis cost grows
-      // quadratically — pairing halves keeps the tree O(log span) deep,
-      // so a consumer catching up across hundreds of versions plans in
-      // milliseconds, not minutes (row semantics identical; union is
-      // associative)
-      def balanced(fs: Seq[DataFrame]): DataFrame =
-        if (fs.size == 1) fs.head
-        else {
-          val (l, r) = fs.splitAt(fs.size / 2)
-          balanced(l).unionByName(balanced(r), allowMissingColumns = true)
-        }
-      balanced(frames).select(outCols.map(col): _*)
-    }
+    if (frames.nonEmpty) balanced(frames)
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      SnapshotLog.feedSchema(base, rowLevel))
   }
 
-  /** FILE-GRANULAR plan of the change feed over `(from, to]` for the
-    * DSv2 streaming source ([[graft.streaming.LogMicroBatchStream]]):
-    * each returned group is a set of data files read under ONE physical
-    * parquet schema plus the projection that lands them on the stream's
-    * pinned output — so the micro-batch plans as Spark's own vectorized
-    * parquet partitions (no driver-planned DataFrame, no internal-API
-    * streaming-frame bridge), and every projection is NARROW by
-    * construction (field-id rename alignment, null-padding for widened
-    * columns, constant `_change_type`/`_commit_version`, per-row
-    * four-type re-typing on the recorded pair tag). The rare shapes
-    * that genuinely need a JOIN to reconstruct — a truncate/overwrite
-    * pre-image over a parent carrying merge-on-read debt, four-type
-    * re-typing of PRE-PAIR-TAG merge images — refuse loudly with the
-    * batch [[readChangeRows]] named; everything else ships exactly the
-    * rows the V1 source shipped.
+  /** The change feed's ONE per-version plan over `(from, to]`, read by
+    * the batch readers ([[readChanges]], [[readChangeRows]]) and by the
+    * DSv2 streaming source ([[graft.streaming.LogMicroBatchStream]]).
+    * Every part lands on `out`'s base columns — the to-version's schema
+    * for the batch readers, the schema a stream pinned at start — plus
+    * `_change_type`/`_commit_version` in row-level mode:
+    *  - a [[FeedGroup]]: data files read under ONE physical parquet
+    *    schema and a NARROW projection (field-id rename alignment,
+    *    null-padding for widened columns, constant change columns,
+    *    per-row four-type re-typing on the recorded pair tag), which
+    *    the stream plans as Spark's own vectorized parquet partitions;
+    *  - a [[FeedFrame]]: the two shapes that need a JOIN — the
+    *    debt-applied pre-image of a truncate/overwrite over a parent
+    *    carrying tombstones or deletion vectors, and the key-join
+    *    four-type re-typing of merge images recorded before pair tags.
+    *    The batch readers union it; the stream spills it under its
+    *    checkpoint and plans the spilled files as a group.
     *
-    * Semantics match [[readChanges]] / [[readChangeRows]] exactly: the
-    * insert feed guards row-removing ops (unless `skipChangeCommits`),
-    * the CDC feed ships recorded images and by-reference deletes, a
-    * restore throws, physical rewrites contribute nothing. */
-  private[graft] def streamBatchGroups(from: Long, to: Long,
-      pinned: org.apache.spark.sql.types.StructType,
-      readChangeFeed: Boolean, fourType: Boolean,
-      skipChangeCommits: Boolean,
-      spillDir: Option[String] = None): Seq[StreamFileGroup] = {
+    * The insert feed (`rowLevel = false`) ships `append` versions'
+    * files and refuses a version that can remove rows a consumer holds
+    * ([[SnapshotLog.FeedChangeOps]]) unless `skipChangeCommits`; the
+    * row-level feed routes per op as [[readChangeRows]] describes. A
+    * pinned column the committed schema no longer reaches, or a widen
+    * committed after the pin, refuses loudly. */
+  private[graft] def feedPlan(from: Long, to: Long,
+      out: org.apache.spark.sql.types.StructType,
+      rowLevel: Boolean, fourType: Boolean,
+      skipChangeCommits: Boolean): Seq[FeedPart] = {
     import org.apache.spark.sql.types.StructType
     def p(f: String) = new Path(dataDir, f).toString
     val metaCols = Set("_change_type", "_commit_version", SnapshotLog.PairCol)
-    val pinnedBase = StructType(pinned.fields.filterNot(f => metaCols(f.name)))
-    val toSnap = snapshot(to)
-    val toCur = toSnap.epochSchemas.last
-    // shape equality ignoring nullability/metadata: the provider-face
-    // pinned schema passed through a DataFrame (nullability forced),
-    // the manifest schema did not — identity detection must not care
+    val outBase = StructType(out.fields.filterNot(f => metaCols(f.name)))
+    val toCur = snapshot(to).epochSchemas.last
+    // shape equality ignoring nullability/metadata: a stream's pinned
+    // schema passed through a DataFrame (nullability forced), the
+    // manifest schema did not — identity detection must not care
     def sameShape(a: StructType, b: StructType): Boolean =
       a.fields.length == b.fields.length &&
         a.fields.zip(b.fields).forall { case (x, y) =>
           x.name == y.name && x.dataType == y.dataType }
 
     // fid-aligned name→Column mapping of `fromS`'s columns onto `toS`'s
-    // (the alignTo/alignSchemas rule: renamed columns alias, widened
-    // columns null-pad) — as a MAP COMPOSITION so multi-hop alignment
-    // (epoch → version-current → to-current) folds into one projection
+    // (renamed columns alias, widened columns null-pad) — as a MAP
+    // COMPOSITION so multi-hop alignment (epoch → version-current →
+    // to-current) folds into one projection
     def aligned(fromS: StructType, toS: StructType,
-        in: String => Column): Seq[(String, Column)] =
+        in: String => Column): Map[String, Column] =
       if (fromS.isEmpty || toS.isEmpty || fromS == toS)
-        toS.fields.toSeq.map(f => f.name -> in(f.name))
+        toS.fields.map(f => f.name -> in(f.name)).toMap
       else {
         val byFid = fromS.fields.zipWithIndex.map { case (f, i) =>
           SnapshotLog.fidOf(f, i) -> f }.toMap
-        toS.fields.zipWithIndex.toSeq.flatMap { case (f, i) =>
-          byFid.get(SnapshotLog.fidOf(f, i)) match {
-            case Some(ff) => Some(f.name ->
-              SnapshotLog.alignColumn(ff.dataType, f.dataType, col(ff.name)))
-            case None => Some(f.name -> lit(null).cast(f.dataType))
-          }
-        }
+        toS.fields.zipWithIndex.map { case (f, i) =>
+          f.name -> (byFid.get(SnapshotLog.fidOf(f, i)) match {
+            case Some(ff) =>
+              SnapshotLog.alignColumn(ff.dataType, f.dataType, in(ff.name))
+            case None => lit(null).cast(f.dataType)
+          })
+        }.toMap
       }
+    // `fromS`'s columns onto the to-version's names
+    def onto(fromS: StructType): Map[String, Column] =
+      aligned(fromS, if (toCur.isEmpty) fromS else toCur, col)
 
-    // one group: `files` under `dataSchema`, base columns via `m`
-    // (loud when a pinned column is unreachable — same failure the V1
-    // source's final select raised), `extras` appended. `mayId` marks a
-    // verbatim mapping, letting the steady state (current-epoch insert
-    // feed) pass the vectorized batches through UNPROJECTED.
-    def group(files: Seq[String], dataSchema: StructType,
-        m: Map[String, Column], extras: Seq[Column],
-        mayId: Boolean, abs: Boolean = false): StreamFileGroup = {
-      // the alignment maps land each base column on the TO-version's
-      // type, but the stream's output schema stays PINNED for its whole
-      // life — reconcile per field: a produced type the pinned type
-      // holds losslessly casts up (a stream pinned post-widen replaying
-      // narrow history), while a widen_type committed AFTER the stream
-      // pinned fails loudly like the rename case — the engine reads the
-      // output ordinal by the pinned type, so emitting a LONG into a
-      // pinned INT column would silently truncate past Int.MaxValue
+    // the output projection: base columns via `m`, `extras` appended.
+    // The alignment maps land each base column on the TO-version's
+    // type, but a stream's output schema stays PINNED for its whole
+    // life — reconcile per field: a produced type the pinned type holds
+    // losslessly casts up (a stream pinned post-widen replaying narrow
+    // history), while a widen_type committed AFTER the stream pinned
+    // fails loudly like the rename case — the engine reads the output
+    // ordinal by the pinned type, so emitting a LONG into a pinned INT
+    // column would silently truncate past Int.MaxValue
+    def outsOf(m: Map[String, Column], extras: Seq[Column],
+        dataSchema: StructType): Seq[Column] = {
       val srcS = if (toCur.nonEmpty) toCur else dataSchema
-      val outs = pinnedBase.fields.toSeq.map { f =>
+      outBase.fields.toSeq.map { f =>
         val c = m.getOrElse(f.name,
           throw new IllegalStateException(
             s"stream column '${f.name}' is not reachable from $tableDir's " +
@@ -1739,56 +1594,10 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
           case None => c.as(f.name) // pre-schema history: mapping is exact
         }
       } ++ extras
-      StreamFileGroup(if (abs) files else files.map(p), dataSchema,
-        if (mayId && extras.isEmpty && sameShape(dataSchema, pinnedBase)) None
-        else Some(outs))
     }
-
-    // Materialize a JOIN-NEEDING contribution (a pre-image over a
-    // debt-carrying parent; a pre-pair-tag four-type merge re-typing)
-    // ONCE as plain parquet under the stream's checkpoint scratch and
-    // plan THAT like any other group. Deterministic path per (version,
-    // kind); a replayed plan overwrites with identical rows (debt reads
-    // of immutable versions are deterministic), so restart recovery
-    // stays exact. `withMeta` marks a frame already carrying
-    // `_change_type`/`_commit_version` per row (the extras then read
-    // the file's own columns instead of constants).
-    def spillGroups(sd: String, v: Long, kind: String, df: DataFrame,
-        extras: Seq[Column]): Seq[StreamFileGroup] = {
-      val dir = new Path(s"$sd/v$v-$kind")
-      // the spill lives under the STREAM's checkpointLocation, which
-      // may sit on a different filesystem than the table (table on
-      // s3a://, checkpoint on file:/ or hdfs://) — resolve the handle
-      // from the spill path itself, as the micro-batch commit sweep
-      // already does; the table-rooted `fs` would throw "Wrong FS"
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // the engine may plan the same batch more than once (the sink's
-      // execution re-plans the scan) — the spill must be WRITE-ONCE
-      // with stable file names, or the second write's fresh part names
-      // invalidate the first plan's partitions mid-read: write to a
-      // tmp dir and rename into place; a loser (or a later re-plan)
-      // reuses the winner's files, which are row-identical by
-      // determinism of debt reads over immutable versions
-      val done = new Path(dir, "_SUCCESS")
-      if (!fs.exists(done)) {
-        if (fs.exists(dir)) fs.delete(dir, true) // crashed partial spill
-        val tmp = new Path(s"$sd/.tmp-v$v-$kind-${UUID.randomUUID()}")
-        df.write.parquet(tmp.toString)
-        if (!fs.rename(tmp, dir)) fs.delete(tmp, true)
-      }
-      val files = fs.listStatus(dir).toSeq
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString)
-      if (files.isEmpty) Nil
-      else {
-        // meta columns carry no field ids — strip them before fid
-        // alignment (their positional-fallback ids could collide with
-        // the base columns' explicit ids and alias the wrong column)
-        val baseS = StructType(df.schema.fields.filterNot(f => metaCols(f.name)))
-        val m = aligned(baseS, if (toCur.isEmpty) baseS else toCur, col).toMap
-        Seq(group(files, df.schema, m, extras, mayId = false, abs = true))
-      }
-    }
+    def group(files: Seq[String], dataSchema: StructType,
+        m: Map[String, Column], extras: Seq[Column]): FeedGroup =
+      FeedGroup(files.map(p), dataSchema, Some(outsOf(m, extras, dataSchema)))
 
     // driver-side physical schema of files the manifest carries no
     // epoch schema for (pre-schema history, recorded image files): ONE
@@ -1808,161 +1617,156 @@ final class SnapshotLog(spark: SparkSession, val tableDir: String,
       fromMeta.getOrElse(spark.read.parquet(p(file)).schema)
     }
 
+    // files appended by `s` (current-epoch at their own commit), read
+    // under `s`'s schema; the steady state (that schema IS the output,
+    // no change columns) passes the vectorized batches through
+    // UNPROJECTED — `outs = None`
+    def appended(s: Snapshot, files: Seq[String],
+        extras: Seq[Column]): FeedGroup = {
+      val cur = s.epochSchemas.last
+      val dataSchema = if (cur.nonEmpty) cur else footerSchema(files.head)
+      if (extras.isEmpty && (toCur.isEmpty || sameShape(toCur, dataSchema)) &&
+          sameShape(dataSchema, outBase))
+        FeedGroup(files.map(p), dataSchema, None)
+      else group(files, dataSchema, onto(dataSchema), extras)
+    }
+
     // `files` of `s` read under the epochs that wrote them, fid-aligned
-    // epoch → s-current → toCur, with `extras` — the group form of
-    // epochAlignedRead(+alignSchemas)
-    def epochGroups(s: Snapshot, files: Seq[String], toCur: StructType,
-        extras: Seq[Column]): Seq[StreamFileGroup] =
+    // epoch → s-current → to-current
+    def epochGroups(s: Snapshot, files: Seq[String],
+        extras: Seq[Column]): Seq[FeedGroup] =
       files.groupBy(s.schemaIdxOf).toSeq.sortBy(_._1).map { case (ep, g) =>
         val epochS = s.epochSchemas(ep)
         val dataSchema = if (epochS.nonEmpty) epochS else footerSchema(g.head)
-        val cur = s.epochSchemas.last
-        val m1 = aligned(dataSchema,
-          if (cur.isEmpty) dataSchema else cur, col).toMap
-        val m2 = aligned(if (cur.isEmpty) dataSchema else cur,
-          if (toCur.isEmpty) dataSchema else toCur, m1.apply).toMap
-        group(g, dataSchema, m2, extras,
-          mayId = extras.isEmpty &&
-            (cur.isEmpty || sameShape(cur, dataSchema)) &&
-            (toCur.isEmpty || sameShape(toCur, dataSchema)))
+        val cur = if (s.epochSchemas.last.isEmpty) dataSchema
+          else s.epochSchemas.last
+        group(g, dataSchema, aligned(cur,
+          if (toCur.isEmpty) cur else toCur, aligned(dataSchema, cur, col)),
+          extras)
       }
 
-    if (!readChangeFeed) {
-      // INSERT-ONLY feed: the appended files of every version in range,
-      // read raw under their epochs — identical to readAdded
-      val deltas = changes(from, to)
-      if (!skipChangeCommits) {
-        val changing = deltas.filter(d => SnapshotLog.FeedChangeOps(d.op))
-        if (changing.nonEmpty) throw new IllegalStateException(
-          s"change feed of $tableDir is insert-only but version " +
-            s"${changing.head.version} is a '${changing.head.op}'; resync " +
-            "the consumer from a full read, set skipChangeCommits=true to " +
-            "stream past row-removing commits, or set readChangeFeed=true " +
-            "on a feed-enabled table to receive them as row-level deletes")
+    val walk = versionWalk(from, to)
+    if (!rowLevel) {
+      // appends committed under one schema read as ONE group (keyed by
+      // that schema, held with its first version): the steady state
+      // plans all its files as one scan
+      val bySchema = scala.collection.mutable
+        .LinkedHashMap.empty[String, (Snapshot, Vector[String])]
+      walk.foreach { case (s, parent) =>
+        if (!skipChangeCommits && SnapshotLog.FeedChangeOps(s.op))
+          throw new IllegalStateException(
+            s"change feed of $tableDir is insert-only but version " +
+              s"${s.version} is a '${s.op}'; resync the consumer from a " +
+              "full read, set skipChangeCommits=true to stream past " +
+              "row-removing commits, or set readChangeFeed=true on a " +
+              "feed-enabled table to receive them as row-level deletes")
+        if (s.op == "append") {
+          val (first, fs) = bySchema.getOrElse(s.schemaJson, (s, Vector.empty))
+          bySchema(s.schemaJson) = (first, fs ++ addedOver(s, parent))
+        }
       }
-      return epochGroups(toSnap,
-        deltas.filter(_.op == "append").flatMap(_.addedFiles), toCur, Nil)
+      return bySchema.values.toSeq.collect {
+        case (s, fs) if fs.nonEmpty => appended(s, fs, Nil) }
     }
 
-    // ROW-LEVEL CDC feed: per-version contributions, the group form of
-    // readChangeRows (same op routing, same completeness contract)
-    var prev: Option[Snapshot] = None
-    ((from + 1) to to).flatMap { v =>
-      val s = snapshot(v)
-      val parentSnap: Option[Snapshot] =
-        if (s.parent == 0) None
-        else Some(prev.filter(_.version == s.parent)
-          .getOrElse(snapshot(s.parent)))
-      prev = Some(s)
-      val cdcExtras = (ct: Column) =>
+    walk.flatMap { case (s, parent) =>
+      val v = s.version
+      val cdc = (ct: Column) =>
         Seq(ct.as("_change_type"), lit(v).as("_commit_version"))
-      // base-column mapping for THIS version's rows: fid-align the
-      // version's MANIFEST schema onto the to-version's (name lookups
-      // then hit the files' columns by name) — never the footer schema,
-      // whose positional fid fallback would misalign against meta
-      // columns or a join-reordered image layout
-      val versionSchema = s.epochSchemas.last
-      def versionAligned(dataSchema: StructType): Map[String, Column] = {
-        val fromS = if (versionSchema.nonEmpty) versionSchema else dataSchema
-        aligned(fromS, if (toCur.isEmpty) fromS else toCur, col).toMap
-      }
       s.op match {
         case "append" =>
-          val added = s.files.filterNot(
-            parentSnap.fold(Set.empty[String])(_.files.toSet))
+          val added = addedOver(s, parent)
           if (added.isEmpty) Nil
-          else {
-            // version-schema read (the V1 reader(s) shape) — appended
-            // files are current-epoch at their own commit
-            val dataSchema =
-              if (s.schemaJson.nonEmpty) s.epochSchemas.last
-              else footerSchema(added.head)
-            Seq(group(added, dataSchema, versionAligned(dataSchema),
-              cdcExtras(lit("insert")), mayId = false))
-          }
+          else Seq(appended(s, added, cdc(lit("insert"))))
         case "truncate" | "overwrite" =>
-          val dels = parentSnap.filter(_.files.nonEmpty).map { par =>
-            // the deleted pre-images are the parent's LOGICAL table; a
-            // parent carrying merge-on-read debt needs anti-joins to
-            // reconstruct — not expressible as a narrow file scan, so
-            // SPILL the composed batch read (the same `scan` the batch
-            // readChangeRows pre-image uses) under the stream's
-            // checkpoint and plan the spilled files
-            if (par.tombstones.nonEmpty || par.files.exists(par.dvs.contains))
-              spillDir match {
-                case Some(sd) =>
-                  spillGroups(sd, v, "pre", scan(par, par.files),
-                    cdcExtras(lit("delete")))
-                case None => throw new IllegalStateException(
-                  s"$tableDir v$v ${s.op}s a snapshot with pending " +
-                    "tombstones/deletion vectors — the streamed pre-image " +
-                    "needs a join; compact before the overwrite, or " +
-                    "replay this span with the batch readChangeRows")
-              }
-            else epochGroups(par, par.files, toCur, cdcExtras(lit("delete")))
-          }.getOrElse(Nil)
-          dels ++ epochGroups(s, s.files, toCur, cdcExtras(lit("insert")))
+          // both sides derive BY REFERENCE, no recorded images needed
+          // (so these ops feed even on tables without the CDC opt-in):
+          // the deleted pre-images are the parent's LOGICAL table — over
+          // merge-on-read debt the composed scan, or rows a pending
+          // delete already removed would image twice — and an
+          // overwrite's inserts are exactly its committed files
+          val dels = parent.filter(_.files.nonEmpty).toSeq.flatMap { par =>
+            if (par.tombstones.nonEmpty || par.files.exists(par.dvs.contains)) {
+              val df = scan(par, par.files)
+              val parCur = if (par.epochSchemas.last.isEmpty) df.schema
+                else par.epochSchemas.last
+              Seq(FeedFrame(v, "pre", df.select(
+                outsOf(onto(parCur), cdc(lit("delete")), parCur): _*)))
+            } else epochGroups(par, par.files, cdc(lit("delete")))
+          }
+          dels ++ epochGroups(s, s.files, cdc(lit("insert")))
         case "delete" | "merge" | "delete_keys" | "update" | "replace_where" =>
           val cs = s.changes.getOrElse(throw new IllegalStateException(
             s"$tableDir v$v is a '${s.op}' with no recorded change images " +
               "(committed before the table was changeFeed-enabled) — " +
               "row-level reads cannot span it; resync from a full read"))
-          // PRE-PAIR-TAG merge history: four-type re-typing needs a key
-          // join (no recorded pair bit) — spill the batch key-join read
-          // of JUST this version (its whole contribution, by-reference
-          // deletes included, so nothing double-ships)
-          val preTagKeyJoin = fourType && s.op == "merge" &&
-            cs.files.nonEmpty && cs.keyColumn.nonEmpty &&
-            !footerSchema(cs.files.head).fieldNames
-              .contains(SnapshotLog.PairCol)
-          if (preTagKeyJoin) spillDir match {
-            case Some(sd) =>
-              spillGroups(sd, v, "fourtype",
-                readChangeRows(v - 1, v, fourType = true),
-                Seq(col("_change_type"), col("_commit_version")))
-            case None => throw new IllegalStateException(
-              s"$tableDir v$v carries merge images recorded before " +
-                "pair tagging — four-type re-typing needs a key " +
-                "join; replay this span with the batch " +
-                "readChangeRows(fourType = true), or stream with " +
-                "fourTypeCdc = false")
-          } else {
           val images =
             if (cs.files.isEmpty) Nil
             else {
               val dataSchema = footerSchema(cs.files.head)
+              // base columns by the version's MANIFEST schema (name
+              // lookups then hit the files' columns by name) — never the
+              // footer's, whose positional fid fallback would misalign
+              // against the change columns
+              val vs = s.epochSchemas.last
+              val m = onto(if (vs.nonEmpty) vs else dataSchema)
               val hasPair = dataSchema.fieldNames.contains(SnapshotLog.PairCol)
               val rawType = col("_change_type")
-              val ct =
-                if (fourType && s.op == "update")
-                  // every image of an update commit is half of a pair
-                  // by construction — re-type unconditionally
-                  org.apache.spark.sql.functions.when(
-                    rawType === "delete", "update_preimage")
-                    .otherwise("update_postimage")
-                else if (fourType && s.op == "merge" && hasPair)
-                  org.apache.spark.sql.functions.when(
-                    col(SnapshotLog.PairCol) && rawType === "delete",
-                    "update_preimage")
-                    .when(col(SnapshotLog.PairCol) && rawType === "insert",
-                      "update_postimage")
-                    .otherwise(rawType)
-                else rawType
-              Seq(group(cs.files, dataSchema, versionAligned(dataSchema),
-                cdcExtras(ct), mayId = false))
+              if (fourType && s.op == "merge" && !hasPair &&
+                  cs.keyColumn.nonEmpty) {
+                // images recorded before pair tags: pair on the recorded
+                // merge key (comma-joined for composite-key clause
+                // merges) — a delete image whose key also has an insert
+                // post-image is half of an update pair; a delete with NO
+                // post-image is a genuine delete (a matched-DELETE
+                // clause), an insert with no pre-image a genuine insert.
+                // Two semi/anti joins per merge version, O(batch)
+                val img = spark.read
+                  .schema(org.apache.spark.sql.GraftBridge.asNullable(dataSchema))
+                  .parquet(cs.files.map(p): _*)
+                val ks = cs.keyColumn.split(",").toSeq
+                val pre = img.where(rawType === "delete")
+                val ins = img.where(rawType === "insert")
+                val preKeys = pre.select(ks.map(col): _*).distinct()
+                val insKeys = ins.select(ks.map(col): _*).distinct()
+                val typed = pre.join(insKeys, ks, "left_semi")
+                  .withColumn("_change_type", lit("update_preimage"))
+                  .unionByName(pre.join(insKeys, ks, "left_anti"))
+                  .unionByName(ins.join(preKeys, ks, "left_semi")
+                    .withColumn("_change_type", lit("update_postimage")))
+                  .unionByName(ins.join(preKeys, ks, "left_anti"))
+                Seq(FeedFrame(v, "fourtype",
+                  typed.select(outsOf(m, cdc(rawType), dataSchema): _*)))
+              } else {
+                val ct =
+                  if (fourType && s.op == "update")
+                    // every image of an update commit is half of a pair
+                    // by construction — re-type unconditionally
+                    org.apache.spark.sql.functions.when(
+                      rawType === "delete", "update_preimage")
+                      .otherwise("update_postimage")
+                  else if (fourType && s.op == "merge" && hasPair)
+                    // tagged at write time: exact and join-free
+                    org.apache.spark.sql.functions.when(
+                      col(SnapshotLog.PairCol) && rawType === "delete",
+                      "update_preimage")
+                      .when(col(SnapshotLog.PairCol) && rawType === "insert",
+                        "update_postimage")
+                      .otherwise(rawType)
+                  else rawType
+                Seq(group(cs.files, dataSchema, m, cdc(ct)))
+              }
             }
-          val wholeFiles =
-            if (cs.deletedDataFiles.isEmpty) Nil
-            else epochGroups(parentSnap.getOrElse(s), cs.deletedDataFiles,
-              toCur, cdcExtras(lit("delete")))
-          images ++ wholeFiles
-          }
+          // the PARENT snapshot still lists (and epoch-tags) the
+          // dropped files — read them under the epochs that wrote them
+          images ++ epochGroups(parent.getOrElse(s), cs.deletedDataFiles,
+            cdc(lit("delete")))
         case "restore" => throw new IllegalStateException(
           s"$tableDir v$v is a restore — a rollback is not expressible " +
             "as row changes; resync the consumer from a full read")
         case _ => Nil // physical rewrite: the table changed, rows didn't
       }
-    }
+    }.toSeq
   }
 
   /** Append `df` as a new version. Safe under concurrent appenders:
@@ -5533,6 +5337,17 @@ object SnapshotLog {
   private[graft] val FeedChangeOps: Set[String] =
     Set("delete", "merge", "delete_keys", "update", "restore", "truncate",
       "overwrite", "replace_where")
+
+  /** The change feed's columns over the table columns `base`: plus
+    * `_change_type`/`_commit_version` in row-level mode. */
+  private[graft] def feedSchema(base: org.apache.spark.sql.types.StructType,
+      rowLevel: Boolean): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    if (!rowLevel) base
+    else StructType(base.fields ++ Seq(
+      StructField("_change_type", StringType, nullable = false),
+      StructField("_commit_version", LongType, nullable = false)))
+  }
 
   /** StructField-metadata key carrying a column's STABLE field id —
     * what lets a rename be metadata-only while old files keep

@@ -572,6 +572,130 @@ class LogStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("differential: every stream mode equals its batch feed over every routed op") {
+    import graft.table.MergeWhen
+    import org.apache.spark.sql.{Dataset, Row}
+    import org.apache.spark.sql.functions.{col, lit}
+    val SP = SnapshotLog.MergeSrcPrefix
+    val table = freshDir("graft-diff-") + "/t"
+    val log = SnapshotLog.withChangeFeed(spark, table, statsColumns = Seq("id"))
+    def rows(lo: Int, n: Int, tag: String) =
+      (lo until lo + n).map(i => (i, s"$tag-$i")).toDF("id", "payload")
+    // v1-v4: four clustered single-file appends, ids [100r, 100r + 99]
+    (0 until 4).foreach(r => log.append(rows(r * 100, 100, s"r$r").coalesce(1)))
+    log.renameColumn("payload", "note")                              // v5
+    log.append(rows(400, 50, "r4").withColumnRenamed("payload", "note")
+      .coalesce(1))                                                   // v6
+    val sparse = log.deleteWhere(("id", 10, 12)).get                 // v7
+    assert(sparse.dvs.nonEmpty, "3 of 100 rows must commit a vector")
+    val dense = log.deleteWhere(("id", 100, 170)).get                // v8
+    assert(dense.changes.exists(_.files.nonEmpty), "71 of 100 rows rewrite")
+    val whole = log.deleteWhere(("id", 200, 299)).get                // v9
+    assert(whole.changes.exists(_.deletedDataFiles.nonEmpty),
+      "a fully matched file drops by reference")
+    log.updateWhere(Seq(("id", 300, 304)), Seq("note" -> lit("upd"))) // v10
+    log.mergeClauses(Seq((305, "m"), (9000, "n")).toDF("id", "note"),
+      keys = Seq(("id", "id")),
+      matched = Seq(MergeWhen(None, "update", Seq("note" -> col(SP + "note")))),
+      notMatched = Seq(MergeWhen(None, "insert",
+        Seq("id" -> col(SP + "id"), "note" -> col(SP + "note")))))   // v11
+    log.deleteKeys("id", Seq(306, 307).toDF("id"))                   // v12
+    log.compact()                   // v13: materializes the tombstones
+    log.overwriteWhere(Seq(("id", 400, 449)),
+      rows(400, 10, "ow").withColumnRenamed("payload", "note"))      // v14
+    log.overwriteAll(rows(500, 100, "all")
+      .withColumnRenamed("payload", "note").coalesce(1))             // v15
+    log.deleteWhere(("id", 510, 510))                                // v16
+    assert(log.snapshot().dvs.nonEmpty, "the truncate's parent carries a vector")
+    log.truncate()                                                   // v17
+    log.append(rows(700, 10, "r7").withColumnRenamed("payload", "note")) // v18
+    assert(log.history().map(_.op) == Seq("append", "append", "append",
+      "append", "rename", "append", "delete", "delete", "delete", "update",
+      "merge", "delete_keys", "compact", "replace_where", "overwrite",
+      "delete", "truncate", "append"))
+
+    def sorted(rs: Seq[Row]): Seq[String] = rs.map(_.toString).sorted
+    def streamed(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) = {
+      val seen = new ConcurrentLinkedQueue[Row]()
+      val q = df.writeStream
+        .option("checkpointLocation", freshDir("graft-diff-ckpt-"))
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: Dataset[Row], _: Long) =>
+          b.select(cols.map(col): _*).collect().foreach(seen.add) }
+        .start()
+      assert(q.awaitTermination(180000), "AvailableNow must terminate")
+      val b = Seq.newBuilder[Row]; seen.forEach(b += _); sorted(b.result())
+    }
+    val cdcCols = Seq("id", "note", "_change_type", "_commit_version")
+    Seq(false, true).foreach { fourType =>
+      val batch = sorted(log.readChangeRows(0, fourType = fourType)
+        .select(cdcCols.map(col): _*).collect().toSeq)
+      val types = batch.map(_.split(",")(2)).toSet
+      assert(types.contains("delete") && types.contains("insert") &&
+        types.contains("update_preimage") == fourType,
+        s"fourType=$fourType feed must exercise its types: $types")
+      assert(streamed(LogChangeFeed.readChangesStream(spark, table,
+        readChangeFeed = true, fourTypeCdc = fourType), cdcCols) == batch,
+        s"row-level stream (fourType=$fourType) == readChangeRows(0)")
+    }
+    val inserts = sorted(log.readChanges(0).select("id", "note").collect().toSeq)
+    assert(inserts.size == 460, "the six appends' rows")
+    assert(streamed(LogChangeFeed.readChangesStream(spark, table,
+      skipChangeCommits = true), Seq("id", "note")) == inserts,
+      "insert stream with skipChangeCommits == readChanges(0)")
+  }
+
+  test("a pre-rename append feeds under the names it was written with after compaction drops its file") {
+    val table = freshDir("graft-feed-ren-") + "/t"
+    val log = SnapshotLog(spark, table)
+    log.append(mkRows(0, 5).toDF("id", "payload"))  // v1, written as `payload`
+    log.renameColumn("payload", "note")               // v2
+    log.compact()                                     // v3: v1's file leaves the live set
+    assert(!log.snapshot().files.exists(log.snapshot(1).files.contains))
+    assert(log.readChanges(0).select("id", "note").as[(Int, String)]
+      .collect().toSeq.sorted == mkRows(0, 5).sorted,
+      "the batch insert feed must read v1's file under v1's names")
+    val (q, seen) = startFeed(table, freshDir("graft-feed-ren-ckpt-"))
+    try {
+      q.processAllAvailable()
+      assert(drained(seen) == mkRows(0, 5).sorted,
+        "the insert stream must read v1's file under v1's names")
+    } finally q.stop()
+  }
+
+  test("by-reference delete images of an old-epoch file align across a later rename") {
+    import org.apache.spark.sql.functions.col
+    val table = freshDir("graft-feed-ren2-") + "/t"
+    val log = SnapshotLog.withChangeFeed(spark, table, statsColumns = Seq("id"))
+    log.append(mkRows(0, 10).toDF("id", "payload").coalesce(1))  // v1
+    log.append(mkRows(1, 10).toDF("id", "payload").coalesce(1))  // v2
+    log.renameColumn("payload", "note")                            // v3
+    // v4 drops v1's whole file, which v3 tagged with the `payload` epoch
+    assert(log.deleteWhere(("id", 0, 9)).get
+      .changes.exists(_.deletedDataFiles.nonEmpty))
+    log.renameColumn("note", "memo")                               // v5
+    val cols = Seq("id", "memo", "_change_type", "_commit_version")
+    val batch = log.readChangeRows(0).select(cols.map(col): _*)
+      .as[(Int, String, String, Long)].collect().toSeq.sorted
+    assert(batch.filter(_._3 == "delete").map(t => (t._1, t._2)) == mkRows(0, 10).sorted,
+      s"the dropped file's images must carry its values under the latest name: $batch")
+    val seen = new ConcurrentLinkedQueue[(Int, String, String, Long)]()
+    val q = LogChangeFeed.readChangesStream(spark, table, readChangeFeed = true)
+      .writeStream
+      .option("checkpointLocation", freshDir("graft-feed-ren2-ckpt-"))
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        b.select(cols.map(col): _*).collect()
+          .foreach(r => seen.add((r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))))
+      }
+      .start()
+    try {
+      q.processAllAvailable()
+      val out = { val b = Seq.newBuilder[(Int, String, String, Long)]
+        seen.forEach(t => b += t); b.result().sorted }
+      assert(out == batch, "stream == batch across the two renames")
+    } finally q.stop()
+  }
+
   test("readChangeFeed streams row-level deletes; checkpoint restart resumes mid-history") {
     val table = freshDir("graft-feed-") + "/t"
     val ckpt = freshDir("graft-feed-ckpt-")
